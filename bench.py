@@ -288,6 +288,12 @@ HEADLINE_DROP_ORDER = [
     "dedup_clusters", "dedup_minhash_verified",
 ]
 
+# the three frozen lists must stay consistent: a line entry that is not
+# benched would never be measured, and a line entry missing from the
+# overflow order could leave the line over budget
+assert set(HEADLINE_LINE_QUERIES) <= set(BENCH_QUERIES) | {"flagship"}
+assert sorted(HEADLINE_DROP_ORDER) == sorted(HEADLINE_LINE_QUERIES)
+
 
 def _jvm_gc_ms(spark) -> int | None:
     """Cumulative JVM garbage-collection time (ms) across all

@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import algebra as A
+from .checkpoints import CheckpointScope
 from .exprs import compile_bool, compile_value
-from .extras.util import release_checkpoint
 from .terms import (
     TERM_TYPE,
     Term,
@@ -243,109 +243,49 @@ class Compiler:
             else None
         )
         inner = self.compile(node.path)
+        ecols = [
+            F.col(node.start_var).alias("src"),
+            F.col(node.end_var).alias("dst"),
+        ]
+        if graph_var:
+            ecols.append(F.col(graph_var).alias("__g"))
+        key = ["src", "dst"] + (["__g"] if graph_var else [])
+        step = F.col("f.dst") == F.col("e.src")
+        if graph_var:
+            step = step & (F.col("f.__g") == F.col("e.__g"))
+        scols = [
+            F.col("f.src").alias("src"),
+            F.col("e.dst").alias("dst"),
+        ] + ([F.col("f.__g").alias("__g")] if graph_var else [])
         # Constraint propagation must be off while the loop checkpoints:
         # localCheckpoint produces LogicalRDDs whose captured constraints
         # reference pre-checkpoint attribute ids, and planning a Union of
         # them fails in rewriteConstraints ("key not found: src#N").
         # Checkpoints taken with the conf off carry no constraints, so the
         # frames stay safe downstream after the conf is restored.
-        conf_key = "spark.sql.constraintPropagation.enabled"
-        prev = self.spark.conf.get(conf_key, "true")
-        self.spark.conf.set(conf_key, "false")
-        try:
-            ecols = [
-                F.col(node.start_var).alias("src"),
-                F.col(node.end_var).alias("dst"),
-            ]
-            if graph_var:
-                ecols.append(F.col(graph_var).alias("__g"))
-            key = ["src", "dst"] + (["__g"] if graph_var else [])
-            edges = inner.select(*ecols).distinct().localCheckpoint()
-            reach = edges
-            frontier = edges
-            # new / old_reach / old_frontier are non-None only inside the
-            # windows where they hold a materialized checkpoint the named
-            # reach/frontier/edges vars do NOT — so the except handler can
-            # free them without double-releasing (ADVICE r13: a failure in
-            # new.isEmpty(), or between the superseding reach checkpoint
-            # and the old pair's release, used to leak those blocks)
-            new = old_reach = old_frontier = None
-            try:
-                while True:
+        with CheckpointScope(
+            self.spark, conf={"spark.sql.constraintPropagation.enabled": "false"}
+        ) as cp:
+            edges = cp.checkpoint(inner.select(*ecols).distinct())
+            reach = frontier = edges
+            while True:
                 # left_anti instead of subtract: EXCEPT over checkpointed
                 # self-join branches also trips attribute dedup; the
                 # anti-join on (src, dst) is the same set difference
                 # (endpoints are never NULL)
-                    step = F.col("f.dst") == F.col("e.src")
-                    if graph_var:
-                        step = step & (F.col("f.__g") == F.col("e.__g"))
-                    scols = [
-                        F.col("f.src").alias("src"),
-                        F.col("e.dst").alias("dst"),
-                    ] + ([F.col("f.__g").alias("__g")] if graph_var else [])
-                    new = (
-                        frontier.alias("f")
-                        .join(edges.alias("e"), step)
-                        .select(*scols)
-                        .distinct()
-                        .join(reach, on=key, how="left_anti")
-                        .localCheckpoint()
-                    )
-                    if new.isEmpty():
-                        # the last frontier's blocks are dead too (new is
-                        # empty and reach is already materialized)
-                        if frontier is not edges:
-                            release_checkpoint(frontier)
-                        release_checkpoint(new)
-                        new = None
-                        break
-                    old_reach, old_frontier = reach, frontier
-                    reach = reach.unionByName(new).localCheckpoint()
-                    # the union above materialized eagerly, so the previous
-                    # round's reach/frontier blocks are superseded NOW — free
-                    # them instead of pinning one copy per round (VERDICT r11
-                    # wrong #3). edges doubles as round-0 reach/frontier and
-                    # is still read by every later round: never released here.
-                    if old_reach is not edges:
-                        release_checkpoint(old_reach)
-                    if old_frontier is not edges and old_frontier is not old_reach:
-                        release_checkpoint(old_frontier)
-                    old_reach = old_frontier = None
-                    frontier = new
-                    new = None
-            except BaseException:
-                # mid-round failure or job cancel: free the fixpoint's
-                # pinned blocks so interrupted queries don't accumulate
-                # orphans in a long-lived session (VERDICT r12 next #8)
-                release_checkpoint(edges)
-                if reach is not edges:
-                    release_checkpoint(reach)
-                if frontier is not edges and frontier is not reach:
-                    release_checkpoint(frontier)
-                if new is not None and new is not frontier:
-                    release_checkpoint(new)
-                if (
-                    old_reach is not None
-                    and old_reach is not edges
-                    and old_reach is not reach
-                    and old_reach is not frontier
-                ):
-                    release_checkpoint(old_reach)
-                if (
-                    old_frontier is not None
-                    and old_frontier is not edges
-                    and old_frontier is not reach
-                    and old_frontier is not frontier
-                    and old_frontier is not old_reach
-                ):
-                    release_checkpoint(old_frontier)
-                raise
-        finally:
-            self.spark.conf.set(conf_key, prev)
-        # the closure superseded the edge list unless the loop converged
-        # on round 1 (reach IS edges then) — free the dead blocks
-        if reach is not edges:
-            release_checkpoint(edges)
+                new = cp.checkpoint(
+                    frontier.alias("f")
+                    .join(edges.alias("e"), step)
+                    .select(*scols)
+                    .distinct()
+                    .join(reach, on=key, how="left_anti")
+                )
+                if new.isEmpty():
+                    break
+                reach = cp.checkpoint(reach.unionByName(new))
+                frontier = new
+                cp.retain(edges, reach, frontier)
+            cp.retain(reach)
         if node.min_length == 0:
             base = self._graph_scoped_quads(node.graph_mode, node.graph)
             gcols = [F.col("graph").alias("__g")] if graph_var else []

@@ -11,13 +11,13 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import algebra as A
+from .checkpoints import CheckpointScope
 from .compiler import compile_query
 from .optimize import reorder_joins
-from .extras.util import release_checkpoint
 from .sparql.parser import parse_query
 from .terms import (
     KIND_BNODE,
@@ -34,7 +34,6 @@ def execute_sparql(
     quads: DataFrame,
     query: str,
     bindings: dict | None = None,
-    single_valued: set | frozenset | None = None,
     star_tables=None,
     construct_reduced: bool = False,
     services: dict | None = None,
@@ -69,12 +68,6 @@ def execute_sparql(
     carries an explicit FROM/FROM NAMED dataset (property tables
     describe the full union-default graph, not an arbitrary subset).
 
-    ``single_valued`` (a set of predicate IRIs with at most one (s, p)
-    row) is retained for API compatibility; since round 3 it no longer
-    triggers fusion by itself — the query-time groupBy it licensed
-    planned as SortAggregate over the fact table (VERDICT r2), so the
-    star plan now always comes from a property table (passing it warns).
-
     When ``star_tables`` is omitted, a catalog attached to ``quads`` by
     ``sources.rio.read_triples`` (the ``_star/`` sidecar co-written by
     ``write_triples(..., property_table=True)``) is used automatically.
@@ -82,17 +75,6 @@ def execute_sparql(
     q = parse_query(query)
     frm, named = q.dataset
     strict = bool(frm or named)
-    if single_valued is not None and star_tables is None:
-        import warnings
-
-        warnings.warn(
-            "single_valued= no longer triggers star fusion (its query-time "
-            "groupBy planned as SortAggregate — see VERDICT r2); persist a "
-            "property table instead: write_triples(..., property_table=True) "
-            "or pass star_tables=",
-            DeprecationWarning,
-            stacklevel=2,
-        )
     if star_tables is None:
         star_tables = getattr(quads, "_scio_star_catalog", None)
     catalog = None
@@ -206,9 +188,10 @@ def _describe(df: DataFrame, targets: tuple, quads: DataFrame) -> DataFrame:
     of every *blank node* reached in object position (bnodes are
     meaningless without their context). The resource set is typically
     tiny; AQE broadcasts it from runtime stats, so the quad scan is never
-    shuffled. The closure loop runs driver-side over bnode frontiers —
-    bounded (depth 16) because bnode chains in real data are shallow;
-    each step is one small broadcast-joined scan."""
+    shuffled. The closure loop runs driver-side over bnode frontiers
+    until no new bnode is reached; it terminates because ``seen`` only
+    grows over the finite set of bnodes. Each step is one small
+    broadcast-joined scan."""
     spark = quads.sparkSession
     parts = []
     for tgt in targets:
@@ -234,7 +217,7 @@ def _describe(df: DataFrame, targets: tuple, quads: DataFrame) -> DataFrame:
         # ``small=True`` frontiers are broadcast: constant-target sets
         # (a handful of IRIs — without the hint the constant-folded
         # join condition leaves a CartesianProduct) and bnode-closure
-        # frontiers (bounded by the per-step dedup + depth cap). A
+        # frontiers (each holds only bnodes not yet seen). A
         # VARIABLE-target initial set is unbounded (DESCRIBE ?x over a
         # warehouse can name millions of resources), so it goes through
         # a plain equi-join and AQE picks the strategy from its size.
@@ -251,27 +234,22 @@ def _describe(df: DataFrame, targets: tuple, quads: DataFrame) -> DataFrame:
 
     out = outgoing(res, small=not has_var_targets)
     seen = res
-    for _ in range(16):
-        frontier = (
-            out.filter(F.col("o")["kind"] == KIND_BNODE)
-            .select(F.col("o").alias("r"))
-            .dropDuplicates()
-            .join(seen, on="r", how="left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if not frontier.take(1):
-            release_checkpoint(frontier)
-            break
-        old_seen = seen
-        seen = seen.unionByName(frontier).localCheckpoint(eager=True)
-        # the eager union just consumed old_seen — free its superseded
-        # blocks (round 0's seen is the caller's res, not a checkpoint;
-        # release_checkpoint is a no-op there). The frontiers stay
-        # pinned: `out` references every round's frontier LAZILY until
-        # the caller executes the returned frame.
-        if old_seen is not res:
-            release_checkpoint(old_seen)
-        out = out.unionByName(outgoing(frontier, small=True)).dropDuplicates()
+    with CheckpointScope(spark) as cp:
+        while True:
+            frontier = cp.checkpoint(
+                out.filter(F.col("o")["kind"] == KIND_BNODE)
+                .select(F.col("o").alias("r"))
+                .dropDuplicates()
+                .join(seen, on="r", how="left_anti")
+            )
+            if not frontier.take(1):
+                break
+            seen = cp.checkpoint(seen.unionByName(frontier))
+            out = out.unionByName(outgoing(frontier, small=True)).dropDuplicates()
+            # `out` reads every round's frontier lazily until the caller
+            # executes it; only the superseded `seen` is dead
+            cp.retain(out, seen)
+        cp.retain(out)
     return out
 
 
@@ -331,16 +309,3 @@ def _join_beneath_projection(node: A.Node, values: A.Values) -> A.Node:
         )
     return A.Join(values, node)
 
-
-def term_to_string(c: Column) -> Column:
-    """Term struct -> plain string (IRI text / bnode label / literal lexical
-    form). Handy for surfacing results to plain-SQL consumers."""
-    return c["lex"]
-
-
-def term_to_long(c: Column) -> Column:
-    return c["lex"].cast("long")
-
-
-def term_to_double(c: Column) -> Column:
-    return c["lex"].cast("double")

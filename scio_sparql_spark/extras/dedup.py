@@ -27,7 +27,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .util import TOKEN_SPLIT_RE, release_checkpoint, spread, spread_pinned
+from ..checkpoints import CheckpointScope
+from .util import TOKEN_SPLIT_RE, spread, spread_pinned
 
 TOKEN_RE = TOKEN_SPLIT_RE  # r16: explicit RE2-equal whitespace class
 
@@ -670,28 +671,23 @@ def connected_components(
     handles it; for adversarial giant-diameter graphs large-star/
     small-star remains the alternative shape. ``stats``, when passed,
     records {"rounds": n} for tests/telemetry."""
-    sym = (
-        edges.select(F.col(src_col).alias("node"), F.col(dst_col).alias("nbr"))
-        .union(
-            edges.select(F.col(dst_col).alias("node"), F.col(src_col).alias("nbr"))
-        )
+    with CheckpointScope(edges.sparkSession) as cp:
         # Materialize ONCE: sym joins into every iteration, and without
         # the checkpoint each round re-executes the upstream pair
         # generation (for the exact-Jaccard caller that's the full
         # quadratic candidate pass, re-run per iteration — measured 5x
         # the whole operator's runtime at sf0.01).
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        sym.select("node")
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = labels  # round 1: every node announces its own id
-    prev_ck = labels
-    rounds = 0
-    try:
+        sym = cp.checkpoint(
+            edges.select(F.col(src_col).alias("node"), F.col(dst_col).alias("nbr"))
+            .union(
+                edges.select(F.col(dst_col).alias("node"), F.col(src_col).alias("nbr"))
+            )
+        )
+        labels = cp.checkpoint(
+            sym.select("node").distinct().withColumn("label", F.col("node"))
+        )
+        frontier = labels  # round 1: every node announces its own id
+        rounds = 0
         for _ in range(max_iter):
             rounds += 1
             nbr_min = (
@@ -742,28 +738,15 @@ def connected_components(
                         < F.col("old")
                     ).alias("__changed"),
                 )
-            new = merged.localCheckpoint(eager=True)
-            # the eager checkpoint just consumed the previous round's
-            # label blocks (labels AND frontier both project from
-            # prev_ck) — free them; the final round's checkpoint stays
-            # live for the return (r12, VERDICT r11 wrong #3)
-            release_checkpoint(prev_ck)
-            prev_ck = new
+            new = cp.checkpoint(merged)
+            # the eager checkpoint consumed the previous round's label
+            # table (labels AND frontier both project from it)
+            cp.retain(sym, new)
             frontier = new.filter("__changed").select("node", "label")
             labels = new.select("node", "label")
             if not frontier.take(1):  # scan of checkpointed rows, no shuffle
                 break
-    except BaseException:
-        # mid-round failure or job cancel: free this fixpoint's pinned
-        # blocks so interrupted runs don't accumulate orphans in a
-        # long-lived session (VERDICT r12 next #8). prev_ck is the last
-        # round that DID materialize; a round that died inside its own
-        # eager checkpoint left at most partial cache blocks, which the
-        # ContextCleaner reclaims once the local frame is collected.
-        release_checkpoint(sym)
-        release_checkpoint(prev_ck)
-        raise
-    release_checkpoint(sym)
+        cp.retain(labels)
     if stats is not None:
         stats["rounds"] = rounds
     return labels

@@ -239,15 +239,9 @@ def perceptron_train(
     y = F.when(F.col(label_col) % 2 == 0, F.lit(1)).otherwise(F.lit(-1)).cast(
         "long"
     )
-    # Scan + quantize ONCE: without the checkpoint every epoch's .agg()
-    # re-reads the parquet and re-evaluates the transform (epochs+1
-    # scans total). spread first so the checkpointed partitions (and
-    # every epoch's map-side partial agg) use all cores, then
-    # localCheckpoint truncates the lineage to the quantized (q, y)
-    # rows — same pattern as kmeans_micro (clustering.py:68-71).
-    from .util import release_checkpoint, spread
+    from ..checkpoints import CheckpointScope
+    from .util import spread
 
-    base = spread(emb).select(q.alias("q"), y.alias("y")).localCheckpoint()
     w = [0] * dim
 
     def epoch_partials(weights):
@@ -276,7 +270,15 @@ def perceptron_train(
 
         return base.mapInPandas(gen, schema="i int, v long")
 
-    try:
+    # Scan + quantize ONCE: without the checkpoint every epoch's .agg()
+    # re-reads the parquet and re-evaluates the transform (epochs+1
+    # scans total). spread first so the checkpointed partitions (and
+    # every epoch's map-side partial agg) use all cores, then
+    # localCheckpoint truncates the lineage to the quantized (q, y)
+    # rows — same pattern as clustering.kmeans_micro. The
+    # scope frees it on exit: the returned weights no longer read it.
+    with CheckpointScope(emb.sparkSession) as cp:
+        base = cp.checkpoint(spread(emb).select(q.alias("q"), y.alias("y")))
         for _ in range(epochs):
             upd = (
                 epoch_partials(w)
@@ -286,12 +288,6 @@ def perceptron_train(
             )
             um = {r["i"]: r["u"] for r in upd}
             w = [wi + int(um.get(i, 0) or 0) for i, wi in enumerate(w)]
-    finally:
-        # the returned weights no longer read base — free the quantized
-        # corpus NOW instead of pinning one copy per train call until GC
-        # (repeat calls in a bench/long session accumulated them; the
-        # connected_components release discipline, VERDICT r13 next #2)
-        release_checkpoint(base)
     spark = emb.sparkSession
     return spark.createDataFrame(
         [(i, int(wi)) for i, wi in enumerate(w)], "i int, w long"

@@ -244,21 +244,6 @@ def tune_for_tables(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
 
 
-def single_valued_predicates(
-    spark: SparkSession, sf_dir: str, tables: list[str]
-) -> frozenset:
-    """Every predicate the bridge emits is single-valued per subject (one
-    cell per row, one row per subject id). Kept as the declarative fact;
-    star fusion itself is licensed by the property-table catalog
-    (``bridge_ctx``), which is what makes the fused plan a pure scan."""
-    preds = set()
-    for t in tables:
-        _pk, fks, _uniq = TPCH_META[t]
-        for c in load_table(spark, sf_dir, t).columns:
-            preds.add(f"urn:ref:{c}" if c in fks else f"urn:col:{c}")
-    return frozenset(preds)
-
-
 def table_property_table(
     df: DataFrame, table: str, pk: list[str], fks: dict[str, str] | None = None,
     unique_pk: bool = True,

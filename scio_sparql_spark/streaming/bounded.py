@@ -29,6 +29,8 @@ import uuid
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..checkpoints import session_conf
+
 
 def stream_parquet(spark, path: str, schema) -> DataFrame:
     """readStream over a parquet path that may be a single FILE.
@@ -84,15 +86,11 @@ def run_bounded(
         .outputMode(output_mode)
         .trigger(availableNow=True)
     )
-    if shuffle_partitions is None:
+    conf = {}
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    with session_conf(spark, conf):
         q = writer.start()
-    else:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        try:
-            q = writer.start()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         finished = q.awaitTermination(timeout_sec)
     finally:

@@ -251,14 +251,6 @@ def num_lex(lex: Column) -> Column:
     )
 
 
-def is_numeric(t: Column) -> Column:
-    return (
-        is_literal(t)
-        & t["dt"].isin(*NUMERIC_DTS)
-        & num_lex(t["lex"]).cast("double").isNotNull()
-    )
-
-
 def num_value(t: Column) -> Column:
     """Numeric value as double, NULL if the term is not a valid numeric
     literal (SPARQL type error -> NULL propagates as error/unbound)."""

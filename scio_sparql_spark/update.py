@@ -2,10 +2,14 @@
 
 Functional graph store: ``execute_update(quads, update)`` returns a NEW
 quads DataFrame with every operation applied in sequence — the input is
-never mutated (DataFrames are immutable values). Persisting the result
-is the caller's choice (``write_triples`` or parquet), which is the
-right split on a cluster: an update is a plan, materialization is a
-checkpoint decision.
+never mutated (DataFrames are immutable values). A request of at most 4
+operations returns a pure plan over the input. A longer request
+materializes the store with ``localCheckpoint`` after every 4th
+operation (eager Spark jobs during the call) to bound plan depth; the
+result then reads the last such checkpoint. WHERE solutions and LOADed
+data are checkpointed per operation, and every checkpoint the result no
+longer reads is freed before the call returns. Persisting the result is
+the caller's choice (``write_triples`` or parquet).
 
 Beyond-reference surface (the reference is query-only,
 Interpreter.scala:191-205). Scale notes:
@@ -25,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from . import algebra as A
+from .checkpoints import CheckpointScope
 from .compiler import compile_query
-from .extras.util import release_checkpoint
 from .sparql.update import (
     DeleteData,
     DeleteWhere,
@@ -53,7 +57,7 @@ from .terms import (
 _COLS = ("subject", "predicate", "object", "graph")
 
 
-# r18: measured lazy-lineage planning cliff at sf0.1 (identical ops,
+# Measured lazy-lineage planning cliff at sf0.1 (identical ops,
 # identical output; seconds are build+query+count, min of reps):
 #   ops:        3     4     5     6     7     8     10     20
 #   lazy:     1.11  3.53  4.62  3.86  4.60  8.00  27.83  >300 (timeout)
@@ -61,83 +65,61 @@ _COLS = ("subject", "predicate", "object", "graph")
 # Catalyst re-analyzes the whole accumulated anti-join/union chain on
 # every action, and past ~4 operations that planning cost compounds
 # superlinearly — it is DRIVER time, independent of data size, so the
-# cliff is the same at 100 TB. "auto" therefore keeps short sequences
-# fully lazy (no store materialization — at scale a localCheckpoint
-# rewrites the entire store) and checkpoints every _AUTO_EVERY-th op
-# on longer ones, bounding lineage depth at the measured knee.
-_AUTO_EVERY = 4
+# cliff is the same at 100 TB. Short requests therefore stay fully lazy
+# (no store materialization — at scale a localCheckpoint rewrites the
+# entire store) and longer ones checkpoint every _CHECKPOINT_EVERY-th op,
+# bounding lineage depth at the measured knee.
+_CHECKPOINT_EVERY = 4
 
 
-def execute_update(
-    quads: DataFrame, update: str, checkpoint: bool | str = "auto"
-) -> DataFrame:
+def execute_update(quads: DataFrame, update: str) -> DataFrame:
     """Apply a SPARQL 1.1 Update request (one or more ';'-separated
     operations) and return the resulting quads DataFrame.
 
-    ``checkpoint`` controls store materialization between operations —
-    the result rows are identical in every mode (locked by the parity
-    test), only plan shape changes:
-
-    - ``"auto"`` (default, r18): sequences of <= 4 operations stay
-      fully lazy; longer sequences localCheckpoint the store after
-      every 4th operation, bounding the anti-join/union lineage depth
-      at the measured planning knee (see _AUTO_EVERY table above —
-      a 10-op lazy chain cost 27.8s of pure Catalyst re-analysis, a
-      20-op chain timed out at 300s, while bounded-depth planning
-      stays ~2s flat).
-    - ``False``: never materialize — the at-scale choice for SHORT
-      sequences (a checkpoint rewrites the whole store; a 3-deep
-      lineage plans and fuses fine).
-    - ``True``: localCheckpoint after EVERY operation — maximal
-      truncation for callers that interleave actions between ops."""
-    cur = quads
-    prev_ck = None
+    Requests of at most 4 operations stay fully lazy. Longer requests
+    localCheckpoint the store after every 4th operation, bounding the
+    anti-join/union lineage depth at the measured planning knee (see
+    the _CHECKPOINT_EVERY table above). Checkpoints the request no longer
+    reads are freed before it returns, and all of them are freed if an
+    operation fails."""
     ops = list(parse_update(update))
-    if checkpoint == "auto":
-        every = _AUTO_EVERY if len(ops) > _AUTO_EVERY else 0
-    else:
-        every = 1 if checkpoint else 0
-    for i, op in enumerate(ops):
-        cur = _apply(cur, op)
-        if every and (i + 1) % every == 0:
-            cur = cur.localCheckpoint()
-            # the eager checkpoint consumed the previous op's store —
-            # free the superseded blocks rather than pinning one store
-            # copy per operation (VERDICT r11 wrong #3). The final
-            # checkpoint stays live for the caller.
-            if prev_ck is not None:
-                release_checkpoint(prev_ck)
-            prev_ck = cur
-    return cur
+    every = _CHECKPOINT_EVERY if len(ops) > _CHECKPOINT_EVERY else 0
+    cur = quads
+    with CheckpointScope(quads.sparkSession) as cp:
+        for i, op in enumerate(ops):
+            cur = _apply(cp, cur, op)
+            if every and (i + 1) % every == 0:
+                cur = cp.retain(cp.checkpoint(cur))
+        return cp.retain(cur)
 
 
-def _apply(cur: DataFrame, op) -> DataFrame:
+def _apply(cp: CheckpointScope, cur: DataFrame, op) -> DataFrame:
     if isinstance(op, InsertData):
         # ground quads are a driver-built LocalRelation — free to
         # re-evaluate, no materialization needed
-        return _insert(cur, _ground_df(cur, op.quads), materialized=True)
+        return _insert(cur, _ground_df(cur, op.quads))
     if isinstance(op, DeleteData):
-        return _delete(cur, _ground_df(cur, op.quads), materialized=True)
+        return _delete(cur, _ground_df(cur, op.quads))
     if isinstance(op, DeleteWhere):
         # materialize the WHERE solutions once; the template projection
         # over the checkpoint is free to re-evaluate per join branch
-        sols = _solutions(cur, _patterns_algebra(op.patterns)).localCheckpoint()
-        return _delete(cur, _instantiate(sols, op.patterns, None), materialized=True)
+        sols = cp.checkpoint(_solutions(cur, _patterns_algebra(op.patterns)))
+        return _delete(cur, _instantiate(sols, op.patterns, None))
     if isinstance(op, Modify):
         # materialize the WHERE solutions once: delete AND insert
         # templates project from it, and each downstream join branch
         # references its side twice — one checkpoint here replaces up
         # to three nested ones (solution-set-sized, never store-sized)
-        sols = _solutions(cur, op.where).localCheckpoint()
+        sols = cp.checkpoint(_solutions(cur, op.where))
         with_g = Term.iri(op.with_iri) if op.with_iri else None
         # spec §3.1.3: evaluate WHERE once against the current store,
         # THEN delete, THEN insert
         dels = _instantiate(sols, op.delete, with_g) if op.delete else None
         ins = _instantiate(sols, op.insert, with_g) if op.insert else None
         if dels is not None:
-            cur = _delete(cur, dels, materialized=True)
+            cur = _delete(cur, dels)
         if ins is not None:
-            cur = _insert(cur, ins, materialized=True)
+            cur = _insert(cur, ins)
         return cur
     if isinstance(op, GraphManagement):
         if op.op == "create":
@@ -151,7 +133,7 @@ def _apply(cur: DataFrame, op) -> DataFrame:
             return cur.limit(0)
         return cur.filter(g.isNull() | (g["lex"] != op.target[1]))
     if isinstance(op, GraphTransfer):
-        return _transfer(cur, op)
+        return _transfer(cp, cur, op)
     if isinstance(op, Load):
         from .sources.rio import read_triples
 
@@ -161,7 +143,7 @@ def _apply(cur: DataFrame, op) -> DataFrame:
             loaded = loaded.withColumn(
                 "graph", Term.iri(op.graph).to_column().alias("graph")
             )
-        return _insert(cur, loaded)
+        return _insert(cur, loaded, cp)
     raise AssertionError(f"unhandled update op {op!r}")
 
 
@@ -177,7 +159,7 @@ def _quad_eq(a: str, b: str):
 
 
 def _insert(
-    cur: DataFrame, new: DataFrame, materialized: bool = False
+    cur: DataFrame, new: DataFrame, cp: CheckpointScope | None = None
 ) -> DataFrame:
     """Set-union: only quads absent from the store are appended (the
     store itself is never dedup-shuffled).
@@ -193,14 +175,15 @@ def _insert(
       fresh    = new  ▷ broadcast(existing)
 
     The new side appears in TWO plan branches (the broadcast probe and
-    the fresh anti-join); unless the caller vouches that it is already
-    cheap to re-evaluate (``materialized=True``: a ground LocalRelation
-    or a projection of checkpointed solutions), it is localCheckpointed
-    first — for a LOAD it would otherwise re-read the file per branch.
-    The checkpoint materializes insert-sized data, never store-sized."""
+    the fresh anti-join). A caller passes the request's scope ``cp``
+    when that side is expensive to re-evaluate (a LOAD would re-read the
+    file per branch); it is then checkpointed first. Without ``cp`` the
+    side is already cheap: a ground LocalRelation or a projection of
+    checkpointed solutions. The checkpoint materializes insert-sized
+    data, never store-sized."""
     new_d = new.dropDuplicates()
-    if not materialized:
-        new_d = new_d.localCheckpoint()
+    if cp is not None:
+        new_d = cp.checkpoint(new_d)
     existing = cur.alias("c").join(
         F.broadcast(new_d.alias("n")), _quad_eq("c", "n"), "left_semi"
     )
@@ -210,9 +193,7 @@ def _insert(
     return cur.unionByName(fresh.select(*_COLS))
 
 
-def _delete(
-    cur: DataFrame, dels: DataFrame, materialized: bool = False
-) -> DataFrame:
+def _delete(cur: DataFrame, dels: DataFrame) -> DataFrame:
     """Subtract quads. A delete row flagged ``__any_graph`` (a template
     with no GRAPH, under this engine's union-default-graph semantics —
     the default graph IS the union, so removing a triple from it removes
@@ -230,12 +211,10 @@ def _delete(
     d = dels
     if "__any_graph" not in d.columns:
         d = d.withColumn("__any_graph", F.lit(False))
-    # the dels plan fans into two branches; materialize unless the
-    # caller already checkpointed upstream (see _insert on the same
-    # materialized contract)
+    # the dels plan fans into two branches; every caller builds it from
+    # a ground LocalRelation or checkpointed solutions, so it is cheap
+    # to re-evaluate per branch
     d = d.dropDuplicates()
-    if not materialized:
-        d = d.localCheckpoint()
     anyg = d.filter(F.col("__any_graph")).select("subject", "predicate", "object")
     exact = d.filter(~F.col("__any_graph")).select(*_COLS)
 
@@ -248,7 +227,7 @@ def _delete(
     return out.select(*_COLS)
 
 
-def _transfer(cur: DataFrame, op) -> DataFrame:
+def _transfer(cp: CheckpointScope, cur: DataFrame, op) -> DataFrame:
     g = F.col("graph")
     src_pred = g.isNull() if op.src == "default" else g.isNotNull() & (
         g["lex"] == op.src
@@ -262,7 +241,7 @@ def _transfer(cur: DataFrame, op) -> DataFrame:
         return cur
     moved = cur.filter(src_pred).withColumn("graph", dst_graph)
     if op.op == "add":
-        return _insert(cur, moved)
+        return _insert(cur, moved, cp)
     # COPY/MOVE replace the destination graph entirely
     dst_pred = g.isNull() if op.dst == "default" else g.isNotNull() & (
         g["lex"] == op.dst
@@ -371,92 +350,3 @@ def _ground_df(cur: DataFrame, quads) -> DataFrame:
     ONE-ROW insert, which dominated the whole update round-trip."""
     rows = [(qp.s, qp.p, qp.o, qp.g) for qp in quads]
     return arrow_terms_df(cur.sparkSession, list(_COLS), rows).coalesce(1)
-
-
-def _patterns_algebra(patterns) -> A.Node:
-    node: A.Node | None = None
-    for qp in patterns:
-        sp = A.StatementPattern(
-            qp.s,
-            qp.p,
-            qp.o,
-            graph_mode="named" if qp.g is not None else "default",
-            graph=qp.g,
-        )
-        node = sp if node is None else A.Join(node, sp)
-    return node if node is not None else A.Singleton()
-
-
-def _solutions(quads: DataFrame, where: A.Node) -> DataFrame:
-    names = tuple(sorted(where.vars))
-    return compile_query(quads, A.Project(where, names))
-
-
-def _instantiate(sols: DataFrame, templates, with_g) -> DataFrame:
-    """Template quads x solutions -> quads DataFrame (plus an
-    ``__any_graph`` flag: True on rows from a graph-less template with
-    no WITH, which _delete matches against every graph — see _delete).
-    Invalid rows (unbound variable, literal subject/predicate/graph,
-    non-IRI predicate) are skipped per spec §3.1.3.2.
-
-    Blank node labels in INSERT templates (parser-minted ``__b_`` vars)
-    mint a FRESH blank node per solution per spec §3.1.3.2: the same
-    label within one solution's template yields one node, different
-    solutions yield distinct nodes. Minting always ignores any
-    same-named WHERE binding — template bnode labels never read
-    solution columns (spec forbids sharing a label across template and
-    pattern). The minted label is ``genid_<label>_<row>`` where row is
-    a per-solution ``monotonically_increasing_id`` — label identity is
-    stable within the materialized result, which is all bnode identity
-    promises."""
-    bnode_labels = {
-        v.name
-        for qp in templates
-        for v in (qp.s, qp.p, qp.o, qp.g)
-        if isinstance(v, A.Var) and is_bnode_var_name(v.name)
-    }
-    if bnode_labels:
-        sols = sols.withColumn("__row_id", F.monotonically_increasing_id())
-    parts = []
-    for qp in templates:
-        cols = []
-        for name, val in zip(_COLS, (qp.s, qp.p, qp.o, qp.g)):
-            if name == "graph" and val is None:
-                c = (
-                    with_g.to_column()
-                    if with_g is not None
-                    else F.lit(None).cast(TERM_TYPE)
-                )
-            elif isinstance(val, A.Var) and val.name in bnode_labels:
-                c = bnode_term(
-                    F.concat_ws(
-                        "_",
-                        F.lit("genid"),
-                        F.lit(val.name.lstrip("_")),  # b_<label> or b<N>
-                        F.col("__row_id").cast("string"),
-                    )
-                )
-            elif isinstance(val, A.Var):
-                c = F.col(val.name) if val.name in sols.columns else null_term()
-            else:
-                c = val.to_column()
-            cols.append(c.alias(name))
-        cols.append(
-            F.lit(qp.g is None and with_g is None).alias("__any_graph")
-        )
-        parts.append(sols.select(*cols))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    s, p, o, g = (F.col(c) for c in _COLS)
-    valid = (
-        s.isNotNull()
-        & (s["kind"] != KIND_LITERAL)
-        & p.isNotNull()
-        & (p["kind"] == KIND_IRI)
-        & o.isNotNull()
-        & (g.isNull() | (g["kind"] == KIND_IRI))
-    )
-    return out.filter(valid)
-
-

@@ -2818,14 +2818,6 @@ def q_sparql_update_roundtrip(spark, sf_dir):
            INSERT { ?r col:r_name "AFRIKA" }
            WHERE  { ?r col:r_name "AFRICA" } ;
            INSERT DATA { x:r99 col:r_name "ATLANTIS" }""",
-        # r17: lazy lineage for this 3-op sequence. The per-op store
-        # checkpoint materializes the ENTIRE store once per operation —
-        # at 100 TB that writes the corpus three times, while a 3-deep
-        # anti-join/union lineage plans and fuses fine (the bounded
-        # solution-set checkpoints inside _apply stay). checkpoint=True
-        # remains for long sequences (update.py docstring); A/B at
-        # sf0.1: 2.10s -> 1.86s min-of-5, row-identical.
-        checkpoint=False,
     )
     df = execute_sparql(
         updated, PREFIXES + "SELECT ?name WHERE { ?r col:r_name ?name }"

@@ -258,7 +258,7 @@ def test_iterative_checkpoints_release_superseded_blocks(spark):
     """VERDICT r11 wrong #3 / Next #4: iterative operators must not
     accumulate pinned localCheckpoint blocks across repeated runs in
     one session — superseded rounds are released eagerly and
-    synchronously (see extras/util.release_checkpoint), not left to
+    synchronously (see scio_sparql_spark/checkpoints.py), not left to
     Python GC + the async ContextCleaner. Runs the CC fixpoint
     (multi-round: a path graph forces multiple rounds — ~6 with the
     r13 pointer-doubling shortcut, each leaving a superseded

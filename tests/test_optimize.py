@@ -281,16 +281,6 @@ def test_quad_store_roundtrip_auto_star_fusion(spark, tmp_path):
     assert multi.count() == 2
 
 
-def test_single_valued_kwarg_warns(spark):
-    import warnings
-
-    quads = quads_df_from_list(spark, parse_turtle(STAR_TTL))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        execute_sparql(quads, STAR_Q, single_valued={"urn:o:p"})
-        assert any(issubclass(x.category, DeprecationWarning) for x in w)
-
-
 def test_corrupt_star_sidecar_fails_soft(spark, tmp_path):
     """A truncated/garbled _star sidecar must not take read_triples
     down: the sidecar is a plan optimization; the quad store is healthy."""

@@ -164,6 +164,16 @@ _:y :q _:x .
     assert len(got) == 3
 
 
+def test_describe_deep_bnode_chain_is_not_truncated(spark):
+    # the closure runs until no new bnode is reached: a 20-deep chain
+    # yields :a's triple, 19 bnode links and the final literal
+    links = " . ".join(f"_:b{i} :p _:b{i + 1}" for i in range(1, 20))
+    ttl = f'@prefix : <urn:f:> . :a :p _:b1 . {links} . _:b20 :p "end" .'
+    quads = quads_df_from_list(spark, parse_turtle(ttl))
+    got = _triples(execute_sparql(quads, "PREFIX : <urn:f:> DESCRIBE :a"))
+    assert len(got) == 21
+
+
 def test_construct_reduced_skips_dedup(spark):
     from scio_sparql_spark import execute_sparql, parse_turtle, quads_df_from_list
 

@@ -214,60 +214,52 @@ def test_insert_template_bnode_ignores_where_binding(spark):
     assert rows[0]["b"]["lex"] != src[0]["s"]["lex"]
 
 
-def test_checkpoint_true_matches_lazy_lineage(spark):
-    """checkpoint=True (per-op store materialization, the long-sequence
-    mode) must produce exactly the same store as the default lazy
-    lineage — this pins the path after the r17 switch of the workload
-    round-trip entry to checkpoint=False."""
-    upd = """PREFIX : <urn:u:>
-       DELETE { ?s ?p ?o } WHERE { ?s :p 1 . ?s ?p ?o } ;
-       DELETE { ?s :p 2 } INSERT { ?s :p 20 } WHERE { ?s :p 2 } ;
-       INSERT DATA { :c :p 3 }"""
-
-    def rows(quads):
-        return sorted(
-            (
-                tuple(None if t is None else (t["kind"], t["lex"]) for t in
-                      (r["subject"], r["predicate"], r["object"]))
-                for r in quads.collect()
-            )
-        )
-
-    lazy = execute_update(_store(spark), upd, checkpoint=False)
-    ckpt = execute_update(_store(spark), upd, checkpoint=True)
-    assert rows(lazy) == rows(ckpt)
-    assert len(rows(lazy)) == 2  # :a (both triples) gone; :b :p 20; :c :p 3
+def _store_rows(quads):
+    return sorted(
+        tuple(None if t is None else (t["kind"], t["lex"]) for t in
+              (r["subject"], r["predicate"], r["object"]))
+        for r in quads.collect()
+    )
 
 
-def test_checkpoint_auto_matches_both_modes_past_knee(spark):
-    """r18: checkpoint='auto' (the new default) bounds lineage depth by
-    checkpointing every 4th op on sequences longer than 4 ops — the
-    measured Catalyst planning knee (update.py _AUTO_EVERY table: a
-    10-op lazy chain cost 27.8s of pure re-analysis, 20 ops timed out,
-    while bounded depth stays ~2s flat). The store must be identical
-    in all three modes on a 7-op mixed sequence that crosses the
-    auto-checkpoint boundary mid-sequence."""
-    upd = """PREFIX : <urn:u:>
-       DELETE { ?s ?p ?o } WHERE { ?s :p 1 . ?s ?p ?o } ;
-       DELETE { ?s :p 2 } INSERT { ?s :p 20 } WHERE { ?s :p 2 } ;
-       INSERT DATA { :c :p 3 } ;
-       INSERT DATA { :d :p 4 . :d :q "tmp" } ;
-       DELETE WHERE { :d :q ?v } ;
-       DELETE { ?s :p 20 } INSERT { ?s :p 21 } WHERE { ?s :p 20 } ;
-       INSERT DATA { :e :p 5 }"""
+def _one_request_at_a_time(store, ops):
+    for op in ops:
+        store = execute_update(store, "PREFIX : <urn:u:>\n" + op)
+    return store
 
-    def rows(quads):
-        return sorted(
-            (
-                tuple(None if t is None else (t["kind"], t["lex"]) for t in
-                      (r["subject"], r["predicate"], r["object"]))
-                for r in quads.collect()
-            )
-        )
 
-    auto = execute_update(_store(spark), upd)  # default is "auto"
-    lazy = execute_update(_store(spark), upd, checkpoint=False)
-    ckpt = execute_update(_store(spark), upd, checkpoint=True)
-    assert rows(auto) == rows(lazy) == rows(ckpt)
+def _request(ops):
+    return "PREFIX : <urn:u:>\n" + " ;\n".join(ops)
+
+
+def test_lazy_request_matches_ops_applied_one_at_a_time(spark):
+    """A 3-op request stays one lazy plan; it must leave exactly the
+    store that the same ops leave when each is its own request."""
+    ops = [
+        "DELETE { ?s ?p ?o } WHERE { ?s :p 1 . ?s ?p ?o }",
+        "DELETE { ?s :p 2 } INSERT { ?s :p 20 } WHERE { ?s :p 2 }",
+        "INSERT DATA { :c :p 3 }",
+    ]
+    whole = _store_rows(execute_update(_store(spark), _request(ops)))
+    assert whole == _store_rows(_one_request_at_a_time(_store(spark), ops))
+    assert len(whole) == 2  # :a (both triples) gone; :b :p 20; :c :p 3
+
+
+def test_checkpointed_request_matches_ops_applied_one_at_a_time(spark):
+    """A request of more than 4 ops checkpoints the store after op 4 to
+    bound plan depth (update.py _CHECKPOINT_EVERY). A 7-op request crosses
+    that checkpoint mid-sequence; single-op requests never checkpoint
+    the store. Both must leave the same store."""
+    ops = [
+        "DELETE { ?s ?p ?o } WHERE { ?s :p 1 . ?s ?p ?o }",
+        "DELETE { ?s :p 2 } INSERT { ?s :p 20 } WHERE { ?s :p 2 }",
+        "INSERT DATA { :c :p 3 }",
+        'INSERT DATA { :d :p 4 . :d :q "tmp" }',
+        "DELETE WHERE { :d :q ?v }",
+        "DELETE { ?s :p 20 } INSERT { ?s :p 21 } WHERE { ?s :p 20 }",
+        "INSERT DATA { :e :p 5 }",
+    ]
+    whole = _store_rows(execute_update(_store(spark), _request(ops)))
+    assert whole == _store_rows(_one_request_at_a_time(_store(spark), ops))
     # :b :p 21, :c :p 3, :d :p 4, :e :p 5 (both :a triples and :d :q gone)
-    assert len(rows(auto)) == 4
+    assert len(whole) == 4

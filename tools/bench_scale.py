@@ -72,7 +72,7 @@ PREDICTED = {
     # r17 additions (VERDICT r16 next #8): the two remaining >=1.9s
     # entries with no observed-vs-predicted record, plus the new gate
     "corpus_heavy_hitters_cms": "~10x BOTH sides: grid build one constant-state partial-agg scan (linear in tokens); the exhaustive distinct-token probe is the vocabulary-keyed shuffle this entry's own docstring flags as the anti-pattern its bounded sibling replaces — vocab grows ~10x under decorrelation, so the probe shuffle grows with it (the honest cost of end-to-end oracle-checkability)",
-    "sparql_update_roundtrip": "~10x: each update op is one BGP match (parquet-pushdown scans) + an anti-join delete / union insert over quads, all linear; checkpoint=true bounds lineage so the 3-op sequence stays 3 fixed plans; query-back one scan",
+    "sparql_update_roundtrip": "~10x: each update op is one BGP match (parquet-pushdown scans) + an anti-join delete / union insert over quads, all linear; the 3-op sequence stays one lazy plan; query-back one scan",
     "domain_counts": "~10x: dedup_hosts' map-only canonicalize + one short-host-key partial-agg groupBy, then the eTLD+1 rollup groupBy over #hosts rows ONLY (distinct hosts ~constant under decorrelated 10x, so the second shuffle is noise); output rows = hosts + domains",
 }
 
