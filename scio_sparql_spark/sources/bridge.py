@@ -8,6 +8,11 @@ target row's subject IRI, one named graph per table (``urn:graph:{table}``).
 Scale notes (100 TB): the transform is a per-column project + unionByName —
 narrow, no shuffle, fully pipelined into whatever consumes the quads.
 NULL cells emit no triple (RDF absence = SQL NULL).
+
+Plans are built from SQL expression text (one ``filter`` + one
+``selectExpr`` per column branch, one ``selectExpr`` per property
+table): building the same expressions from Column calls costs a py4j
+round trip per expression node.
 """
 
 from __future__ import annotations
@@ -15,7 +20,7 @@ from __future__ import annotations
 import glob as _glob
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..terms import (
@@ -24,11 +29,13 @@ from ..terms import (
     XSD_BOOLEAN,
     XSD_DATE,
     XSD_DATETIME,
-    XSD_DECIMAL,
     XSD_DOUBLE,
     XSD_FLOAT,
     XSD_INTEGER,
     XSD_STRING,
+    sql_ident,
+    sql_string,
+    term_sql,
 )
 
 _DT_FOR_SPARK = {
@@ -45,27 +52,33 @@ _DT_FOR_SPARK = {
 }
 
 
-def _iri(lex: Column) -> Column:
-    return F.struct(
-        F.lit(KIND_IRI).cast("tinyint").alias("kind"),
-        lex.alias("lex"),
-        F.lit(None).cast("string").alias("dt"),
-        F.lit(None).cast("string").alias("lang"),
-    )
+def _row_iri_sql(table: str, key_cols: list[str]) -> str:
+    """SQL text of the row IRI ``urn:{table}:{k1}-{k2}...``."""
+    keys = ", ".join(f"CAST({sql_ident(k)} AS STRING)" for k in key_cols)
+    return f"concat({sql_string(f'urn:{table}:')}, concat_ws({sql_string('-')}, {keys}))"
 
 
-def _lit(lex: Column, dt: str) -> Column:
-    return F.struct(
-        F.lit(KIND_LITERAL).cast("tinyint").alias("kind"),
-        lex.alias("lex"),
-        F.lit(dt).alias("dt"),
-        F.lit(None).cast("string").alias("lang"),
-    )
-
-
-def subject_iri(table: str, *key_cols: Column) -> Column:
-    key = F.concat_ws("-", *[c.cast("string") for c in key_cols])
-    return F.concat(F.lit(f"urn:{table}:"), key)
+def _direct_mapping(
+    df: DataFrame, table: str, pk: list[str], fks: dict[str, str] | None, unique_pk: bool
+) -> tuple[str, list[tuple[str, str, str]]]:
+    """The subject term of a row and one ``(column, predicate IRI,
+    object term)`` per mapped column, terms as SQL text. A bag table
+    (``unique_pk=False``) keys its subjects on the caller's ``__rid``."""
+    fks = fks or {}
+    subj = term_sql(KIND_IRI, _row_iri_sql(table, pk if unique_pk else ["__rid"]))
+    cols = []
+    for c, dtype in df.dtypes:
+        if c == "__rid":
+            continue
+        if c in fks:
+            pred = f"urn:ref:{c}"
+            obj = term_sql(KIND_IRI, _row_iri_sql(fks[c], [c]))
+        else:
+            pred = f"urn:col:{c}"
+            lex = f"CAST({sql_ident(c)} AS STRING)"
+            obj = term_sql(KIND_LITERAL, lex, _DT_FOR_SPARK.get(dtype, XSD_STRING))
+        cols.append((c, pred, obj))
+    return subj, cols
 
 
 def table_to_quads(
@@ -73,7 +86,6 @@ def table_to_quads(
     table: str,
     pk: list[str],
     fks: dict[str, str] | None = None,
-    graph: bool = True,
     unique_pk: bool = True,
 ) -> DataFrame:
     """One quad per non-NULL cell. ``fks`` maps column -> target table
@@ -82,46 +94,22 @@ def table_to_quads(
     ``unique_pk=False``: the pk does not uniquely identify rows (bag
     fact tables) — the caller supplies a deterministic ``__rid`` column
     (file + row position, see ``_uniquified``) so every per-column
-    branch derives the same subject from a pure scan."""
-    fks = fks or {}
-    dtypes = dict(df.dtypes)
-    if not unique_pk:
-        # Bag table: subjects carry the scan-derived row uniquifier.
-        # Branch pruning on predicate-bound patterns still applies (the
-        # filter folds against each branch's constant predicate), so a
-        # pattern scans ONE column, not all.
-        subj = _iri(subject_iri(table, F.col("__rid")))
-    else:
-        subj = _iri(subject_iri(table, *[F.col(k) for k in pk]))
-    gcol = (
-        _iri(F.lit(f"urn:graph:{table}"))
-        if graph
-        else F.lit(None).cast(
-            "struct<kind:tinyint,lex:string,dt:string,lang:string>"
+    branch derives the same subject from a pure scan.
+
+    Each column is its own branch with a constant predicate, so a
+    predicate-bound pattern's filter folds against every branch and the
+    plan scans one column, not all."""
+    subj, cols = _direct_mapping(df, table, pk, fks, unique_pk)
+    graph = term_sql(KIND_IRI, sql_string(f"urn:graph:{table}"))
+    out = None
+    for c, pred, obj in cols:
+        part = df.filter(f"{sql_ident(c)} IS NOT NULL").selectExpr(
+            f"{subj} AS subject",
+            f"{term_sql(KIND_IRI, sql_string(pred))} AS predicate",
+            f"{obj} AS object",
+            f"{graph} AS graph",
         )
-    )
-    parts = []
-    for c in df.columns:
-        if c == "__rid":
-            continue
-        if c in fks:
-            pred = _iri(F.lit(f"urn:ref:{c}"))
-            obj = _iri(subject_iri(fks[c], F.col(c)))
-        else:
-            dt = _DT_FOR_SPARK.get(dtypes[c], XSD_STRING)
-            pred = _iri(F.lit(f"urn:col:{c}"))
-            obj = _lit(F.col(c).cast("string"), dt)
-        parts.append(
-            df.filter(F.col(c).isNotNull()).select(
-                subj.alias("subject"),
-                pred.alias("predicate"),
-                obj.alias("object"),
-                gcol.alias("graph"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        out = part if out is None else out.unionByName(part)
     return out
 
 
@@ -148,9 +136,8 @@ TPCH_META = {
 def _has_nanos_timestamp(path: str) -> bool:
     """Driver-side parquet footer sniff (one footer, no Spark job): does
     the file carry TIMESTAMP(NANOS), which Spark rejects by default?
-    Round 1 probed by letting a schema-resolution job fail and catching
-    it — that aborted stage printed an ERROR stack trace into every
-    bench log."""
+    Reading the footer avoids probing with a schema-resolution job,
+    whose failure would print an ERROR stack trace into the log."""
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -190,9 +177,8 @@ def _uniquified(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     ``_metadata`` columns). Pure scan state — no shuffle, no cache, no
     driver materialization — so every per-column quad branch derives the
     SAME subject for a row independently, and the layout scales to
-    arbitrarily many files. (Round 1 used monotonically_increasing_id +
-    cache + count, which forced a full-table materialization before any
-    query — a non-starter at warehouse scale.)"""
+    arbitrarily many files. (A monotonically_increasing_id would need a
+    cache + count, a full-table materialization before any query.)"""
     df = load_table(spark, sf_dir, table)
     # Compact NUMERIC rid: (driver-side file index << 40) | row_index.
     # Subjects become the join/shuffle keys of every BGP over this
@@ -254,30 +240,14 @@ def table_property_table(
     projection of the source scan (see star.PropertyTable)."""
     from ..star import PropertyTable
 
-    fks = fks or {}
-    dtypes = dict(df.dtypes)
-    if unique_pk:
-        subj = _iri(subject_iri(table, *[F.col(k) for k in pk]))
-    else:
-        subj = _iri(subject_iri(table, F.col("__rid")))
+    subj, cols = _direct_mapping(df, table, pk, fks, unique_pk)
     pred_cols: dict[str, str] = {}
-    sel = [subj.alias("__subject")]
-    i = 0
-    for c in df.columns:
-        if c == "__rid":
-            continue
-        if c in fks:
-            pred = f"urn:ref:{c}"
-            obj = _iri(subject_iri(fks[c], F.col(c)))
-        else:
-            pred = f"urn:col:{c}"
-            obj = _lit(F.col(c).cast("string"), _DT_FOR_SPARK.get(dtypes[c], XSD_STRING))
-        cname = f"__p{i}"
-        i += 1
-        pred_cols[pred] = cname
+    sel = [f"{subj} AS __subject"]
+    for i, (c, pred, obj) in enumerate(cols):
+        pred_cols[pred] = f"__p{i}"
         # NULL cell emits no triple -> whole term NULL (absence)
-        sel.append(F.when(F.col(c).isNotNull(), obj).alias(cname))
-    return PropertyTable(df.select(*sel), pred_cols)
+        sel.append(f"CASE WHEN {sql_ident(c)} IS NOT NULL THEN {obj} END AS __p{i}")
+    return PropertyTable(df.selectExpr(*sel), pred_cols)
 
 
 def tables_to_quads(spark: SparkSession, sf_dir: str, tables: list[str]) -> DataFrame:
@@ -289,12 +259,11 @@ def tables_to_quads(spark: SparkSession, sf_dir: str, tables: list[str]) -> Data
 def bridge_ctx(spark: SparkSession, sf_dir: str, tables: list[str]):
     """(quads, StarCatalog) for a table set, memoized per SparkSession.
 
-    Round 2 rebuilt the whole bridge (per-column branch construction,
-    parquet footer sniffs, ~2-3s of py4j chatter) inside EVERY workload
-    call, which dominated the bench regression (VERDICT r2). The plan
-    objects are immutable once built, so caching them on the session is
-    safe; the cache dies with the session. Data is NOT cached — only the
-    logical plan."""
+    A build reads parquet footers and schemas and constructs one branch
+    per column, so callers that query the same tables repeatedly share
+    one build. The plan objects are immutable once built, so caching
+    them on the session is safe; the cache dies with the session. Data
+    is NOT cached — only the logical plan."""
     key = (os.path.abspath(sf_dir), tuple(tables))
     cache = getattr(spark, "_scio_bridge_cache", None)
     if cache is None:

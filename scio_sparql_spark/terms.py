@@ -67,6 +67,32 @@ QUADS_SCHEMA = T.StructType(
     ]
 )
 
+
+def sql_string(s: str | None) -> str:
+    """``s`` as Spark SQL text that reads back exactly: a UTF-8 hex
+    binary literal cast to string. A quoted '...' literal would read
+    backslashes differently under each value of
+    ``spark.sql.parser.escapedStringLiterals``; the cast folds to the
+    same string constant in the optimized plan. None -> a string NULL."""
+    if s is None:
+        return "CAST(NULL AS STRING)"
+    return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+
+
+def sql_ident(name: str) -> str:
+    """Column name as a backtick-quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def term_sql(kind: int, lex: str, dt: str | None = None, lang: str | None = None) -> str:
+    """A term struct with the ``TERM_TYPE`` layout as Spark SQL text.
+    ``lex`` is SQL expression text; ``dt`` and ``lang`` are constants."""
+    return (
+        f"struct(CAST({kind} AS TINYINT) AS kind, {lex} AS lex, "
+        f"{sql_string(dt)} AS dt, {sql_string(lang)} AS lang)"
+    )
+
+
 # Datatypes treated as numeric, by XPath promotion level
 # (integer-family=0, decimal=1, float=2, double=3); mirrors rdf4j
 # MathUtil.compute promotion (reference: ValueEvaluators.scala:19-25).

@@ -1,7 +1,8 @@
-"""Dump .explain('formatted') for catalog queries to plans/r17/.
+"""Dump .explain('formatted') for catalog queries to a directory.
 
-Usage: python tools/explain_query.py <out_suffix> <query> [query ...]
-Writes plans/r17/<query>_<out_suffix>.txt. $SPARK_GRAFT_SF_DIR picks the
+Usage: python tools/explain_query.py <out_dir> <out_suffix> <query> [query ...]
+Writes <out_dir>/<query>_<out_suffix>.txt, creating <out_dir> if
+needed. $SPARK_GRAFT_SF_DIR picks the
 data dir (default /root/testdata/sf0.1).
 """
 import os
@@ -15,8 +16,9 @@ from scio_sparql_spark import workload  # noqa: E402
 
 
 def main():
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    outdir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
@@ -30,7 +32,6 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = workload.build_queries()
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17")
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)
