@@ -18,7 +18,7 @@ keys; maybe-unbound shared vars get null-tolerant join conditions.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, fields, replace
 from typing import Optional, Union as U
 
 from .terms import Term
@@ -132,40 +132,55 @@ Expr = U[
 ]
 
 
+def expr_children(e) -> tuple:
+    """The sub-expressions of ``e``, in field order. This ladder and
+    ``map_expr``'s are the one place that knows which fields hold
+    sub-expressions; every walker recurses through them. An EXISTS
+    pattern is an algebra node, not a child: walkers that reach into
+    it handle ``EExists`` themselves."""
+    if isinstance(e, ECall):
+        return e.args
+    if isinstance(e, (EAnd, EOr, ECmp, EArith)):
+        return (e.left, e.right)
+    if isinstance(e, (ENot, ENeg)):
+        return (e.arg,)
+    if isinstance(e, EIn):
+        return (e.arg, *e.options)
+    if isinstance(e, EAgg):
+        return () if e.arg is None else (e.arg,)
+    if isinstance(e, (EVar, EConst, ENumRef, EExists)):
+        return ()
+    raise TypeError(f"not an expression: {e!r}")
+
+
+def map_expr(e, f):
+    """``e`` rebuilt with ``f`` applied to each of its
+    ``expr_children``; a leaf comes back unchanged."""
+    if isinstance(e, ECall):
+        return ECall(e.name, tuple(f(a) for a in e.args))
+    if isinstance(e, (EAnd, EOr)):
+        return type(e)(f(e.left), f(e.right))
+    if isinstance(e, (ECmp, EArith)):
+        return type(e)(e.op, f(e.left), f(e.right))
+    if isinstance(e, (ENot, ENeg)):
+        return type(e)(f(e.arg))
+    if isinstance(e, EIn):
+        return EIn(f(e.arg), tuple(f(o) for o in e.options), e.negated)
+    if isinstance(e, EAgg):
+        return e if e.arg is None else replace(e, arg=f(e.arg))
+    if isinstance(e, (EVar, EConst, ENumRef, EExists)):
+        return e
+    raise TypeError(f"not an expression: {e!r}")
+
+
 def expr_vars(e) -> set[str]:
     """Free variables of an expression (EXISTS patterns contribute their
     in-scope vars — needed for correlated semi/anti join planning)."""
     if isinstance(e, EVar):
         return {e.name}
-    if isinstance(e, (EConst, ENumRef)):
-        return set()
-    if isinstance(e, ECall):
-        return set().union(*[expr_vars(a) for a in e.args]) if e.args else set()
-    if isinstance(e, (EAnd, EOr, ECmp, EArith)):
-        return expr_vars(e.left) | expr_vars(e.right)
-    if isinstance(e, (ENot, ENeg)):
-        return expr_vars(e.arg)
-    if isinstance(e, EIn):
-        return expr_vars(e.arg).union(*[expr_vars(o) for o in e.options])
     if isinstance(e, EExists):
-        return e.pattern.vars
-    if isinstance(e, EAgg):
-        return expr_vars(e.arg) if e.arg is not None else set()
-    raise TypeError(f"not an expression: {e!r}")
-
-
-def contains_agg(e) -> bool:
-    if isinstance(e, EAgg):
-        return True
-    if isinstance(e, ECall):
-        return any(contains_agg(a) for a in e.args)
-    if isinstance(e, (EAnd, EOr, ECmp, EArith)):
-        return contains_agg(e.left) or contains_agg(e.right)
-    if isinstance(e, (ENot, ENeg)):
-        return contains_agg(e.arg)
-    if isinstance(e, EIn):
-        return contains_agg(e.arg) or any(contains_agg(o) for o in e.options)
-    return False
+        return set(e.pattern.vars)
+    return set().union(*map(expr_vars, expr_children(e)))
 
 
 # ---------------------------------------------------------------------------
@@ -188,6 +203,20 @@ PatTerm = U[Var, Term]
 class Node:
     vars: frozenset
     assured: frozenset
+
+
+def map_node(node: Node, fn, fe) -> Node:
+    """``node`` rebuilt with ``fn`` applied to each child ``Node`` field
+    and ``fe`` to its ``condition``/``expr`` expression slot; a node with
+    neither comes back unchanged."""
+    changes = {}
+    for f in fields(node):
+        v = getattr(node, f.name)
+        if isinstance(v, Node):
+            changes[f.name] = fn(v)
+        elif f.name in ("condition", "expr") and v is not None:
+            changes[f.name] = fe(v)
+    return replace(node, **changes) if changes else node
 
 
 @dataclass(frozen=True)
@@ -227,14 +256,14 @@ class StatementPattern(Node):
 
 @dataclass(frozen=True)
 class StarScan(Node):
-    """Fused subject-star BGP over declared single-valued predicates:
-    ``?s p1 ?o1 . ?s p2 ?o2 . ...`` compiles to ONE scan + ONE
-    groupBy(subject) instead of an (N-1)-way self-join on subject (the
-    property-table rewrite — see the S2RDF/vertical-partitioning
-    yardstick in PAPERS.md). Only created by the optimizer when every
-    predicate is in the caller-declared single-valued set (at most one
-    (s, p) row in the quads DF), which makes the group-by semantics
-    exactly equal to the join semantics."""
+    """Fused subject-star BGP: ``?s p1 ?o1 . ?s p2 ?o2 . ...`` compiles
+    to ONE filter+project over a property table (one row per subject,
+    one column per predicate — compiler._c_starscan) instead of an
+    (N-1)-way self-join on subject (the property-table rewrite — see
+    the S2RDF/vertical-partitioning yardstick in PAPERS.md). Only
+    created by optimize._fuse_stars when one table of the caller's
+    star catalog covers every predicate, so each (s, p) has at most one
+    object and the scan equals the join."""
 
     s: PatTerm  # always a Var
     items: tuple  # of (Term predicate, PatTerm object)

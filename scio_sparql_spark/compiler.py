@@ -56,19 +56,7 @@ def _flatten_and(cond) -> list:
 
 
 def _contains_exists(e) -> bool:
-    if isinstance(e, A.EExists):
-        return True
-    if isinstance(e, (A.EAnd, A.EOr, A.ECmp, A.EArith)):
-        return _contains_exists(e.left) or _contains_exists(e.right)
-    if isinstance(e, (A.ENot, A.ENeg)):
-        return _contains_exists(e.arg)
-    if isinstance(e, A.ECall):
-        return any(_contains_exists(a) for a in e.args)
-    if isinstance(e, A.EIn):
-        return _contains_exists(e.arg) or any(
-            _contains_exists(x) for x in e.options
-        )
-    return False
+    return isinstance(e, A.EExists) or any(map(_contains_exists, A.expr_children(e)))
 
 
 class Compiler:
@@ -87,8 +75,8 @@ class Compiler:
         # instead of the union-default semantics used without a dataset
         # clause (reference: Interpreter.scala:215)
         self.strict_default = strict_default
-        # services: IRI -> quads DataFrame for SERVICE clauses (r13
-        # upgrade; the reference's resolver throws unconditionally)
+        # services: IRI -> quads DataFrame for SERVICE clauses (the
+        # reference's resolver throws unconditionally)
         self.services = services or {}
 
     # --- dispatch ---
@@ -135,12 +123,11 @@ class Compiler:
         optimizer creates StarScan only when one star.PropertyTable
         covers every predicate (optimize._fuse_stars), so the whole
         star is a filter+project over that table — no self-join on
-        subject and no query-time aggregate. Round 2 compiled stars to
-        groupBy(subject); string-typed aggregation buffers silently fell
-        back to SortAggregate (a per-partition sort of the fact table
-        per star query) — the plan this replaces. For relational-bridge
-        quads the property table is the original parquet row, so the
-        star costs exactly one narrow columnar scan."""
+        subject and no query-time aggregate (a groupBy(subject) would
+        fall back to SortAggregate on its string-typed buffers). For
+        relational-bridge quads the property table is the original
+        parquet row, so the star costs exactly one narrow columnar
+        scan."""
         pt = (
             self.star_catalog.table_for([p.lex for p, _ in node.items])
             if self.star_catalog is not None
@@ -319,7 +306,7 @@ class Compiler:
         return df.select(*sel) if sel else df.select()
 
     def _c_service(self, node: A.Service) -> DataFrame:
-        """SERVICE (r13 upgrade): compile the sub-pattern against the
+        """SERVICE: compile the sub-pattern against the
         REGISTERED dataset with a fresh Compiler — union-default-graph
         semantics of THAT dataset, its own scans, the enclosing Join
         handles the solution-compatibility join exactly as for any
@@ -473,32 +460,12 @@ class Compiler:
         pulled: list = []
 
         def rw(e, root):
-            if isinstance(e, A.EArith):
-                e2 = A.EArith(e.op, rw(e.left, False), rw(e.right, False))
-                if root:
-                    return e2
-                name = f"__cse{next(_alias_counter)}"
-                pulled.append((name, e2))
-                return A.ENumRef(name)
-            if isinstance(e, A.ENeg):
-                return A.ENeg(rw(e.arg, False))
-            if isinstance(e, A.ECall):
-                return A.ECall(e.name, tuple(rw(a, False) for a in e.args))
-            if isinstance(e, A.ECmp):
-                return A.ECmp(e.op, rw(e.left, False), rw(e.right, False))
-            if isinstance(e, A.EAnd):
-                return A.EAnd(rw(e.left, False), rw(e.right, False))
-            if isinstance(e, A.EOr):
-                return A.EOr(rw(e.left, False), rw(e.right, False))
-            if isinstance(e, A.ENot):
-                return A.ENot(rw(e.arg, False))
-            if isinstance(e, A.EIn):
-                return A.EIn(
-                    rw(e.arg, False),
-                    tuple(rw(x, False) for x in e.options),
-                    e.negated,
-                )
-            return e
+            e2 = A.map_expr(e, lambda x: rw(x, False))
+            if root or not isinstance(e, A.EArith):
+                return e2
+            name = f"__cse{next(_alias_counter)}"
+            pulled.append((name, e2))
+            return A.ENumRef(name)
 
         top = rw(expr, True)
         temps = []
@@ -609,25 +576,7 @@ class Compiler:
                 )
                 temps.append(name)
                 return A.EVar(name)
-            if isinstance(e, A.EAnd):
-                return A.EAnd(walk(e.left), walk(e.right))
-            if isinstance(e, A.EOr):
-                return A.EOr(walk(e.left), walk(e.right))
-            if isinstance(e, A.ENot):
-                return A.ENot(walk(e.arg))
-            if isinstance(e, A.ENeg):
-                return A.ENeg(walk(e.arg))
-            if isinstance(e, A.ECmp):
-                return A.ECmp(e.op, walk(e.left), walk(e.right))
-            if isinstance(e, A.EArith):
-                return A.EArith(e.op, walk(e.left), walk(e.right))
-            if isinstance(e, A.ECall):
-                return A.ECall(e.name, tuple(walk(a) for a in e.args))
-            if isinstance(e, A.EIn):
-                return A.EIn(
-                    walk(e.arg), tuple(walk(x) for x in e.options), e.negated
-                )
-            return e
+            return A.map_expr(e, walk)
 
         out = walk(expr)
         return state["df"], out, temps
@@ -824,12 +773,11 @@ class Compiler:
         # fixed-width mutable buffer fields; probed empirically — max of
         # double hashes, max/max_by/first of string or struct all fall to
         # SortAggregate). This is inherent to a total-order reduction
-        # over heterogeneous terms, NOT the round-2 star trap (which was
-        # an avoidable SortAggregate on every star query): the partial
-        # aggregate still combines map-side before the shuffle and the
-        # sort is spillable. A hash-only lane would have to rebuild the
-        # winning term from its numeric value, losing the original
-        # lexical form/datatype the spec says MIN/MAX return.
+        # over heterogeneous terms: the partial aggregate still combines
+        # map-side before the shuffle and the sort is spillable. A
+        # hash-only lane would have to rebuild the winning term from its
+        # numeric value, losing the original lexical form/datatype the
+        # spec says MIN/MAX return.
         if agg.fn == "MIN":
             return [F.min_by(a, sort_key(a)).alias(f"__v_{out_name}"), err]
         if agg.fn == "MAX":

@@ -67,8 +67,9 @@ def compile_value(e, env: Env) -> Column:
         return _call(e, env)
     if isinstance(e, A.EExists):
         raise NotImplementedError(
-            "EXISTS is only supported at FILTER top level (compiled to a "
-            "semi/anti join); it cannot appear nested inside another expression"
+            "EXISTS is supported in a FILTER, BIND or SELECT expression; "
+            "not in an OPTIONAL's FILTER, a GROUP BY or ORDER BY "
+            "expression, or an aggregate argument"
         )
     raise TypeError(f"cannot compile value expr: {e!r}")
 

@@ -43,7 +43,7 @@ def _fuse_stars(leaves: list, catalog) -> list:
     reordering sees a stable input. Fusion requires single-table
     coverage because the compiled plan is a scan of that table
     (compiler._c_starscan) — no query-time aggregate, no SortAggregate
-    fallback (the round-2 regression)."""
+    fallback."""
     groups: dict[tuple, list] = {}
     for leaf in leaves:
         if _fusable(leaf, catalog):
@@ -130,67 +130,24 @@ def reorder_joins(node, star_catalog=None):
         for l in leaves[1:]:
             out = A.Join(out, l)
         return out
-    if isinstance(node, A.LeftJoin):
-        cond = _reorder_expr(node.condition, sv) if node.condition is not None else None
-        return A.LeftJoin(reorder_joins(node.left, sv), reorder_joins(node.right, sv), cond)
-    if isinstance(node, A.Minus):
-        return A.Minus(reorder_joins(node.left, sv), reorder_joins(node.right, sv))
-    if isinstance(node, A.Union):
-        return A.Union(reorder_joins(node.left, sv), reorder_joins(node.right, sv))
-    if isinstance(node, A.Filter):
-        return A.Filter(reorder_joins(node.input, sv), _reorder_expr(node.condition, sv))
-    if isinstance(node, A.Extend):
-        return A.Extend(reorder_joins(node.input, sv), node.var, _reorder_expr(node.expr, sv))
-    if isinstance(node, A.Project):
-        return A.Project(reorder_joins(node.input, sv), node.names)
-    if isinstance(node, A.Distinct):
-        return A.Distinct(reorder_joins(node.input, sv))
-    if isinstance(node, A.Reduced):
-        return A.Reduced(reorder_joins(node.input, sv))
-    if isinstance(node, A.Group):
-        return A.Group(reorder_joins(node.input, sv), node.keys, node.aggs)
-    if isinstance(node, A.OrderBy):
-        return A.OrderBy(reorder_joins(node.input, sv), node.keys)
-    if isinstance(node, A.Slice):
-        return A.Slice(reorder_joins(node.input, sv), node.limit, node.offset)
-    if isinstance(node, A.ArbitraryLengthPath):
-        return A.ArbitraryLengthPath(
-            node.s, node.o, reorder_joins(node.path, sv), node.start_var,
-            node.end_var, node.min_length, node.graph_mode, node.graph,
-        )
     if isinstance(node, A.Service):
         # the sub-pattern executes against the SERVICE's own dataset:
         # reorder its joins, but drop the star catalog — property
         # tables describe the OUTER dataset and must not fuse into a
         # foreign one
-        return A.Service(node.iri, reorder_joins(node.pattern, None), node.silent)
-    return node
+        sv = None
+    return A.map_node(
+        node, lambda n: reorder_joins(n, sv), lambda e: _reorder_expr(e, sv)
+    )
 
 
 def _reorder_expr(e, sv=None):
-    """Recurse into every expression container that can hold an EXISTS."""
-    if isinstance(e, A.EExists):
-        return A.EExists(reorder_joins(e.pattern, sv), e.negated)
-    if isinstance(e, A.EAnd):
-        return A.EAnd(_reorder_expr(e.left, sv), _reorder_expr(e.right, sv))
-    if isinstance(e, A.EOr):
-        return A.EOr(_reorder_expr(e.left, sv), _reorder_expr(e.right, sv))
-    if isinstance(e, A.ENot):
+    """Reorder the joins of every EXISTS pattern inside ``e``."""
+    if isinstance(e, A.ENot) and isinstance(e.arg, A.EExists):
         # !EXISTS{} == NOT EXISTS{} (EXISTS never errors, so 3VL negation
         # collapses) — normalizing here lets the compiler's top-level
         # semi/anti-join path handle it instead of raising.
-        if isinstance(e.arg, A.EExists):
-            return A.EExists(reorder_joins(e.arg.pattern, sv), not e.arg.negated)
-        return A.ENot(_reorder_expr(e.arg, sv))
-    if isinstance(e, A.ECall):
-        return A.ECall(e.name, tuple(_reorder_expr(a, sv) for a in e.args))
-    if isinstance(e, A.ECmp):
-        return A.ECmp(e.op, _reorder_expr(e.left, sv), _reorder_expr(e.right, sv))
-    if isinstance(e, A.EArith):
-        return A.EArith(e.op, _reorder_expr(e.left, sv), _reorder_expr(e.right, sv))
-    if isinstance(e, A.ENeg):
-        return A.ENeg(_reorder_expr(e.arg, sv))
-    if isinstance(e, A.EIn):
-        return A.EIn(_reorder_expr(e.arg, sv),
-                     tuple(_reorder_expr(x, sv) for x in e.options), e.negated)
-    return e
+        e = A.EExists(e.arg.pattern, not e.arg.negated)
+    if isinstance(e, A.EExists):
+        return A.EExists(reorder_joins(e.pattern, sv), e.negated)
+    return A.map_expr(e, lambda x: _reorder_expr(x, sv))

@@ -11,7 +11,7 @@ implicit grouping, blank nodes in patterns -> fresh non-projectable vars.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 
 from .. import algebra as A
 from ..terms import (
@@ -531,7 +531,7 @@ class Parser:
                 if e not in agg_exprs:
                     agg_exprs[e] = self.fresh_var("agg")
                 return
-            for child in _expr_children(e):
+            for child in A.expr_children(e):
                 collect(child)
 
         for p in select_exprs:
@@ -638,7 +638,7 @@ class Parser:
                 self.next()
                 join(self.parse_values_body())
             elif self.at_kw("SERVICE"):
-                # upgrade (r13): executes against a dataset registered
+                # upgrade: executes against a dataset registered
                 # via execute_sparql(services={iri: quads}); an
                 # unregistered endpoint reproduces the reference's
                 # federation throw (README.md:69-70,
@@ -1065,78 +1065,34 @@ def _numeric_term(text: str) -> Term:
     return Term(2, text, XSD_INTEGER)
 
 
-def _expr_children(e):
-    if isinstance(e, A.ECall):
-        return e.args
-    if isinstance(e, (A.EAnd, A.EOr, A.ECmp, A.EArith)):
-        return (e.left, e.right)
-    if isinstance(e, (A.ENot, A.ENeg)):
-        return (e.arg,)
-    if isinstance(e, A.EIn):
-        return (e.arg, *e.options)
-    return ()
-
-
 def _replace_aggs(e, mapping):
     if isinstance(e, A.EAgg):
         return A.EVar(mapping[e])
-    if isinstance(e, A.ECall):
-        return A.ECall(e.name, tuple(_replace_aggs(a, mapping) for a in e.args))
-    if isinstance(e, A.EAnd):
-        return A.EAnd(_replace_aggs(e.left, mapping), _replace_aggs(e.right, mapping))
-    if isinstance(e, A.EOr):
-        return A.EOr(_replace_aggs(e.left, mapping), _replace_aggs(e.right, mapping))
-    if isinstance(e, A.ECmp):
-        return A.ECmp(e.op, _replace_aggs(e.left, mapping), _replace_aggs(e.right, mapping))
-    if isinstance(e, A.EArith):
-        return A.EArith(e.op, _replace_aggs(e.left, mapping), _replace_aggs(e.right, mapping))
-    if isinstance(e, A.ENot):
-        return A.ENot(_replace_aggs(e.arg, mapping))
-    if isinstance(e, A.ENeg):
-        return A.ENeg(_replace_aggs(e.arg, mapping))
-    if isinstance(e, A.EIn):
-        return A.EIn(
-            _replace_aggs(e.arg, mapping),
-            tuple(_replace_aggs(o, mapping) for o in e.options),
-            e.negated,
-        )
-    return e
+    return A.map_expr(e, lambda x: _replace_aggs(x, mapping))
 
 
 def _apply_graph(node: A.Node, g) -> A.Node:
-    """Push a GRAPH context onto every default-graph pattern inside
-    (reference handles this via the context Var rdf4j sets on
-    StatementPatterns — Interpreter.scala:215, 248-255)."""
-    if isinstance(node, A.StatementPattern) and node.graph_mode == "default":
-        return A.StatementPattern(node.s, node.p, node.o, "named", g)
-    if isinstance(node, A.ZeroLengthPath) and node.graph_mode == "default":
-        return A.ZeroLengthPath(node.s, node.o, "named", g)
-    if isinstance(node, A.ArbitraryLengthPath) and node.graph_mode == "default":
-        return A.ArbitraryLengthPath(
-            node.s, node.o, _apply_graph(node.path, g), node.start_var,
-            node.end_var, node.min_length, "named", g,
-        )
-    if isinstance(node, A.Join):
-        return A.Join(_apply_graph(node.left, g), _apply_graph(node.right, g))
-    if isinstance(node, A.LeftJoin):
-        return A.LeftJoin(_apply_graph(node.left, g), _apply_graph(node.right, g), node.condition)
-    if isinstance(node, A.Minus):
-        return A.Minus(_apply_graph(node.left, g), _apply_graph(node.right, g))
-    if isinstance(node, A.Union):
-        return A.Union(_apply_graph(node.left, g), _apply_graph(node.right, g))
-    if isinstance(node, A.Filter):
-        return A.Filter(_apply_graph(node.input, g), _apply_graph_expr(node.condition, g))
-    if isinstance(node, A.Extend):
-        return A.Extend(_apply_graph(node.input, g), node.var, node.expr)
-    if isinstance(node, (A.Project, A.Distinct, A.Reduced, A.Group, A.OrderBy, A.Slice)):
-        return node  # subselect: its own scope, GRAPH does not leak inside
-    return node
+    """Push a GRAPH context onto every default-graph pattern inside,
+    including the patterns of every EXISTS (reference handles this via
+    the context Var rdf4j sets on StatementPatterns —
+    Interpreter.scala:215, 248-255). A subselect and a SERVICE keep
+    their own scope: GRAPH does not leak inside, so a subselect reads
+    the union default graph (SPARQL §18.6 would evaluate it against
+    the active graph; a documented deviation)."""
+    if isinstance(
+        node,
+        (A.Project, A.Distinct, A.Reduced, A.Group, A.OrderBy, A.Slice, A.Service),
+    ):
+        return node
+    if getattr(node, "graph_mode", None) == "default":
+        node = replace(node, graph_mode="named", graph=g)
 
+    def fe(e):
+        if isinstance(e, A.EExists):
+            return A.EExists(_apply_graph(e.pattern, g), e.negated)
+        return A.map_expr(e, fe)
 
-def _apply_graph_expr(e, g):
-    if isinstance(e, A.EExists):
-        return A.EExists(_apply_graph(e.pattern, g), e.negated)
-    return e
+    return A.map_node(node, lambda n: _apply_graph(n, g), fe)
 
 
 def parse_query(text: str) -> Query:

@@ -152,3 +152,22 @@ def test_exists_nested_in_or_filter(spark):
     SELECT ?s WHERE { ?s :p ?v . FILTER(EXISTS { ?s :q ?w } || ?v > 2) }"""
     out = run_sparql(spark, EXISTS_BIND_TTL, q)
     assert {d["s"][0] for d in out} == {"urn:eb:a", "urn:eb:c"}
+
+
+def test_exists_in_optional_filter_names_unsupported_positions(spark):
+    """EXISTS in an OPTIONAL's FILTER (the LeftJoin ON clause) is not
+    compiled; the error names the positions that are not supported."""
+    import pytest
+
+    q = """
+    PREFIX : <urn:eb:>
+    SELECT ?s WHERE {
+      ?s :p ?v .
+      OPTIONAL { ?s :p ?o2 FILTER EXISTS { ?s :q ?x } }
+    }"""
+    with pytest.raises(
+        NotImplementedError,
+        match="not in an OPTIONAL's FILTER, a GROUP BY or ORDER BY "
+        "expression, or an aggregate argument",
+    ):
+        run_sparql(spark, EXISTS_BIND_TTL, q)

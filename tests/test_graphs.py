@@ -4,6 +4,8 @@ the union of all graphs (union-default-graph, Interpreter.scala:215);
 the ZeroOrOne-in-GRAPH test is skipped in the reference too (rdf4j oracle
 itself wrong — GraphsTest.scala:20-24)."""
 
+import pytest
+
 from .fixtures import GRAPHS_TRIG
 from .helpers import assert_bag_equal, iri, run_sparql, s
 
@@ -69,3 +71,36 @@ def test_values_and_named_graphs(spark):
             }
         ],
     )
+
+
+SCOPE_TRIG = """
+@prefix : <urn:x:> .
+<urn:g1> { :a :p 1 . }
+<urn:g2> { :a :q 2 . }
+"""
+XSD_BOOLEAN = "http://www.w3.org/2001/XMLSchema#boolean"
+A = iri("urn:x:a")
+
+
+@pytest.mark.parametrize(
+    "body, expected",
+    [
+        ("FILTER EXISTS { ?s :q ?x }", []),
+        ("FILTER NOT EXISTS { ?s :q ?x }", [{"s": A}]),
+        ("FILTER (EXISTS { ?s :q ?x } && ?o = 1)", []),
+        ("FILTER (!EXISTS { ?s :q ?x })", [{"s": A}]),
+        ("FILTER (?o = 1 && NOT EXISTS { ?s :q ?x })", [{"s": A}]),
+        (
+            "BIND(EXISTS { ?s :q ?x } AS ?e)",
+            [{"s": A, "e": s("false", XSD_BOOLEAN)}],
+        ),
+    ],
+)
+def test_graph_scopes_every_exists(spark, body, expected):
+    """An EXISTS inside GRAPH <g> matches <g>, wherever it sits in the
+    FILTER or BIND expression: :a has :q only in <urn:g2>."""
+    proj = "?s ?e" if "BIND" in body else "?s"
+    q = f"""
+    PREFIX : <urn:x:>
+    SELECT {proj} WHERE {{ GRAPH <urn:g1> {{ ?s :p ?o {body} }} }}"""
+    assert_bag_equal(run_sparql(spark, SCOPE_TRIG, q), expected)

@@ -97,6 +97,33 @@ def test_with_graph_and_graph_blocks(spark):
     assert _values(_select(out, "SELECT ?v WHERE { ?s :p ?v }"), "v") == ["1", "2"]
 
 
+def test_with_graph_scopes_nested_exists(spark):
+    """WITH <g> scopes an EXISTS nested under && too: :a has :q only in
+    <urn:g2>, so nothing matches and both quads stay."""
+    store = quads_df_from_list(
+        spark,
+        parse_turtle("""
+        @prefix : <urn:u:> .
+        <urn:g1> { :a :p 1 . }
+        <urn:g2> { :a :q 2 . }
+        """),
+    )
+    out = execute_update(
+        store,
+        "PREFIX : <urn:u:> WITH <urn:g1> DELETE { ?s :p ?o } "
+        "WHERE { ?s :p ?o FILTER (?o = 1 && EXISTS { ?s :q ?x }) }",
+    )
+    rows = {
+        (r["subject"]["lex"], r["predicate"]["lex"], r["graph"]["lex"])
+        for r in out.collect()
+    }
+    assert rows == {
+        ("urn:u:a", "urn:u:p", "urn:g1"),
+        ("urn:u:a", "urn:u:q", "urn:g2"),
+    }
+    assert out.count() == 2
+
+
 def test_sequence_and_clear(spark):
     out = execute_update(
         _store(spark),
