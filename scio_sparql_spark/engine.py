@@ -19,15 +19,8 @@ from .checkpoints import CheckpointScope
 from .compiler import compile_query
 from .optimize import reorder_joins
 from .sparql.parser import parse_query
-from .terms import (
-    KIND_BNODE,
-    KIND_IRI,
-    KIND_LITERAL,
-    TERM_TYPE,
-    Term,
-    bnode_term,
-    null_term,
-)
+from .terms import KIND_BNODE, TERM_TYPE, Term
+from .update import _instantiate
 
 
 def execute_sparql(
@@ -35,7 +28,6 @@ def execute_sparql(
     query: str,
     bindings: dict | None = None,
     star_tables=None,
-    construct_reduced: bool = False,
     services: dict | None = None,
 ) -> DataFrame:
     """Run a SPARQL 1.1 query over a quads DataFrame.
@@ -43,14 +35,20 @@ def execute_sparql(
     SELECT returns one term-struct column per projected variable. The
     other three forms (upgrades — the reference parses only tuple
     queries, Interpreter.scala:196-201) return:
-    ASK -> single-row ``ask: boolean``; CONSTRUCT / DESCRIBE -> triples
-    as term-struct columns ``s, p, o``.
+    ASK -> single-row ``ask: boolean``; CONSTRUCT / DESCRIBE -> a set of
+    triples (no duplicates) as term-struct columns ``s, p, o``. All
+    four forms take the solution modifiers (ORDER BY, LIMIT, OFFSET,
+    ...). A CONSTRUCT template takes the same triples syntax as an
+    update template, without GRAPH; its blank nodes are fresh per
+    solution.
 
     ``bindings`` maps variable name -> Term (plain str/int/float/bool
-    coerce to literals) and restricts solutions on the
-    projected variables (the reference splices initial bindings into the
-    query text pre-parse — Interpreter.scala:191-205; joining a one-row
-    VALUES at the algebra level is the injection-safe equivalent).
+    coerce to literals) and restricts solutions on the projected
+    variables; a CONSTRUCT template variable or a DESCRIBE target takes
+    its binding even where WHERE leaves it unbound (the reference
+    splices initial bindings into the query text pre-parse —
+    Interpreter.scala:191-205; joining a one-row VALUES at the algebra
+    level is the injection-safe equivalent).
 
     ``services`` maps SERVICE endpoint IRIs to quads DataFrames: the
     federated sub-pattern executes against the registered dataset
@@ -104,7 +102,7 @@ def execute_sparql(
             (F.col("n") > 0).alias("ask")
         )
     if q.form == "construct":
-        return _construct(df, q.template, dedup=not construct_reduced)
+        return _construct(df, q.template)
     if q.form == "describe":
         return _describe(df, q.template, quads)
     return df
@@ -134,51 +132,21 @@ def _apply_dataset(quads: DataFrame, frm: tuple, named: tuple) -> DataFrame:
     return out
 
 
-def _construct(df: DataFrame, template: tuple, dedup: bool = True) -> DataFrame:
-    """Instantiate template triples per solution; invalid triples (unbound
-    position, literal subject, non-IRI predicate) are dropped per spec
-    §16.2. Template bnode labels mint a fresh bnode per solution row.
+def _construct(df: DataFrame, template: tuple) -> DataFrame:
+    """Instantiate the template per solution (update._instantiate: invalid
+    triples are dropped per spec §16.2, template bnodes mint a fresh
+    bnode per solution) and return the set of triples: fresh bnodes
+    never collide, so the dedup only merges ground duplicates."""
+    return _triples(_instantiate(df, template, None)).dropDuplicates()
 
-    ``dedup=False`` (execute_sparql's ``construct_reduced``) skips the
-    final global ``dropDuplicates``: RDF graph semantics demand a set of
-    triples, but that dedup is a full shuffle of the OUTPUT — for a huge
-    template cross a huge solution set it can dominate the query. The
-    REDUCED-style escape hatch returns a bag with possible duplicate
-    triples (harmless to any consumer that treats triples as a set,
-    e.g. loading into a store that dedups on write)."""
-    has_bnodes = any(
-        isinstance(v, tuple) for spo in template for v in spo
+
+def _triples(quads: DataFrame) -> DataFrame:
+    """The ``s, p, o`` columns CONSTRUCT and DESCRIBE return."""
+    return quads.select(
+        F.col("subject").alias("s"),
+        F.col("predicate").alias("p"),
+        F.col("object").alias("o"),
     )
-    if has_bnodes:
-        df = df.withColumn("__rid", F.monotonically_increasing_id())
-    parts = []
-    for s, p, o in template:
-        cols = []
-        for name, val in (("s", s), ("p", p), ("o", o)):
-            if isinstance(val, A.Var):
-                c = F.col(val.name) if val.name in df.columns else null_term()
-            elif isinstance(val, Term):
-                c = val.to_column()
-            else:  # ("bnode", label)
-                c = bnode_term(
-                    F.concat(F.lit(f"c_{val[1]}_"), F.col("__rid").cast("string"))
-                )
-            cols.append(c.alias(name))
-        parts.append(df.select(*cols))
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    valid = (
-        F.col("s").isNotNull()
-        & (F.col("s")["kind"] != KIND_LITERAL)
-        & F.col("p").isNotNull()
-        & (F.col("p")["kind"] == KIND_IRI)
-        & F.col("o").isNotNull()
-    )
-    # graph (set) semantics — but fresh bnodes never collide, so dedup
-    # only affects ground duplicates
-    out = out.filter(valid)
-    return out.dropDuplicates() if dedup else out
 
 
 def _describe(df: DataFrame, targets: tuple, quads: DataFrame) -> DataFrame:
@@ -201,11 +169,7 @@ def _describe(df: DataFrame, targets: tuple, quads: DataFrame) -> DataFrame:
         else:
             parts.append(spark.range(1).select(tgt.to_column().alias("r")))
     if not parts:
-        return quads.select(
-            F.col("subject").alias("s"),
-            F.col("predicate").alias("p"),
-            F.col("object").alias("o"),
-        ).limit(0)
+        return _triples(quads).limit(0)
     res = parts[0]
     for part in parts[1:]:
         res = res.unionByName(part)
@@ -222,15 +186,9 @@ def _describe(df: DataFrame, targets: tuple, quads: DataFrame) -> DataFrame:
         # warehouse can name millions of resources), so it goes through
         # a plain equi-join and AQE picks the strategy from its size.
         side = F.broadcast(frontier) if small else frontier
-        return (
+        return _triples(
             quads.join(side, quads["subject"] == frontier["r"])
-            .select(
-                F.col("subject").alias("s"),
-                F.col("predicate").alias("p"),
-                F.col("object").alias("o"),
-            )
-            .dropDuplicates()
-        )
+        ).dropDuplicates()
 
     out = outgoing(res, small=not has_var_targets)
     seen = res

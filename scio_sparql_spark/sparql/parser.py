@@ -1,4 +1,4 @@
-"""SPARQL 1.1 SELECT parser -> algebra.
+"""SPARQL 1.1 query parser (SELECT, ASK, CONSTRUCT, DESCRIBE) -> algebra.
 
 Replaces rdf4j's parser+algebra (the reference consumes
 ``QueryParserUtil.parseTupleQuery(...).getTupleExpr`` —
@@ -11,6 +11,7 @@ implicit grouping, blank nodes in patterns -> fresh non-projectable vars.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, replace
 
 from .. import algebra as A
@@ -88,12 +89,47 @@ class Query:
     # only tuple/SELECT queries — Interpreter.scala:196-201; the other three
     # forms are strict upgrades)
     form: str = "select"
-    # construct: tuple of (s, p, o) template triples where each position is
-    # A.Var | Term | ("bnode", label); describe: tuple of A.Var | Term targets
+    # construct: tuple of QuadPattern (g is always None; a template
+    # bnode is an is_bnode_var Var); describe: tuple of A.Var | Term targets
     template: tuple = ()
     # explicit dataset: (FROM iri strings, FROM NAMED iri strings);
     # both empty = no dataset clause (union-default semantics)
     dataset: tuple = ((), ())
+
+
+@dataclass(frozen=True)
+class QuadPattern:
+    """One quad slot in a CONSTRUCT template or an update's data block or
+    template. s/p/o: Term | A.Var; g: None (default graph) | Term (IRI)
+    | A.Var (GRAPH ?g templates)."""
+
+    s: object
+    p: object
+    o: object
+    g: object = None
+
+
+def is_bnode_var(v) -> bool:
+    """A Var the parser minted for a blank node: ``__b_<label>`` for a
+    labelled ``_:label``, ``__b<N>`` (``fresh_var("b")``) for ``[]``. No
+    other minted tag starts with ``__b`` followed by ``_`` or a digit."""
+    return isinstance(v, A.Var) and bool(re.match(r"^__b(_|\d)", v.name))
+
+
+def bgp(patterns) -> A.Node:
+    """The basic graph pattern that matches a template's quads: a
+    left-deep Join of StatementPatterns, Singleton when empty."""
+    node: A.Node | None = None
+    for qp in patterns:
+        sp = A.StatementPattern(
+            qp.s,
+            qp.p,
+            qp.o,
+            graph_mode="named" if qp.g is not None else "default",
+            graph=qp.g,
+        )
+        node = sp if node is None else A.Join(node, sp)
+    return node if node is not None else A.Singleton()
 
 
 class Parser:
@@ -270,97 +306,30 @@ class Parser:
         dataset = self.parse_dataset()
         if self.at_kw("WHERE"):
             self.next()
-        G = self.parse_ggp()
-        return Query(G, ["ask"], form="ask", dataset=dataset)
+        return self._solutions_query("ask", (), self.parse_ggp(), dataset)
 
     def parse_construct_query(self) -> Query:
         self.eat_kw("CONSTRUCT")
-        dataset = ((), ())
         if self.at_op("{"):
-            template = self.parse_template()
+            template = self._construct_template()
             dataset = self.parse_dataset()
             if self.at_kw("WHERE"):
                 self.next()
-            G = self.parse_ggp()
+            where = self.parse_ggp()
         else:
             # short form: CONSTRUCT [dataset] WHERE { <template = pattern> }
             dataset = self.parse_dataset()
             self.eat_kw("WHERE")
-            template = self.parse_template()
-            G: A.Node = A.Singleton()
-            for s, p, o in template:
-                sp = A.StatementPattern(
-                    self._template_pos_to_pattern(s),
-                    self._template_pos_to_pattern(p),
-                    self._template_pos_to_pattern(o),
-                )
-                G = sp if isinstance(G, A.Singleton) else A.Join(G, sp)
-        limit = offset = None
-        while self.at_kw("LIMIT", "OFFSET"):
-            kw = self.eat_kw("LIMIT", "OFFSET")
-            n = self.next()
-            if n.kind != "NUMBER":
-                raise SyntaxError(f"expected number after {kw} at {n.pos}")
-            if kw == "LIMIT":
-                limit = int(n.value)
-            else:
-                offset = int(n.value)
-        if limit is not None or offset:
-            G = A.Slice(G, limit, offset or 0)
-        return Query(
-            G, ["s", "p", "o"], form="construct", template=tuple(template), dataset=dataset
-        )
+            template = self._construct_template()
+            where = bgp(template)
+        return self._solutions_query("construct", template, where, dataset)
 
-    @staticmethod
-    def _template_pos_to_pattern(v):
-        if isinstance(v, tuple) and v and v[0] == "bnode":
-            return A.Var("__b_" + v[1])
-        return v
-
-    def parse_template(self) -> list:
-        """``{ s p o ; p2 o2 , o3 . ... }`` — plain triples only (vars,
-        IRIs, literals, bnode labels); no paths/brackets/collections."""
-        self.eat_op("{")
-        triples: list = []
-        while not self.at_op("}"):
-            s = self.parse_template_node()
-            while True:
-                p = self.parse_template_verb()
-                while True:
-                    o = self.parse_template_node()
-                    triples.append((s, p, o))
-                    if not self.try_op(","):
-                        break
-                if not self.try_op(";"):
-                    break
-            if not self.try_op("."):
-                break
-        self.eat_op("}")
-        return triples
-
-    def parse_template_node(self):
+    def _construct_template(self) -> tuple:
         t = self.peek()
-        if t.kind == "BLANK":
-            self.next()
-            return ("bnode", t.value)
-        if t.kind == "VAR":
-            self.next()
-            self.note_var(t.value)
-            return A.Var(t.value)
-        if t.kind in ("IRIREF", "PNAME"):
-            return self.parse_iri()
-        return self.parse_literal()
-
-    def parse_template_verb(self):
-        t = self.peek()
-        if t.kind == "VAR":
-            self.next()
-            self.note_var(t.value)
-            return A.Var(t.value)
-        if t.kind == "KEYWORD" and t.value == "a":
-            self.next()
-            return Term.iri(RDF_TYPE)
-        return self.parse_iri()
+        template = self.parse_quad_block()
+        if any(qp.g is not None for qp in template):
+            raise SyntaxError(f"GRAPH is not allowed in a CONSTRUCT template at {t.pos}")
+        return template
 
     def parse_describe_query(self) -> Query:
         self.eat_kw("DESCRIBE")
@@ -380,16 +349,34 @@ class Parser:
             if not targets:
                 raise SyntaxError(f"expected var/IRI/* after DESCRIBE at {t.pos}")
         dataset = self.parse_dataset()
-        G: A.Node = A.Singleton()
+        where: A.Node = A.Singleton()
         if self.at_kw("WHERE") or self.at_op("{"):
             if self.at_kw("WHERE"):
                 self.next()
-            G = self.parse_ggp()
+            where = self.parse_ggp()
         if star:
-            targets = [A.Var(v) for v in sorted(G.vars) if not v.startswith("__")]
-        return Query(
-            G, ["s", "p", "o"], form="describe", template=tuple(targets), dataset=dataset
+            targets = [A.Var(v) for v in sorted(where.vars) if not v.startswith("__")]
+        return self._solutions_query("describe", tuple(targets), where, dataset)
+
+    def _solutions_query(self, form, template, where, dataset) -> Query:
+        """ASK, CONSTRUCT and DESCRIBE read the solutions of ``where``
+        under the same solution modifiers as SELECT, projected to the
+        variables the form reads: the template's, the described ones,
+        none for ASK. Projecting them (not ``*``) lets an initial
+        binding of one that ``where`` leaves unbound reach the form."""
+        reads = template
+        if form == "construct":
+            reads = [v for qp in template for v in (qp.s, qp.p, qp.o)]
+        proj = [
+            ("var", v.name)
+            for v in dict.fromkeys(reads)
+            if isinstance(v, A.Var) and not is_bnode_var(v)
+        ]
+        q = self.assemble(
+            None, proj, where, *self.parse_solution_modifier(), dataset
         )
+        visible = ["ask"] if form == "ask" else ["s", "p", "o"]
+        return Query(q.algebra, visible, form, template, dataset)
 
     def parse_prologue(self):
         while self.at_kw("PREFIX", "BASE"):
@@ -442,7 +429,14 @@ class Parser:
         if self.at_kw("WHERE"):
             self.next()
         where = self.parse_ggp()
+        return self.assemble(
+            modifier, proj, where, *self.parse_solution_modifier(), dataset
+        )
 
+    def parse_solution_modifier(self) -> tuple:
+        """``GROUP BY``, ``HAVING``, ``ORDER BY``, ``LIMIT``, ``OFFSET``
+        and a trailing ``VALUES`` -> the (group_keys, having, order,
+        limit, offset, values_clause) arguments of ``assemble``."""
         group_keys = None
         having = None
         order = None
@@ -515,7 +509,7 @@ class Parser:
             else:
                 break
 
-        return self.assemble(modifier, proj, where, group_keys, having, order, limit, offset, values_clause, dataset)
+        return group_keys, having, order, limit, offset, values_clause
 
     # --- assembly (spec §18.2.4) ---
     def assemble(self, modifier, proj, where, group_keys, having, order, limit, offset, values_clause, dataset=((), ())) -> Query:
@@ -728,6 +722,64 @@ class Parser:
             if stop or self.at_op("{"):
                 break
         return node if node is not None else A.Singleton()
+
+    def parse_quad_block(self) -> tuple:
+        """``{ TriplesTemplate? (GRAPH VarOrIri { TriplesTemplate? } .?)* }``
+        -> tuple of QuadPattern. Triples reuse the pattern parser, so
+        ``a``, ``;``/``,`` lists, ``[ ... ]`` blank nodes and typed
+        literals all work; anything that does not lower to plain
+        statement patterns (property paths, collections) is rejected."""
+        self.eat_op("{")
+        out: list = []
+        while not self.at_op("}"):
+            if self.at_kw("GRAPH"):
+                self.next()
+                t = self.peek()
+                if t.kind == "VAR":
+                    self.next()
+                    self.note_var(t.value)
+                    g = A.Var(t.value)
+                else:
+                    g = self.parse_iri()
+                self.eat_op("{")
+                if not self.at_op("}"):
+                    node = self.parse_triples_block()
+                    out.extend(self._collect_sps(node, g))
+                self.eat_op("}")
+                self.try_op(".")
+            else:
+                node = self.parse_triples_block()
+                out.extend(self._collect_sps(node, None))
+        self.eat_op("}")
+        return tuple(out)
+
+    def _collect_sps(self, node: A.Node, g) -> list:
+        if isinstance(node, A.Singleton):
+            return []
+        if isinstance(node, A.StatementPattern):
+            for v in (node.s, node.p, node.o):
+                # a parser-minted variable that is not a blank node means
+                # the surface syntax was a property path or collection —
+                # both are query-side sugar, illegal in quad data/templates
+                if (
+                    isinstance(v, A.Var)
+                    and v.name.startswith("__")
+                    and not is_bnode_var(v)
+                ):
+                    raise SyntaxError(
+                        "only plain triples are allowed in quad data/"
+                        "templates (property paths and collections are "
+                        "query-side syntax)"
+                    )
+            return [QuadPattern(node.s, node.p, node.o, g)]
+        if isinstance(node, A.Join):
+            return self._collect_sps(node.left, g) + self._collect_sps(
+                node.right, g
+            )
+        raise SyntaxError(
+            f"only plain triples are allowed in quad data/templates, got "
+            f"{type(node).__name__} (property paths are query-side syntax)"
+        )
 
     def parse_collection_pattern(self):
         """``( e1 e2 ... )`` in a pattern -> rdf:first/rest chain over

@@ -10,8 +10,10 @@ sequential operations thread it).
 
 Supported operations (one UpdateOp dataclass each):
   INSERT DATA / DELETE DATA           (ground quads)
-  DELETE WHERE                        (pattern doubles as template)
-  [WITH <g>] DELETE {} INSERT {} WHERE {}   (either template optional)
+  [WITH <g>] DELETE {} INSERT {} WHERE {}   (Modify; either template
+                                       optional. DELETE WHERE {P} is
+                                       Modify(P, (), bgp(P)): the
+                                       pattern doubles as the template)
   CLEAR / DROP   [SILENT] (GRAPH <g> | DEFAULT | NAMED | ALL)
   CREATE         [SILENT] GRAPH <g>   (no-op: graph existence is not
                                        tracked — empty graphs are not
@@ -19,34 +21,24 @@ Supported operations (one UpdateOp dataclass each):
   ADD / COPY / MOVE [SILENT] src TO dst
   LOAD           [SILENT] <url> [INTO GRAPH <g>]
 
+Templates and data blocks are parsed by ``Parser.parse_quad_block``,
+the same code that parses a CONSTRUCT template.
+
 Not supported (explicit parse-time errors): USING/USING NAMED on
 modify operations, and blank-node labels inside DELETE templates
 (forbidden by the spec) or quad DATA blocks (pass materialized IRIs
 instead). Blank nodes in INSERT templates ARE supported: they mint a
-fresh node per solution during instantiation (update.py _instantiate,
-spec §3.1.3.2).
+fresh node per solution (update.py ``_instantiate``, spec §3.1.3.2).
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 from typing import Optional
 
 from .. import algebra as A
 from ..terms import Term
-from .parser import Parser, _apply_graph
-
-
-@dataclass(frozen=True)
-class QuadPattern:
-    """One quad slot in a data block or template. s/p/o: Term | A.Var;
-    g: None (default graph) | Term (IRI) | A.Var (GRAPH ?g templates)."""
-
-    s: object
-    p: object
-    o: object
-    g: object = None
+from .parser import Parser, _apply_graph, bgp, is_bnode_var
 
 
 @dataclass(frozen=True)
@@ -57,11 +49,6 @@ class InsertData:
 @dataclass(frozen=True)
 class DeleteData:
     quads: tuple
-
-
-@dataclass(frozen=True)
-class DeleteWhere:
-    patterns: tuple
 
 
 @dataclass(frozen=True)
@@ -99,21 +86,9 @@ class Load:
     silent: bool = False
 
 
-def _is_bnode_var(v) -> bool:
-    # labeled bnodes parse to __b_<label>; anonymous [] to __b<N>
-    # (parser.fresh_var("b")). No other parser-minted tag starts with
-    # "__b" followed by "_" or a digit (gk/agg/col/p/np/aps/ape).
-    return isinstance(v, A.Var) and bool(re.match(r"^__b(_|\d)", v.name))
-
-
-def is_bnode_var_name(name: str) -> bool:
-    """Shared predicate for template instantiation (update.py)."""
-    return bool(re.match(r"^__b(_|\d)", name))
-
-
 class UpdateParser(Parser):
     """Recursive-descent SPARQL Update parser sharing the query
-    parser's tokenizer, prologue, term, and pattern machinery."""
+    parser's tokenizer, prologue, term, pattern and template machinery."""
 
     def parse_update(self) -> list:
         ops: list = []
@@ -146,13 +121,8 @@ class UpdateParser(Parser):
                 return DeleteData(self._ground_quads("DELETE DATA"))
             if self.at_kw("WHERE"):
                 self.next()
-                pats = self.parse_quad_block()
-                for qp in pats:
-                    if any(_is_bnode_var(v) for v in (qp.s, qp.p, qp.o, qp.g)):
-                        raise SyntaxError(
-                            "blank node labels are not allowed in DELETE WHERE"
-                        )
-                return DeleteWhere(pats)
+                pats = _no_bnodes(self.parse_quad_block(), "DELETE WHERE")
+                return Modify(pats, (), bgp(pats))
             return self._parse_modify_tail(with_iri=None, saw_delete=True)
         if self.at_kw("WITH"):
             self.next()
@@ -206,11 +176,7 @@ class UpdateParser(Parser):
                 f"USING clauses are not supported at {t.pos} — select the "
                 "dataset by filtering the quads DataFrame before the update"
             )
-        for qp in delete:
-            if any(_is_bnode_var(v) for v in (qp.s, qp.p, qp.o, qp.g)):
-                raise SyntaxError(
-                    "blank node labels are not allowed in DELETE templates"
-                )
+        _no_bnodes(delete, "DELETE templates")
         self.eat_kw("WHERE")
         where = self.parse_ggp()
         if with_iri is not None:
@@ -247,76 +213,18 @@ class UpdateParser(Parser):
         return self.parse_iri().lex
 
     def _ground_quads(self, ctx: str) -> tuple:
-        quads = self.parse_quad_block()
+        quads = _no_bnodes(self.parse_quad_block(), ctx)
         for qp in quads:
             for v in (qp.s, qp.p, qp.o, qp.g):
-                if _is_bnode_var(v):
-                    raise SyntaxError(
-                        f"blank node labels are not supported in {ctx} — "
-                        "use materialized IRIs"
-                    )
                 if isinstance(v, A.Var):
                     raise SyntaxError(f"variable ?{v.name} not allowed in {ctx}")
         return quads
 
-    def parse_quad_block(self) -> tuple:
-        """``{ TriplesTemplate? (GRAPH VarOrIri { TriplesTemplate? } .?)* }``
-        -> tuple of QuadPattern. Triples reuse the pattern parser, so
-        ``a``, ``;``/``,`` lists, and typed literals all work; anything
-        that does not lower to plain statement patterns (property
-        paths) is rejected."""
-        self.eat_op("{")
-        out: list = []
-        while not self.at_op("}"):
-            if self.at_kw("GRAPH"):
-                self.next()
-                t = self.peek()
-                if t.kind == "VAR":
-                    self.next()
-                    self.note_var(t.value)
-                    g = A.Var(t.value)
-                else:
-                    g = self.parse_iri()
-                self.eat_op("{")
-                if not self.at_op("}"):
-                    node = self.parse_triples_block()
-                    out.extend(self._collect_sps(node, g))
-                self.eat_op("}")
-                self.try_op(".")
-            else:
-                node = self.parse_triples_block()
-                out.extend(self._collect_sps(node, None))
-        self.eat_op("}")
-        return tuple(out)
 
-    def _collect_sps(self, node: A.Node, g) -> list:
-        if isinstance(node, A.Singleton):
-            return []
-        if isinstance(node, A.StatementPattern):
-            for v in (node.s, node.p, node.o):
-                # a parser-minted variable (not a __b_ bnode label, which
-                # gets its own diagnostic downstream) means the surface
-                # syntax was a property path or collection — both are
-                # query-side sugar, illegal in quad data/templates
-                if (
-                    isinstance(v, A.Var)
-                    and v.name.startswith("__")
-                    and not _is_bnode_var(v)
-                ):
-                    raise SyntaxError(
-                        "only plain triples are allowed in quad data/"
-                        "templates (property paths and collections are "
-                        "query-side syntax)"
-                    )
-            return [QuadPattern(node.s, node.p, node.o, g)]
-        if isinstance(node, A.Join):
-            return self._collect_sps(node.left, g) + self._collect_sps(
-                node.right, g
-            )
-        raise SyntaxError(
-            f"only plain triples are allowed in quad data/templates, got "
-            f"{type(node).__name__} (property paths are query-side syntax)"
-        )
+def _no_bnodes(quads: tuple, ctx: str) -> tuple:
+    if any(is_bnode_var(v) for qp in quads for v in (qp.s, qp.p, qp.o, qp.g)):
+        raise SyntaxError(f"blank node labels are not allowed in {ctx}")
+    return quads
 
 
 def parse_update(text: str) -> list:

@@ -17,10 +17,13 @@ Interpreter.scala:191-205). Scale notes:
   per-quad DataFrame — the store-side work is one broadcast anti-join
   (inserts dedup against the store; deletes subtract), never a full
   store shuffle.
-- DELETE WHERE / MODIFY: the WHERE compiles through the same engine as
-  queries (Catalyst plans, star rewrites are NOT used — updates see
-  raw quads); instantiated delete/insert quads then anti-join/union
+- MODIFY (DELETE WHERE included — it parses to a Modify whose WHERE is
+  its template's pattern): the WHERE compiles through the same engine
+  as queries (Catalyst plans, star rewrites are NOT used — updates see
+  raw quads); ``_instantiate`` (which also builds CONSTRUCT's triples)
+  turns solutions x templates into quads, which then anti-join/union
   the store. The store is only ever filtered/unioned — no global sort.
+- LOAD SILENT: a source that cannot be read leaves the store unchanged.
 - CLEAR/DROP/ADD/COPY/MOVE are pure column predicates + relabels.
 """
 
@@ -31,16 +34,14 @@ from pyspark.sql import DataFrame, functions as F
 from . import algebra as A
 from .checkpoints import CheckpointScope
 from .compiler import compile_query
+from .sparql.parser import is_bnode_var
 from .sparql.update import (
     DeleteData,
-    DeleteWhere,
     GraphManagement,
     GraphTransfer,
     InsertData,
     Load,
     Modify,
-    QuadPattern,
-    is_bnode_var_name,
     parse_update,
 )
 from .terms import (
@@ -100,11 +101,6 @@ def _apply(cp: CheckpointScope, cur: DataFrame, op) -> DataFrame:
         return _insert(cur, _ground_df(cur, op.quads))
     if isinstance(op, DeleteData):
         return _delete(cur, _ground_df(cur, op.quads))
-    if isinstance(op, DeleteWhere):
-        # materialize the WHERE solutions once; the template projection
-        # over the checkpoint is free to re-evaluate per join branch
-        sols = cp.checkpoint(_solutions(cur, _patterns_algebra(op.patterns)))
-        return _delete(cur, _instantiate(sols, op.patterns, None))
     if isinstance(op, Modify):
         # materialize the WHERE solutions once: delete AND insert
         # templates project from it, and each downstream join branch
@@ -137,13 +133,22 @@ def _apply(cp: CheckpointScope, cur: DataFrame, op) -> DataFrame:
     if isinstance(op, Load):
         from .sources.rio import read_triples
 
-        loaded = read_triples(cur.sparkSession, op.url.removeprefix("file://"))
-        loaded = loaded.select(*_COLS)
-        if op.graph is not None:
-            loaded = loaded.withColumn(
-                "graph", Term.iri(op.graph).to_column().alias("graph")
-            )
-        return _insert(cur, loaded, cp)
+        try:
+            loaded = read_triples(cur.sparkSession, op.url.removeprefix("file://"))
+            loaded = loaded.select(*_COLS)
+            if op.graph is not None:
+                loaded = loaded.withColumn(
+                    "graph", Term.iri(op.graph).to_column().alias("graph")
+                )
+            # _insert checkpoints the loaded side, so a source that fails
+            # only when read fails here too
+            return _insert(cur, loaded, cp)
+        except Exception:
+            # SPARQL 1.1 Update §3.1.4: SILENT turns a failed LOAD into a
+            # no-op
+            if op.silent:
+                return cur
+            raise
     raise AssertionError(f"unhandled update op {op!r}")
 
 
@@ -255,20 +260,6 @@ def _transfer(cp: CheckpointScope, cur: DataFrame, op) -> DataFrame:
 # --- WHERE evaluation + template instantiation ------------------------------
 
 
-def _patterns_algebra(patterns) -> A.Node:
-    node: A.Node | None = None
-    for qp in patterns:
-        sp = A.StatementPattern(
-            qp.s,
-            qp.p,
-            qp.o,
-            graph_mode="named" if qp.g is not None else "default",
-            graph=qp.g,
-        )
-        node = sp if node is None else A.Join(node, sp)
-    return node if node is not None else A.Singleton()
-
-
 def _solutions(quads: DataFrame, where: A.Node) -> DataFrame:
     names = tuple(sorted(where.vars))
     return compile_query(quads, A.Project(where, names))
@@ -278,11 +269,13 @@ def _instantiate(sols: DataFrame, templates, with_g) -> DataFrame:
     """Template quads x solutions -> quads DataFrame (plus an
     ``__any_graph`` flag: True on rows from a graph-less template with
     no WITH, which _delete matches against every graph — see _delete).
-    Invalid rows (unbound variable, literal subject/predicate/graph,
-    non-IRI predicate) are skipped per spec §3.1.3.2.
+    The one instantiator: update templates and CONSTRUCT templates
+    (engine._construct) both build their quads here. Invalid rows
+    (unbound variable, literal subject/predicate/graph, non-IRI
+    predicate) are skipped per spec §3.1.3.2 and §16.2.
 
-    Blank node labels in INSERT templates (parser-minted ``__b_`` vars)
-    mint a FRESH blank node per solution per spec §3.1.3.2: the same
+    Blank node labels in templates (parser-minted ``is_bnode_var``
+    vars) mint a FRESH blank node per solution per spec §3.1.3.2: the same
     label within one solution's template yields one node, different
     solutions yield distinct nodes. Minting always ignores any
     same-named WHERE binding — template bnode labels never read
@@ -295,7 +288,7 @@ def _instantiate(sols: DataFrame, templates, with_g) -> DataFrame:
         v.name
         for qp in templates
         for v in (qp.s, qp.p, qp.o, qp.g)
-        if isinstance(v, A.Var) and is_bnode_var_name(v.name)
+        if is_bnode_var(v)
     }
     if bnode_labels:
         sols = sols.withColumn("__row_id", F.monotonically_increasing_id())
@@ -327,6 +320,9 @@ def _instantiate(sols: DataFrame, templates, with_g) -> DataFrame:
             F.lit(qp.g is None and with_g is None).alias("__any_graph")
         )
         parts.append(sols.select(*cols))
+    if not parts:  # CONSTRUCT {}: an empty template yields no quads
+        cols = [null_term().alias(c) for c in _COLS]
+        return sols.select(*cols, F.lit(False).alias("__any_graph")).limit(0)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

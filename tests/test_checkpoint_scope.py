@@ -5,6 +5,7 @@ the session conf exactly as it found it."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import Row
 
 from scio_sparql_spark import (
@@ -119,7 +120,7 @@ def test_failed_loop_frees_every_checkpoint(spark, monkeypatch, loop):
             "DELETE { ?s :q ?o } WHERE { ?s :q ?o }",
             "LOAD <file:///nonexistent/store.nt>",
         ]
-        with pytest.raises(Exception, match="(?i)path|exist|found"):
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
             execute_update(quads, "PREFIX : <urn:x:>\n" + " ;\n".join(ops))
     else:
         run, method, fail_on = LOOPS[loop]
@@ -203,3 +204,23 @@ def test_retain_sees_checkpoint_read_only_by_subquery(spark):
         ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
     spark.catalog.dropTempView("scope_outer")
     spark.catalog.dropTempView("scope_inner")
+
+
+def test_load_silent_of_missing_source_is_a_no_op(spark):
+    """SPARQL 1.1 Update §3.1.4: LOAD SILENT of a source that cannot be
+    read leaves the store unchanged; without SILENT the request fails.
+    Neither pins a checkpoint."""
+    quads = _chain_quads(spark)
+    base = _pinned(spark)
+    want = sorted(quads.collect())
+    for url in ("file:///nonexistent/store.nt", "file:///nonexistent/x.ttl"):
+        out = execute_update(quads, f"LOAD SILENT <{url}>")
+        assert sorted(out.collect()) == want
+        out = execute_update(
+            quads,
+            f"PREFIX : <urn:x:> INSERT DATA {{ :z :p 1 }} ; LOAD SILENT <{url}>",
+        )
+        assert out.count() == len(want) + 1
+        with pytest.raises(Exception, match="(?i)path|exist|found"):
+            execute_update(quads, f"LOAD <{url}>")
+    assert _pinned(spark) - base == set()

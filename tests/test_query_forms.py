@@ -1,6 +1,8 @@
 """ASK / CONSTRUCT / DESCRIBE query forms (strict upgrades — the
 reference parses only tuple/SELECT queries, Interpreter.scala:196-201)."""
 
+import pytest
+
 from scio_sparql_spark import execute_sparql, parse_turtle, quads_df_from_list
 
 TTL = """
@@ -174,18 +176,11 @@ def test_describe_deep_bnode_chain_is_not_truncated(spark):
     assert len(got) == 21
 
 
-def test_construct_reduced_skips_dedup(spark):
-    from scio_sparql_spark import execute_sparql, parse_turtle, quads_df_from_list
-
+def test_construct_duplicate_statement_constructs_once(spark):
     ttl = "@prefix : <urn:x:> . :a :p 1 . :a :p 1 ."  # duplicate statement
     quads = quads_df_from_list(spark, parse_turtle(ttl))
     q = "PREFIX : <urn:x:> CONSTRUCT { ?s :q ?v } WHERE { ?s :p ?v }"
-    strict = execute_sparql(quads, q)
-    reduced = execute_sparql(quads, q, construct_reduced=True)
-    assert strict.count() == 1  # graph (set) semantics
-    assert reduced.count() == 2  # bag escape hatch keeps duplicates
-    plan = reduced._jdf.queryExecution().optimizedPlan().toString()
-    assert "Deduplicate" not in plan and "Aggregate" not in plan, plan
+    assert execute_sparql(quads, q).count() == 1  # graph (set) semantics
 
 
 def test_service_unregistered_raises_like_reference(spark):
@@ -244,3 +239,161 @@ def test_service_executes_against_registered_dataset(spark):
     # non-SILENT missing endpoint still throws
     with pytest.raises(NotImplementedError):
         execute_sparql(local, silent.replace("SILENT ", ""))
+
+
+# CONSTRUCT templates take the triples syntax of update templates, and
+# ASK / CONSTRUCT / DESCRIBE take the solution modifiers
+
+FORMS_TTL = """
+@prefix : <urn:x:> .
+:a :r 1 ; :t [ :q 1 ] .
+:b :r 2 ; :t [ :q 2 ] .
+"""
+
+
+def _forms_quads(spark):
+    return quads_df_from_list(spark, parse_turtle(FORMS_TTL))
+
+
+def _forms(spark, body, bindings=None):
+    return execute_sparql(
+        _forms_quads(spark), "PREFIX : <urn:x:> " + body, bindings=bindings
+    )
+
+
+def _by_bnode(df):
+    """(ground triples, the triples of each bnode with the bnode written
+    ``_``, the bnode labels) over local names: labels are opaque, so
+    triples are compared by content only."""
+
+    def name(t):
+        return "_" if t["kind"] == 0 else t["lex"].removeprefix("urn:x:")
+
+    ground, groups = set(), {}
+    for r in df.collect():
+        spo = (r["s"], r["p"], r["o"])
+        labels = {t["lex"] for t in spo if t["kind"] == 0}
+        assert len(labels) <= 1
+        triple = tuple(name(t) for t in spo)
+        if labels:
+            groups.setdefault(labels.pop(), set()).add(triple)
+        else:
+            ground.add(triple)
+    return ground, {frozenset(g) for g in groups.values()}, set(groups)
+
+
+@pytest.mark.parametrize(
+    "body, ground, groups",
+    [
+        (
+            "CONSTRUCT { ?s :p [ :q ?o ] } WHERE { ?s :r ?o }",
+            set(),
+            {
+                frozenset({("a", "p", "_"), ("_", "q", "1")}),
+                frozenset({("b", "p", "_"), ("_", "q", "2")}),
+            },
+        ),
+        (
+            "CONSTRUCT { ?s :p [] } WHERE { ?s :r ?o }",
+            set(),
+            {frozenset({("a", "p", "_")}), frozenset({("b", "p", "_")})},
+        ),
+        (
+            "CONSTRUCT { ?s :p ?o ; } WHERE { ?s :r ?o }",
+            {("a", "p", "1"), ("b", "p", "2")},
+            set(),
+        ),
+        (
+            # short form: the template is the pattern; its bnode is fresh
+            # per solution, not the matched data bnode
+            "CONSTRUCT WHERE { ?s :t [ :q ?o ] }",
+            set(),
+            {
+                frozenset({("a", "t", "_"), ("_", "q", "1")}),
+                frozenset({("b", "t", "_"), ("_", "q", "2")}),
+            },
+        ),
+    ],
+    ids=["bnode_props", "empty_bnode", "trailing_semicolon", "short_form"],
+)
+def test_construct_template_forms(spark, body, ground, groups):
+    got_ground, got_groups, labels = _by_bnode(_forms(spark, body))
+    assert got_ground == ground
+    assert got_groups == groups
+    assert len(labels) == len(groups)  # one fresh bnode per solution
+    data_bnodes = {
+        r["object"]["lex"]
+        for r in _forms_quads(spark).collect()
+        if r["object"]["kind"] == 0
+    }
+    assert not labels & data_bnodes
+
+
+@pytest.mark.parametrize(
+    "order, first",
+    [("?o", ("a", "p", "1")), ("DESC(?o)", ("b", "p", "2"))],
+    ids=["asc", "desc"],
+)
+def test_construct_order_by_limit(spark, order, first):
+    df = _forms(
+        spark, f"CONSTRUCT {{ ?s :p ?o }} WHERE {{ ?s :r ?o }} ORDER BY {order} LIMIT 1"
+    )
+    assert _by_bnode(df)[0] == {first}
+    df = _forms(
+        spark, f"CONSTRUCT {{ ?s :p ?o }} WHERE {{ ?s :r ?o }} ORDER BY {order} OFFSET 1"
+    )
+    assert _by_bnode(df)[0] == {("a", "p", "1"), ("b", "p", "2")} - {first}
+
+
+def test_describe_order_by_limit(spark):
+    df = _forms(spark, "DESCRIBE ?s WHERE { ?s :r ?o } ORDER BY DESC(?o) LIMIT 1")
+    ground, groups, _ = _by_bnode(df)
+    # :b's own triples plus its bnode's description
+    assert ground == {("b", "r", "2")}
+    assert groups == {frozenset({("b", "t", "_"), ("_", "q", "2")})}
+
+
+@pytest.mark.parametrize(
+    "body, answer",
+    [
+        ("ASK { ?s :r ?o } LIMIT 1", True),
+        ("ASK { ?s :r 3 } LIMIT 1", False),
+        ("ASK { ?s :r ?o } ORDER BY ?o OFFSET 1 LIMIT 1", True),
+        ("ASK { ?s :r ?o } OFFSET 2", False),
+    ],
+    ids=["limit", "limit_no_match", "order_offset_limit", "offset_past_end"],
+)
+def test_ask_solution_modifiers(spark, body, answer):
+    assert [r["ask"] for r in _forms(spark, body).collect()] == [answer]
+
+
+@pytest.mark.parametrize(
+    "template, message",
+    [
+        ("{ GRAPH :g { ?s :p ?o } }", "GRAPH is not allowed in a CONSTRUCT template"),
+        ("{ ?s :p/:q ?o }", "property paths"),
+        ("{ ?s :p+ ?o }", "property paths"),
+    ],
+    ids=["graph", "sequence_path", "plus_path"],
+)
+def test_construct_template_rejects_query_syntax(spark, template, message):
+    with pytest.raises(SyntaxError, match=message):
+        _forms(spark, f"CONSTRUCT {template} WHERE {{ ?s :r ?o }}")
+
+
+def test_construct_empty_template_returns_no_triples(spark):
+    df = _forms(spark, "CONSTRUCT {} WHERE { ?s :r ?o }")
+    assert df.columns == ["s", "p", "o"]
+    assert df.collect() == []
+
+
+def test_bindings_reach_template_and_describe_targets(spark):
+    """An initial binding of a template variable or a DESCRIBE target
+    that the WHERE leaves unbound still reaches the form."""
+    from scio_sparql_spark.terms import Term
+
+    a = {"x": Term.iri("urn:x:a")}
+    got = _forms(spark, "CONSTRUCT { ?s :q ?x } WHERE { ?s :r ?o }", a)
+    assert _by_bnode(got)[0] == {("a", "q", "a"), ("b", "q", "a")}
+    got = _by_bnode(_forms(spark, "DESCRIBE ?x", a))
+    assert got[0] == {("a", "r", "1")} and len(got[1]) == 1
