@@ -69,6 +69,9 @@ class Compiler:
     ):
         self.quads = quads
         self.star_catalog = star_catalog
+        # a bridge mapping over its own quads: constant row IRIs unfold
+        # to key filters on one table (sources.bridge.BridgeMapping)
+        self.unfold = star_catalog is not None and star_catalog.unfolds(quads)
         self.spark = quads.sparkSession
         # strict_default: an explicit FROM/FROM NAMED dataset is in force —
         # non-GRAPH patterns match only default-graph (graph IS NULL) rows
@@ -90,6 +93,10 @@ class Compiler:
 
     def _c_statementpattern(self, node: A.StatementPattern) -> DataFrame:
         df = self.quads
+        if self.unfold and node.graph_mode == "default":
+            rel = self.star_catalog.pattern_quads(node.s, node.p, node.o)
+            if rel is not None:
+                df = rel
         cond = F.lit(True)
         positions = [("subject", node.s), ("predicate", node.p), ("object", node.o)]
         if node.graph_mode == "named":
@@ -127,7 +134,7 @@ class Compiler:
         fall back to SortAggregate on its string-typed buffers). For
         relational-bridge quads the property table is the original
         parquet row, so the star costs exactly one narrow columnar
-        scan."""
+        scan, keyed by the star's constant FK objects when they unfold."""
         pt = (
             self.star_catalog.table_for([p.lex for p, _ in node.items])
             if self.star_catalog is not None
@@ -147,9 +154,8 @@ class Compiler:
                 cond = cond & (sel[o.name] == c)
             else:
                 sel[o.name] = c
-        return pt.df.filter(cond).select(
-            *[c.alias(v) for v, c in sel.items()]
-        )
+        rows = self.star_catalog.star_rows(pt, node.items) if self.unfold else pt.df
+        return rows.filter(cond).select(*[c.alias(v) for v, c in sel.items()])
 
     @staticmethod
     def _term_eq_col(c: Column, t: Term) -> Column:

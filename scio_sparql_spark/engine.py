@@ -19,7 +19,7 @@ from .checkpoints import CheckpointScope
 from .compiler import compile_query
 from .optimize import reorder_joins
 from .sparql.parser import parse_query
-from .terms import KIND_BNODE, TERM_TYPE, Term
+from .terms import KIND_BNODE, KIND_IRI, TERM_TYPE, Term
 from .update import _instantiate
 
 
@@ -66,6 +66,17 @@ def execute_sparql(
     carries an explicit FROM/FROM NAMED dataset (property tables
     describe the full union-default graph, not an arbitrary subset).
 
+    The ``BridgeMapping`` that ``sources.bridge.bridge_ctx`` returns
+    with its quads is such a catalog, and under the same gates it also
+    unfolds constant row IRIs: ``urn:<table>:<n>`` as a subject (and
+    as a DESCRIBE target), or as the object of a ``urn:ref:`` predicate,
+    reads only that table with ``key = n`` pushed into its scan; a
+    subject prefix no table mints matches nothing. It does so only when
+    ``quads`` is the mapping's own DataFrame (object identity), since a
+    lookup with a variable predicate then reads only the mapping's
+    tables; any other DataFrame, even one built from those quads, keeps
+    the term-filter plan.
+
     When ``star_tables`` is omitted, a catalog attached to ``quads`` by
     ``sources.rio.read_triples`` (the ``_star/`` sidecar co-written by
     ``write_triples(..., property_table=True)``) is used automatically.
@@ -104,7 +115,7 @@ def execute_sparql(
     if q.form == "construct":
         return _construct(df, q.template)
     if q.form == "describe":
-        return _describe(df, q.template, quads)
+        return _describe(df, q.template, quads, catalog)
     return df
 
 
@@ -149,32 +160,38 @@ def _triples(quads: DataFrame) -> DataFrame:
     )
 
 
-def _describe(df: DataFrame, targets: tuple, quads: DataFrame) -> DataFrame:
+def _describe(df: DataFrame, targets: tuple, quads: DataFrame, catalog) -> DataFrame:
     """Concise Bounded Description (the rdf4j behavior users expect —
     DESCRIBE is implementation-defined, spec §16.4): all triples whose
     subject is a described resource, plus, transitively, the description
     of every *blank node* reached in object position (bnodes are
     meaningless without their context). The resource set is typically
     tiny; AQE broadcasts it from runtime stats, so the quad scan is never
-    shuffled. The closure loop runs driver-side over bnode frontiers
-    until no new bnode is reached; it terminates because ``seen`` only
-    grows over the finite set of bnodes. Each step is one small
-    broadcast-joined scan."""
+    shuffled. Over a bridge mapping's own quads (``catalog.unfolds``) a
+    constant IRI target instead compiles as the pattern ``<t> ?p ?o``,
+    which reads its one table keyed on the row, and the closure is
+    skipped (the mapping mints no blank node, but the closure's
+    frontier would read the table a second time); over other quads a
+    pattern per target would scan them once per target, where the
+    frontier join scans them once. The closure loop runs driver-side
+    over bnode frontiers until no new bnode is reached; it terminates
+    because ``seen`` only grows over the finite set of bnodes. Each
+    step is one small broadcast-joined scan."""
     spark = quads.sparkSession
-    parts = []
+    unfold = catalog is not None and catalog.unfolds(quads)
+    parts, direct = [], []
     for tgt in targets:
         if isinstance(tgt, A.Var):
             if tgt.name in df.columns:
                 parts.append(df.select(F.col(tgt.name).alias("r")))
+        elif unfold and tgt.kind == KIND_IRI:
+            pat = A.StatementPattern(tgt, A.Var("p"), A.Var("o"))
+            rows = compile_query(quads, pat, star_catalog=catalog)
+            direct.append(rows.select(tgt.to_column().alias("s"), "p", "o"))
         else:
             parts.append(spark.range(1).select(tgt.to_column().alias("r")))
-    if not parts:
+    if not parts and not direct:
         return _triples(quads).limit(0)
-    res = parts[0]
-    for part in parts[1:]:
-        res = res.unionByName(part)
-    res = res.filter(F.col("r").isNotNull()).dropDuplicates()
-
     has_var_targets = any(isinstance(t, A.Var) for t in targets)
 
     def outgoing(frontier: DataFrame, small: bool) -> DataFrame:
@@ -190,7 +207,19 @@ def _describe(df: DataFrame, targets: tuple, quads: DataFrame) -> DataFrame:
             quads.join(side, quads["subject"] == frontier["r"])
         ).dropDuplicates()
 
-    out = outgoing(res, small=not has_var_targets)
+    if parts:
+        res = parts[0]
+        for part in parts[1:]:
+            res = res.unionByName(part)
+        res = res.filter(F.col("r").isNotNull()).dropDuplicates()
+        direct.append(outgoing(res, small=not has_var_targets))
+    out = direct[0]
+    for part in direct[1:]:
+        out = out.unionByName(part)
+    if unfold:
+        # the mapping mints each triple once and no blank node, so one
+        # description is a set and there is nothing to close over
+        return out.dropDuplicates() if len(direct) > 1 else out
     seen = res
     with CheckpointScope(spark) as cp:
         while True:

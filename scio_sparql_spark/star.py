@@ -16,6 +16,11 @@ IS the original parquet row — sources/bridge.py) or paid ONCE at write
 time (``property_table_from_quads`` + sources/rio.write_property_table),
 never per query.
 
+A ``StarCatalog`` may also know how its quads were minted: the bridge's
+``BridgeMapping`` subclass answers ``unfolds(quads)`` for its own quads
+and then restricts a pattern or a star to one table's keyed rows when
+a constant row IRI names them. A plain catalog never unfolds.
+
 Reference parity note: the reference has no star optimization at all —
 every pattern re-scans the full statement bag and every BGP edge is a
 shuffle join (reference: Interpreter.scala:375-381, 456-461). This module
@@ -81,6 +86,11 @@ class StarCatalog:
             return None
         t = self._by_pred.get(next(iter(preds)))
         return t
+
+    def unfolds(self, quads: DataFrame) -> bool:
+        """Whether constant IRIs over ``quads`` unfold to key filters
+        (``sources.bridge.BridgeMapping``); a plain catalog never does."""
+        return False
 
 
 def detect_single_valued(quads: DataFrame) -> list[str]:

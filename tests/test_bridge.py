@@ -1,19 +1,24 @@
 """The relational bridge (sources/bridge.py): rows of both layouts
-against a pure-Python direct mapping, and the py4j cost of a build."""
+against a pure-Python direct mapping, the one-scan layout of a key
+lookup, ``load_table``'s conf scope, and the py4j cost of a build."""
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
 import py4j.clientserver
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from scio_sparql_spark.checkpoints import session_conf
 from scio_sparql_spark.sources.bridge import (
+    NO_ROWS,
+    TableMapping,
     bridge_ctx,
-    table_property_table,
-    table_to_quads,
+    load_table,
 )
 from scio_sparql_spark.terms import (
     KIND_IRI,
@@ -83,8 +88,8 @@ def _tuple(term):
 
 
 def _actual(df, pk, unique_pk):
-    q = table_to_quads(df, TABLE, pk, FKS, unique_pk=unique_pk)
-    pt = table_property_table(df, TABLE, pk, FKS, unique_pk=unique_pk)
+    m = TableMapping(df, TABLE, pk, FKS, unique_pk=unique_pk)
+    q, pt = m.quads(), m.property_table
     quads = sorted(tuple(_tuple(t) for t in row) for row in q.collect())
     props = sorted(
         (
@@ -118,6 +123,43 @@ def test_bag_table_subjects_come_from_rid(spark, escaped):
         got = _actual(df, ["id"], False)
     # _expected maps SCHEMA's fields only, so the trailing __rid is no column
     assert got == _expected(rows, lambda r: r[-1])
+
+
+@pytest.mark.parametrize("escaped", ["true", "false"])
+def test_keyed_row_quads_match_the_branches(spark, escaped):
+    """A key lookup's one-scan expansion (``row_quads``) mints the same
+    quads as the per-column branches over the same keyed rows."""
+    m = TableMapping(spark.createDataFrame(ROWS, SCHEMA), TABLE, ["id"], FKS)
+    with session_conf(spark, {"spark.sql.parser.escapedStringLiterals": escaped}):
+        for n in (1, 2):
+            table, cond = m.key_lookup("id", str(n))
+            assert table is m
+            keyed = TableMapping(m.df.filter(cond), TABLE, ["id"], FKS)
+            branches = sorted(map(str, keyed.quads().collect()))
+            assert branches and sorted(map(str, m.row_quads(cond).collect())) == branches
+
+
+def test_key_lookup_unfolds_only_canonical_integers(spark):
+    m = TableMapping(spark.createDataFrame(ROWS, SCHEMA), TABLE, ["id"], FKS)
+    assert m.key_lookup("id", "-7") == (m, "`id` = -7")
+    for text in ("007", "+7", "7.0", "", "-0", " 7", "7x"):
+        assert m.key_lookup("id", text) is None, text
+    # canonical, but no int column value spells it
+    assert m.key_lookup("id", str(2**31)) is NO_ROWS
+    assert m.key_lookup("na me", "1") is None  # not an integral column
+
+
+def test_load_table_reads_nanos_and_restores_conf(spark, tmp_path):
+    """A TIMESTAMP(NANOS) file reads as microsecond timestamps, and the
+    conf that lets Spark read it is set only around the read."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    ns = [1_704_164_645_123_456_789, 1_000_000_999]
+    table = pa.table({"id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns"))})
+    pq.write_table(table, str(tmp_path / "t.parquet"))
+    df = load_table(spark, str(tmp_path), "t")
+    assert spark.conf.get(key, None) is None
+    got = sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+    assert got == sorted(n // 1000 for n in ns)
 
 
 def test_bridge_build_round_trips(spark, monkeypatch):

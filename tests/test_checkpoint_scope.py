@@ -158,18 +158,34 @@ def test_long_update_keeps_only_what_the_store_reads(spark):
         "INSERT { ?o :r ?s } WHERE { ?s :p ?o }",
         "DELETE { ?s ?p 1 } WHERE { ?s ?p 1 }",
     ]
-    base = _pinned(spark)
+    # a pin the updates do not own: they must leave it pinned. The test
+    # holds the DataFrame, so Spark's ContextCleaner cannot free it
+    foreign = spark.range(3).localCheckpoint()
+    foreign_rdd = foreign._jdf.queryExecution().analyzed().rdd()
+    foreign_id = foreign_rdd.id()
+    # RDD ids only grow, so the pins the updates take are those above the
+    # counter here; an earlier test's pins, which the ContextCleaner may
+    # free at any moment, are ignored
+    first = spark.sparkContext._jsc.sc().newRddId()
+
+    def ours():
+        return {i for i in _pinned(spark) if i > first}
+
     store = execute_update(quads, "PREFIX : <urn:x:>\n" + " ;\n".join(ops))
     ck = store._jdf.queryExecution().analyzed().rdd().id()
-    assert _pinned(spark) - base == {ck}
-    assert _pinned(spark) >= base | _read_rdd_ids(store)
+    assert ours() == {ck}
+    assert ours() >= _read_rdd_ids(store)
+    assert foreign_id in _pinned(spark)
 
-    base = _pinned(spark)
+    base = ours()
     lazy = execute_update(quads, "PREFIX : <urn:x:>\n" + " ;\n".join(ops[:6]))
-    kept = _pinned(spark) - base
+    kept = ours() - base
     assert kept and kept == _read_rdd_ids(lazy)
+    assert foreign_id in _pinned(spark)
     # 6 chain triples + :a + :b - :n0's link + 6 :q copies - 2 deleted
     assert lazy.count() == 6 + 2 - 1 + 6 - 2
+    assert foreign.count() == 3
+    foreign_rdd.unpersist(False)
 
 
 def test_scope_restores_conf_exactly(spark):

@@ -151,6 +151,42 @@ def test_having_hash_aggregate_no_sort(spark):
     assert "o_comment" not in read_schema[0], plan
 
 
+def test_constant_row_iris_scan_one_keyed_table(spark):
+    """Over the bridge mapping a constant row IRI reads only its table,
+    with the key equality pushed into the parquet scan: not a concat
+    filter over all 37 column branches of the 7 tables, and DESCRIBE
+    does not nested-loop-join against them. A prefix no table mints
+    plans no scan at all."""
+    from scio_sparql_spark.sources.bridge import bridge_ctx
+
+    from .test_sparql_fuzz import PREFIXES, SF
+    from .test_unfolding import TABLES
+
+    quads, mapping = bridge_ctx(spark, SF, TABLES)
+
+    def scans(query):
+        plan = _plan(execute_sparql(quads, PREFIXES + query, star_tables=mapping))
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        return [ln for ln in plan.splitlines() if "FileScan" in ln]
+
+    for query, table, key in [
+        ("SELECT ?p ?o WHERE { <urn:customer:7> ?p ?o }", "customer", "EqualTo(c_custkey,7)"),
+        ("DESCRIBE <urn:supplier:3>", "supplier", "EqualTo(s_suppkey,3)"),
+        ("SELECT ?o WHERE { ?o ref:o_custkey <urn:customer:7> }", "orders", "EqualTo(o_custkey,7)"),
+        (
+            "SELECT ?o ?k WHERE { ?o ref:o_custkey <urn:customer:7> ; col:o_orderkey ?k }",
+            "orders",
+            "EqualTo(o_custkey,7)",
+        ),
+    ]:
+        found = scans(query)
+        assert len(found) == 1, (query, found)
+        assert f"/{table}.parquet]" in found[0], (query, found)
+        assert key in found[0].split("PushedFilters: [")[1].split("]")[0], (query, found)
+    assert scans("SELECT ?p ?o WHERE { <urn:nosuch:1> ?p ?o }") == []
+
+
 def test_exact_dedup_partial_aggregation(spark):
     docs = spark.createDataFrame(
         [(i, f"text {i % 7}") for i in range(30)], ["doc_id", "text"]
