@@ -40,16 +40,11 @@ class EConst:
 
 @dataclass(frozen=True)
 class ENumRef:
-    """Compiler-internal reference to a hidden NUMERIC-PARTS column
-    (struct<lex, lvl>) created by the nested-arithmetic CSE pass —
-    never produced by the parser. Storing pulled sub-expressions as
-    slim parts instead of full term structs keeps the per-level
-    attribute reference count ~5 instead of ~10: Catalyst's filter
-    pushdown re-substitutes hidden columns into the predicate with no
-    size guard, so the inlined tree grows as (refs per level)^depth —
-    at ~10 a depth-2 arithmetic inside a FILTER already generated more
-    code than janino's 64KB method cap (found by
-    tests/test_sparql_fuzz.py)."""
+    """Compiler-internal reference to a hidden column that holds the
+    term of a staged nested arithmetic expression: a numeric literal
+    whose dt is one of the four ``make_numeric_term`` writes, or NULL
+    on error. Never produced by the parser; ``compiler._compile_cse``
+    creates it, and the expression compiler reads it as a number."""
 
     name: str
 

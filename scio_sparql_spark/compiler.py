@@ -33,6 +33,7 @@ from .terms import (
     XSD_INTEGER,
     XSD_STRING,
     bool_term,
+    ebv,
     exact_decimal,
     make_numeric_term,
     null_term,
@@ -454,63 +455,69 @@ class Compiler:
 
     # --- filters (incl. EXISTS / NOT EXISTS) ---
     def _compile_cse(self, df: DataFrame, expr, as_bool: bool = False):
-        """compile_value/compile_bool with nested-arithmetic
-        materialization. XPath-promotion typing makes every compiled
-        EArith reference each operand ~10 times (numeric-value,
-        promotion-level, error branches), so a depth-d arithmetic tree
-        grows ~10^d in the Catalyst plan — observed 663 KB (and seconds
-        of driver-side optimization per action) for ``(MIN(?x)+MAX(?x))/2``.
-        Binding every non-root EArith to a hidden column first keeps each
-        level referencing plain attributes: linear plan size, identical
-        semantics. Returns (df_with_temps, column, temp_names)."""
-        pulled: list = []
+        """compile_value/compile_bool with every arithmetic level staged
+        into hidden columns. An arithmetic result is read many times:
+        its lexical formatting reads the value about eight times, and
+        the next level reads the formatted lexical form several times.
+        Compiled inline, a depth-d expression grows as (reads)^d. So
+        each level first stages its value, level and exact decimal, read
+        from its operands, as hidden columns; its term is formatted from
+        those attributes; and a nested level's term is staged too, as an
+        ``ENumRef`` the parent reads. The plan grows linearly with
+        depth, and each parent still reads the lexical form its operand
+        would be bound with. Integer-constant pairs fold first
+        (``exprs.fold_integer``), and a level whose operands are both
+        constants is left to Catalyst's constant folding.
+
+        CollapseProject keeps a staged column apart from a consumer that
+        reads it more than once, but predicate pushdown substitutes it
+        into a FILTER condition at every read. So the columns a nested
+        level or a FILTER reads are each wrapped in
+        ``terms.optimizer_barrier``, which Catalyst neither substitutes
+        nor collapses (the guard wraps the value itself: ColumnPruning
+        drops a separate barrier column before pushdown runs); BGP
+        filters are bound during pattern compilation, below them. The top level of a bound value (BIND, a SELECT
+        expression, a group key or an aggregate argument) is staged
+        without the barrier, so a later FILTER still pushes through it.
+        Returns (df_with_temps, column, temp_names)."""
+        from .exprs import arith_parts, fold_integer
+        from .terms import optimizer_barrier
+
+        env = _env(df)
+        temps: list[str] = []
+
+        def stage(cols: list, barrier: bool) -> list:
+            nonlocal df
+            names = [f"__cse{next(_alias_counter)}" for _ in cols]
+            df = df.withColumns(
+                {n: optimizer_barrier(c) if barrier else c for n, c in zip(names, cols)}
+            )
+            temps.extend(names)
+            env.update({n: F.col(n) for n in names})
+            return [env[n] for n in names]
+
+        def term(e: A.EArith, barrier: bool) -> Column:
+            parts = [p for p in arith_parts(e, env) if p is not None]
+            if not (isinstance(e.left, A.EConst) and isinstance(e.right, A.EConst)):
+                parts = stage(parts, barrier)
+            return make_numeric_term(*parts)
 
         def rw(e, root):
-            e2 = A.map_expr(e, lambda x: rw(x, False))
-            if root or not isinstance(e, A.EArith):
-                return e2
-            name = f"__cse{next(_alias_counter)}"
-            pulled.append((name, e2))
-            return A.ENumRef(name)
+            e = A.map_expr(e, lambda x: rw(x, False))
+            if not isinstance(e, A.EArith):
+                return e
+            folded = fold_integer(e)
+            if folded is not None or root:
+                return folded or e
+            stage([term(e, True)], True)
+            return A.ENumRef(temps[-1])
 
         top = rw(expr, True)
-        temps = []
-        for name, sub in pulled:  # children precede parents (post-order)
-            # slim struct<lex,lvl> parts, not a full term struct: half
-            # the attribute references per consumer (algebra.ENumRef).
-            #
-            # The always-true nondeterministic guard is an OPTIMIZER
-            # BARRIER: Catalyst substitutes hidden deterministic
-            # columns into consumers with NO size guard (predicate
-            # pushdown unconditionally; physical-planning collapse
-            # likewise), so the inlined tree grows as
-            # (refs per level)^depth — a depth-2 arithmetic FILTER
-            # already generated more bytecode than janino's 64KB
-            # method cap (27s of doomed compile + interpreted
-            # fallback), and depth 4 OOM'd the driver during
-            # optimization (found by tests/test_sparql_fuzz.py).
-            # Nondeterministic expressions are never substituted and
-            # never collapsed, so each CSE level stays one small named
-            # projection: plan size linear in expression depth at any
-            # depth. The guard must taint the temp VALUE itself — a
-            # separate hidden barrier column gets removed by
-            # ColumnPruning before pushdown runs (measured). Results
-            # are untouched: the guard is always true, per-row cost is
-            # one int comparison (terms.optimizer_barrier — chosen to
-            # survive both the streaming checker and constant folding,
-            # see its docstring). Scan-level pattern pushdown is
-            # unaffected (BGP filters bind during pattern compilation,
-            # below this projection); only later same-FILTER parts
-            # lose push-through, and only on queries nesting
-            # arithmetic.
-            from .exprs import arith_parts
-            from .terms import numeric_parts_struct, optimizer_barrier
-
-            parts = numeric_parts_struct(*arith_parts(sub, _env(df)))
-            df = df.withColumn(name, optimizer_barrier(parts))
-            temps.append(name)
+        if isinstance(top, A.EArith):
+            col = term(top, as_bool)
+            return df, (ebv(col) if as_bool else col), temps
         fn = compile_bool if as_bool else compile_value
-        return df, fn(top, _env(df)), temps
+        return df, fn(top, env), temps
 
     def _c_filter(self, node: A.Filter) -> DataFrame:
         df = self.compile(node.input)

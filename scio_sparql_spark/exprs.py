@@ -11,21 +11,52 @@ JVM execution, no Python in the hot path:
   (err || true = true, err && false = false) exactly.
 - XPath numeric promotion (reference: ValueEvaluators.scala:19-25,
   MathUtil) is tracked as a promotion level column.
+
+Each sub-expression compiles to a *shape*, known at compile time:
+
+- a condition (``_Bool``): a nullable Boolean Column. Logical operators,
+  comparisons, IN, BOUND and the ``CONDITIONS`` builtins (REGEX,
+  STRSTARTS, sameTerm, the is* tests, ...) have this shape;
+- a number (``_Num``): an expression that is a numeric literal or an
+  error — numeric constants, arithmetic, unary minus and the
+  ``INTEGERS`` builtins (STRLEN, YEAR, ...). Its parts (double value,
+  promotion level, exact decimal) are what ``num_value``,
+  ``promotion_level`` and ``exact_decimal`` would read from its term;
+- a term: a term-struct Column (variables, every other builtin).
+
+Operators read their operands in the shape they need: a FILTER takes a
+condition as it is, and arithmetic and ordering comparisons take the
+parts of a number without re-deriving them from a term struct. A term
+struct is built only where a value is bound or compared as a term
+(``compile_value``: BIND, a SELECT expression, an aggregate argument or
+group key, ORDER BY, ``=``/``!=``/IN, and the arguments of term
+builtins). ``compiler.Compiler._compile_cse`` adds one more step for
+arithmetic: each level's parts are staged into hidden columns, so the
+lexical formatting and the next level read attributes.
 """
 
 from __future__ import annotations
+
+import re
+from functools import cached_property
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from . import algebra as A
-from .functions.builtins import BUILTINS, compile_cast
+from .functions.builtins import BUILTINS, CONDITIONS, INTEGERS, compile_cast, int_term
 from .terms import (
+    _EXACT_NUM_RE,
+    PROMOTION,
     RDF_LANGSTRING,
     XSD_BOOLEAN,
     XSD_DATE,
     XSD_DATETIME,
+    XSD_DECIMAL,
+    XSD_DOUBLE,
+    XSD_FLOAT,
     XSD_STRING,
+    Term,
     bool_term,
     ebv,
     exact_decimal,
@@ -34,6 +65,7 @@ from .terms import (
     is_literal,
     make_numeric_term,
     null_term,
+    num_lex,
     num_value,
     promotion_level,
 )
@@ -46,23 +78,154 @@ def lookup(env: Env, name: str) -> Column:
     return c if c is not None else null_term()
 
 
-def compile_value(e, env: Env) -> Column:
-    """Expression -> term-struct Column; NULL = error/unbound."""
+# --- shapes ----------------------------------------------------------------
+
+
+class _Bool:
+    """A condition: nullable Boolean Column, NULL = type error."""
+
+    def __init__(self, cond: Column):
+        self.cond = cond
+
+
+class _Num:
+    """A numeric literal or an error. ``term`` is its term struct and
+    ``parts`` its (double value, promotion level, exact decimal) — the
+    values ``num_value``, ``promotion_level`` and ``exact_decimal``
+    read from ``term``; the level and the exact decimal count only
+    where the value is not NULL. Both are built on first use, from
+    zero-argument builders; ``parts`` defaults to reading ``term``."""
+
+    def __init__(self, term, parts=None):
+        self._term, self._parts = term, parts
+
+    @cached_property
+    def term(self) -> Column:
+        return self._term()
+
+    @cached_property
+    def parts(self) -> tuple[Column, Column, Column]:
+        if self._parts is not None:
+            return self._parts()
+        t = self.term
+        return num_value(t), promotion_level(t), exact_decimal(t)
+
+
+def _as_term(s) -> Column:
+    if isinstance(s, _Bool):
+        return bool_term(s.cond)
+    if isinstance(s, _Num):
+        return s.term
+    return s
+
+
+def _as_bool(s) -> Column:
+    if isinstance(s, _Bool):
+        return s.cond
+    return ebv(_as_term(s))
+
+
+def _parts(s) -> tuple[Column, Column, Column]:
+    if isinstance(s, _Num):
+        return s.parts
+    t = _as_term(s)
+    return num_value(t), promotion_level(t), exact_decimal(t)
+
+
+def _value(s) -> Column:
+    return s.parts[0] if isinstance(s, _Num) else num_value(_as_term(s))
+
+
+_PLAIN_INT = re.compile(r"-?[0-9]{1,13}")
+
+
+def _const(term: Term):
+    if term.dt not in PROMOTION:
+        return term.to_column()
+    # Python computes the parts of a lexical form inside the exact-decimal
+    # guard: plain digits, which Python's float() and Spark's CAST AS
+    # DOUBLE both round correctly. Spark folds any other constant's parts.
+    if not re.fullmatch(_EXACT_NUM_RE, term.lex):
+        return _Num(term.to_column)
+    return _Num(
+        term.to_column,
+        lambda: (
+            F.lit(float(term.lex)),
+            F.lit(PROMOTION[term.dt]),
+            F.lit(term.lex).cast("decimal(19,6)"),
+        ),
+    )
+
+
+def _int_num(v: Column) -> _Num:
+    """An integer Column (NULL = error) as a number: the parts
+    ``int_term(v)`` would give, read from ``v``."""
+    return _Num(
+        lambda: int_term(v),
+        lambda: (v.cast("double"), F.lit(0), v.cast("decimal(19,6)")),
+    )
+
+
+def _numeric_ref(t: Column) -> _Num:
+    """A hidden column holding a numeric term or NULL (algebra.ENumRef):
+    its dt is one of the four ``make_numeric_term`` writes, so the parts
+    read the lexical form and dt without the datatype-family tests."""
+
+    def parts():
+        level = (
+            F.when(t["dt"] == XSD_DECIMAL, F.lit(1))
+            .when(t["dt"] == XSD_FLOAT, F.lit(2))
+            .when(t["dt"] == XSD_DOUBLE, F.lit(3))
+            .otherwise(F.lit(0))
+        )
+        return num_lex(t["lex"]).cast("double"), level, exact_decimal(t)
+
+    return _Num(lambda: t, parts)
+
+
+def fold_integer(e: A.EArith) -> A.EConst | None:
+    """``e`` as one xsd:integer constant when it adds, subtracts or
+    multiplies two integer constants inside the exact-decimal guard
+    (at most 13 digits): the exact lane renders exactly Python's integer
+    result for them. Anything else (division, wider or non-canonical
+    operands) returns None and compiles as arithmetic."""
+    if e.op == "/":
+        return None
+    ops = []
+    for x in (e.left, e.right):
+        if not (
+            isinstance(x, A.EConst)
+            and PROMOTION.get(x.term.dt) == 0
+            and _PLAIN_INT.fullmatch(x.term.lex)
+        ):
+            return None
+        ops.append(int(x.term.lex))
+    a, b = ops
+    return A.EConst(Term.integer(a + b if e.op == "+" else a - b if e.op == "-" else a * b))
+
+
+def _shape(e, env: Env):
     if isinstance(e, A.EVar):
         return lookup(env, e.name)
     if isinstance(e, A.ENumRef):
-        from .terms import term_from_numeric_parts
-
-        return term_from_numeric_parts(lookup(env, e.name))
+        return _numeric_ref(lookup(env, e.name))
     if isinstance(e, A.EConst):
-        return e.term.to_column()
+        return _const(e.term)
     if isinstance(e, (A.EAnd, A.EOr, A.ENot, A.ECmp, A.EIn)):
-        return bool_term(compile_bool(e, env))
+        return _Bool(_condition(e, env))
     if isinstance(e, A.EArith):
-        return _arith(e, env)
+        folded = fold_integer(e)
+        if folded is not None:
+            return _const(folded.term)
+        return _Num(lambda: make_numeric_term(*arith_parts(e, env)))
     if isinstance(e, A.ENeg):
-        v = compile_value(e.arg, env)
-        return make_numeric_term(-num_value(v), promotion_level(v))
+        arg = _shape(e.arg, env)
+
+        def neg():
+            v, level, _ = _parts(arg)
+            return make_numeric_term(-v, level)
+
+        return _Num(neg)
     if isinstance(e, A.ECall):
         return _call(e, env)
     if isinstance(e, A.EExists):
@@ -74,8 +237,17 @@ def compile_value(e, env: Env) -> Column:
     raise TypeError(f"cannot compile value expr: {e!r}")
 
 
+def compile_value(e, env: Env) -> Column:
+    """Expression -> term-struct Column; NULL = error/unbound."""
+    return _as_term(_shape(e, env))
+
+
 def compile_bool(e, env: Env) -> Column:
     """Expression in boolean context -> nullable Boolean Column (NULL=error)."""
+    return _as_bool(_shape(e, env))
+
+
+def _condition(e, env: Env) -> Column:
     if isinstance(e, A.EAnd):
         return compile_bool(e.left, env) & compile_bool(e.right, env)
     if isinstance(e, A.EOr):
@@ -83,79 +255,27 @@ def compile_bool(e, env: Env) -> Column:
     if isinstance(e, A.ENot):
         return ~compile_bool(e.arg, env)
     if isinstance(e, A.ECmp):
-        # slim lane for ORDERING comparisons with a compile-time-
-        # certain numeric side: the full type-dispatch _compare
-        # references each operand ~12 times, and Catalyst's predicate
-        # pushdown multiplies that into every inlined nested-arith
-        # level (the janino-64KB blowup test_sparql_fuzz found). When
-        # either side can only ever be a numeric term or an error,
-        # ordering semantics collapse to f(num, num) with NULL
-        # propagation — identical row-for-row to the full dispatch
-        # (a non-numeric other side makes every full-path branch fail
-        # to NULL too). =/!= keep the full path: RDFterm-equal gives
-        # real answers across kinds (numeric != IRI is true, not an
-        # error).
-        if e.op not in ("=", "!=") and (
-            _certainly_numeric(e.left) or _certainly_numeric(e.right)
-        ):
-            numl, _, _ = _numeric_parts_of(e.left, env)
-            numr, _, _ = _numeric_parts_of(e.right, env)
-            # Spark orders NaN greatest; XPath says every ordering
-            # comparison involving NaN is FALSE (a real boolean, not a
-            # type error), while a NULL (type-error) operand must stay
-            # NULL — `isnan(NULL)|isnan(NaN)` is TRUE in 3VL, so the
-            # r13 guard returned a real False there (ADVICE r13).
-            #
-            # Reference-count discipline (the whole reason this lane
-            # exists): every extra operand reference is another copy of
-            # the operand's substituted definition tree — a BIND var
-            # inlines whole, and 1.5x growth pushed a shallow
-            # BIND+FILTER(?v >= 0) over janino's 64KB method cap
-            # (hard-OOMing the fuzz suite, r14). So specialize on the
-            # compile-time-known side, which every cliff-prone shape
-            # has (expr-vs-constant):
-            #   const side is NaN      -> when(other.isNotNull(), False)
-            #                             (1 ref; NULL stays NULL)
-            #   const side is a number -> NaN-guard only the expr side:
-            #                             isnan(NULL) = NULL falls to
-            #                             otherwise -> NULL op c = NULL,
-            #                             so 3VL is exact at r13's two
-            #                             references
-            #   both sides are exprs   -> full both-non-null guard
-            #                             (3 refs each; operands here
-            #                             are plain scan/CSE attributes
-            #                             or one EArith level over
-            #                             them, never a whole inlined
-            #                             BIND definition)
-            cl, cr = _const_num(e.left), _const_num(e.right)
-            if cl is not None and cl != cl:  # left const is NaN
-                return F.when(numr.isNotNull(), F.lit(False))
-            if cr is not None and cr != cr:  # right const is NaN
-                return F.when(numl.isNotNull(), F.lit(False))
-            if cl is not None or cr is not None:
-                var = numr if cl is not None else numl
-                return F.when(F.isnan(var), F.lit(False)).otherwise(
-                    _OPS[e.op](numl, numr)
-                )
-            return F.when(
-                numl.isNotNull()
-                & numr.isNotNull()
-                & (F.isnan(numl) | F.isnan(numr)),
-                F.lit(False),
-            ).otherwise(_OPS[e.op](numl, numr))
-        return _compare(e.op, compile_value(e.left, env), compile_value(e.right, env))
+        left, right = _shape(e.left, env), _shape(e.right, env)
+        if e.op not in ("=", "!=") and (isinstance(left, _Num) or isinstance(right, _Num)):
+            # An ordering comparison with a side that is a number or an
+            # error: every branch of the full dispatch but the numeric
+            # one fails to NULL, so compare the two values. XPath makes
+            # an ordering comparison with NaN a real false (Spark orders
+            # NaN greatest); a NULL operand stays NULL (isnan(NULL) is
+            # false). Against a constant, Catalyst folds the guard to
+            # one isnan test of the other side. =/!= keep the full
+            # dispatch: a number and an IRI are unequal, not an error.
+            numl, numr = _value(left), _value(right)
+            nan = (F.isnan(numl) & numr.isNotNull()) | (F.isnan(numr) & numl.isNotNull())
+            return F.when(nan, F.lit(False)).otherwise(_OPS[e.op](numl, numr))
+        return _compare(e.op, _as_term(left), _as_term(right))
     if isinstance(e, A.EIn):
         arg = compile_value(e.arg, env)
         cond = F.lit(False)
         for opt in e.options:
             cond = cond | _compare("=", arg, compile_value(opt, env))
         return ~cond if e.negated else cond
-    if isinstance(e, A.ECall) and e.name == "BOUND":
-        v = e.args[0]
-        if not isinstance(v, A.EVar):
-            raise SyntaxError("BOUND() requires a variable")
-        return lookup(env, v.name).isNotNull()
-    return ebv(compile_value(e, env))
+    raise TypeError(f"not a condition: {e!r}")
 
 
 # --- comparison ------------------------------------------------------------
@@ -168,43 +288,6 @@ _OPS = {
     ">": lambda a, b: a > b,
     ">=": lambda a, b: a >= b,
 }
-
-
-def _const_num(e) -> float | None:
-    """The compile-time float value of a numeric constant operand
-    (EConst / ENeg(EConst)), or None when the operand is not a
-    well-formed numeric constant. Lets the slim ordering lane decide
-    NaN handling at COMPILE time for the expr-vs-constant shape —
-    see the reference-count discipline note in compile_bool."""
-    if isinstance(e, A.ENeg):
-        v = _const_num(e.arg)
-        return None if v is None else -v
-    if isinstance(e, A.EConst):
-        from .terms import NUMERIC_DTS
-
-        if e.term.dt not in NUMERIC_DTS:
-            return None
-        lex = e.term.lex.strip()
-        # XSD non-finite spellings
-        mapped = {"INF": "inf", "+INF": "inf", "-INF": "-inf"}.get(lex, lex)
-        try:
-            return float(mapped)
-        except ValueError:
-            return None
-    return None
-
-
-def _certainly_numeric(e) -> bool:
-    """True when the expression can only evaluate to a numeric term or
-    an error (never a boolean/string/date/IRI/bnode term) — the
-    licence for compile_bool's slim ordering comparison."""
-    if isinstance(e, (A.EArith, A.ENumRef, A.ENeg)):
-        return True
-    if isinstance(e, A.EConst):
-        from .terms import NUMERIC_DTS
-
-        return e.term.dt in NUMERIC_DTS
-    return False
 
 
 def _compare(op: str, l: Column, r: Column) -> Column:
@@ -258,33 +341,15 @@ def _compare(op: str, l: Column, r: Column) -> Column:
 # --- arithmetic ------------------------------------------------------------
 
 
-def _numeric_parts_of(e, env: Env) -> tuple[Column, Column, Column]:
-    """(numeric double, promotion level, exact decimal) for an operand.
-    ENumRef reads the slim CSE struct's 2 fields directly — exactly the
-    values num_value/promotion_level/exact_decimal would derive from
-    the full term (see terms.numeric_parts_struct), at half the
-    attribute references, which is what bounds Catalyst's predicate-
-    pushdown inlining growth for nested arithmetic."""
-    from .terms import _EXACT_NUM_RE
-
-    if isinstance(e, A.ENumRef):
-        from .terms import num_lex
-
-        p = lookup(env, e.name)
-        lex = p["lex"]
-        num = num_lex(lex).cast("double")
-        exact = F.when(lex.rlike(_EXACT_NUM_RE), lex.cast("decimal(19,6)"))
-        return num, p["lvl"], exact
-    t = compile_value(e, env)
-    return num_value(t), promotion_level(t), exact_decimal(t)
-
-
 def arith_parts(e: A.EArith, env: Env) -> tuple[Column, Column, Column | None]:
     """The (value, level, exact) triple of an arithmetic expression —
-    the payload make_numeric_term wraps into a term, and
-    numeric_parts_struct stores for hidden CSE columns."""
-    numl, ll, exl = _numeric_parts_of(e.left, env)
-    numr, lr, exr = _numeric_parts_of(e.right, env)
+    the payload make_numeric_term wraps into a term; the level and the
+    exact decimal count only where the value is not NULL. Each operand is
+    read as a number (``_parts``): a term operand's parts are derived
+    from its lexical form, so a nested result is re-read from the
+    lexical form it would be bound with."""
+    numl, ll, exl = _parts(_shape(e.left, env))
+    numr, lr, exr = _parts(_shape(e.right, env))
     level = F.greatest(ll, lr)
     # exact decimal lane for + - * at integer/decimal level (spec:
     # xsd:decimal arithmetic is exact; terms.exact_decimal guards the
@@ -309,22 +374,16 @@ def arith_parts(e: A.EArith, env: Env) -> tuple[Column, Column, Column | None]:
         val = F.when((level >= 2) | (numr != 0.0), numl / numr)
     else:
         raise ValueError(e.op)
-    both = numl.isNotNull() & numr.isNotNull()
-    return (
-        F.when(both, val),
-        F.when(both, level),
-        None if exact is None else F.when(both, exact),
-    )
-
-
-def _arith(e: A.EArith, env: Env) -> Column:
-    return make_numeric_term(*arith_parts(e, env))
+    # no NULL guard: each value is NULL when either operand's is, and
+    # make_numeric_term reads the level and the exact decimal only
+    # where the value is set
+    return val, level, exact
 
 
 # --- function calls --------------------------------------------------------
 
 
-def _call(e: A.ECall, env: Env) -> Column:
+def _call(e: A.ECall, env: Env):
     name = e.name
     if name == "IF":
         c = compile_bool(e.args[0], env)
@@ -334,8 +393,15 @@ def _call(e: A.ECall, env: Env) -> Column:
     if name == "COALESCE":
         return F.coalesce(*[compile_value(a, env) for a in e.args])
     if name == "BOUND":
-        return bool_term(compile_bool(e, env))
+        v = e.args[0]
+        if not isinstance(v, A.EVar):
+            raise SyntaxError("BOUND() requires a variable")
+        return _Bool(lookup(env, v.name).isNotNull())
     args = [compile_value(a, env) for a in e.args]
+    if name in CONDITIONS:
+        return _Bool(CONDITIONS[name](args))
+    if name in INTEGERS:
+        return _int_num(INTEGERS[name](args))
     if name in BUILTINS:
         return BUILTINS[name](args)
     if ":" in name:  # IRI call: user-registered function, else cast

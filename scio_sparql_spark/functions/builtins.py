@@ -3,7 +3,15 @@
 The reference imports this surface wholesale from rdf4j's
 StrictEvaluationStrategy (reference: Interpreter.scala:39-54 — spec §17.4);
 here each builtin is a native Column expression (JVM/codegen), with the
-same error model: invalid input type -> NULL term.
+same error model: invalid input type -> NULL.
+
+Every builder takes the arguments' term-struct Columns. ``BUILTINS``
+builders return a term struct. Two families return something narrower,
+which the expression compiler passes on without building a term:
+``CONDITIONS`` builders return the nullable Boolean condition of an
+xsd:boolean result (``terms.bool_term`` makes it a term), and
+``INTEGERS`` builders return the integer Column of an xsd:integer
+result (``int_term`` makes it a term).
 """
 
 from __future__ import annotations
@@ -26,7 +34,6 @@ from ..terms import (
     XSD_INTEGER,
     XSD_STRING,
     bnode_term,
-    bool_term,
     iri_term,
     is_bnode,
     is_iri,
@@ -58,7 +65,8 @@ def _with_same_strtype(t: Column, new_lex: Column) -> Column:
     )
 
 
-def _int_term(v: Column) -> Column:
+def int_term(v: Column) -> Column:
+    """An integer Column (NULL = error) as an xsd:integer term."""
     return F.when(v.isNotNull(), typed_term(v.cast("long").cast("string"), XSD_INTEGER))
 
 
@@ -118,7 +126,7 @@ def _strlang(args):
 
 
 def _strlen(args):
-    return _int_term(F.length(_str_lex(args[0])))
+    return F.length(_str_lex(args[0]))
 
 
 def _substr(args):
@@ -141,15 +149,15 @@ def _lcase(args):
 
 
 def _strstarts(args):
-    return bool_term(F.startswith(_str_lex(args[0]), _str_lex(args[1])))
+    return F.startswith(_str_lex(args[0]), _str_lex(args[1]))
 
 
 def _strends(args):
-    return bool_term(F.endswith(_str_lex(args[0]), _str_lex(args[1])))
+    return F.endswith(_str_lex(args[0]), _str_lex(args[1]))
 
 
 def _contains(args):
-    return bool_term(F.contains(_str_lex(args[0]), _str_lex(args[1])))
+    return F.contains(_str_lex(args[0]), _str_lex(args[1]))
 
 
 def _strbefore(args):
@@ -206,7 +214,7 @@ def _langmatches(args):
     out = F.when(rng == "*", tag != "").otherwise(
         (F.lower(tag) == F.lower(rng)) | F.lower(tag).startswith(F.concat(F.lower(rng), F.lit("-")))
     )
-    return bool_term(F.when(tag.isNotNull() & rng.isNotNull(), out))
+    return F.when(tag.isNotNull() & rng.isNotNull(), out)
 
 
 def _regex_pattern(pat: Column, flags: Column | None) -> Column:
@@ -224,7 +232,7 @@ def _regex_pattern(pat: Column, flags: Column | None) -> Column:
 def _regex(args):
     s = _str_lex(args[0])
     pat = _regex_pattern(_str_lex(args[1]), _str_lex(args[2]) if len(args) > 2 else None)
-    return bool_term(F.regexp_like(s, pat))
+    return F.regexp_like(s, pat)
 
 
 def _replace(args):
@@ -265,7 +273,7 @@ def _now(args):
 
 def _datetime_part(fn):
     def impl(args):
-        return _int_term(fn(_ts(args[0])))
+        return fn(_ts(args[0]))
 
     return impl
 
@@ -307,23 +315,45 @@ def _struuid(args):
 
 def _sameterm(args):
     l, r = args
-    return bool_term(
-        F.when(l.isNotNull() & r.isNotNull(), l == r)
-    )
+    return F.when(l.isNotNull() & r.isNotNull(), l == r)
 
 
 def _is_kind(kind):
     def impl(args):
         t = args[0]
-        return bool_term(F.when(t.isNotNull(), t["kind"] == kind))
+        return F.when(t.isNotNull(), t["kind"] == kind)
 
     return impl
 
 
 def _isnumeric(args):
     t = args[0]
-    return bool_term(F.when(t.isNotNull(), num_value(t).isNotNull()))
+    return F.when(t.isNotNull(), num_value(t).isNotNull())
 
+
+CONDITIONS = {
+    "STRSTARTS": _strstarts,
+    "STRENDS": _strends,
+    "CONTAINS": _contains,
+    "LANGMATCHES": _langmatches,
+    "REGEX": _regex,
+    "SAMETERM": _sameterm,
+    "ISIRI": _is_kind(KIND_IRI),
+    "ISURI": _is_kind(KIND_IRI),
+    "ISBLANK": _is_kind(KIND_BNODE),
+    "ISLITERAL": _is_kind(KIND_LITERAL),
+    "ISNUMERIC": _isnumeric,
+}
+
+INTEGERS = {
+    "STRLEN": _strlen,
+    "YEAR": _datetime_part(F.year),
+    "MONTH": _datetime_part(F.month),
+    "DAY": _datetime_part(F.dayofmonth),
+    "HOURS": _datetime_part(F.hour),
+    "MINUTES": _datetime_part(F.minute),
+    "SECONDS": _datetime_part(F.second),
+}
 
 BUILTINS = {
     "STR": _str,
@@ -334,19 +364,13 @@ BUILTINS = {
     "BNODE": _bnode,
     "STRDT": _strdt,
     "STRLANG": _strlang,
-    "STRLEN": _strlen,
     "SUBSTR": _substr,
     "UCASE": _ucase,
     "LCASE": _lcase,
-    "STRSTARTS": _strstarts,
-    "STRENDS": _strends,
-    "CONTAINS": _contains,
     "STRBEFORE": _strbefore,
     "STRAFTER": _strafter,
     "ENCODE_FOR_URI": _encode_for_uri,
     "CONCAT": _concat,
-    "LANGMATCHES": _langmatches,
-    "REGEX": _regex,
     "REPLACE": _replace,
     "ABS": _numeric_unary(F.abs),
     "CEIL": _numeric_unary(lambda v: F.ceil(v).cast("double")),
@@ -354,12 +378,6 @@ BUILTINS = {
     "ROUND": _round,
     "RAND": _rand,
     "NOW": _now,
-    "YEAR": _datetime_part(F.year),
-    "MONTH": _datetime_part(F.month),
-    "DAY": _datetime_part(F.dayofmonth),
-    "HOURS": _datetime_part(F.hour),
-    "MINUTES": _datetime_part(F.minute),
-    "SECONDS": _datetime_part(F.second),
     "TIMEZONE": _timezone,
     "TZ": _tz,
     "MD5": _hash(F.md5),
@@ -369,12 +387,6 @@ BUILTINS = {
     "SHA512": _hash(lambda s: F.sha2(s, 512)),
     "UUID": _uuid,
     "STRUUID": _struuid,
-    "SAMETERM": _sameterm,
-    "ISIRI": _is_kind(KIND_IRI),
-    "ISURI": _is_kind(KIND_IRI),
-    "ISBLANK": _is_kind(KIND_BNODE),
-    "ISLITERAL": _is_kind(KIND_LITERAL),
-    "ISNUMERIC": _isnumeric,
 }
 
 # --- xsd:T(...) constructor casts -------------------------------------------

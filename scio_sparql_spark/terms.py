@@ -194,19 +194,19 @@ def null_term() -> Column:
 
 def optimizer_barrier(col: Column) -> Column:
     """Wrap ``col`` in an always-true NONDETERMINISTIC guard so Catalyst
-    never substitutes it into downstream consumers (CollapseProject and
-    predicate pushdown inline deterministic projections with no size
-    guard — the inlined tree grows as refs^depth, measured janino-cap
-    bytecode blowups and a driver OOM during optimization; see
-    compiler._compile_cse and sources.rio._project_ntriples).
+    never substitutes it into downstream consumers. Predicate pushdown
+    inlines a deterministic projection into the pushed condition with no
+    size guard, and CollapseProject inlines a struct whose consumers
+    only read its fields; a value read k times per level then grows as
+    k^depth. Nondeterministic expressions are neither substituted nor
+    collapsed (users: compiler._compile_cse, sources.rio._project_ntriples).
 
-    Guard choice is empirical on this Spark (4.1): ``rand(0) >= -1.0``
-    is FOLDED to true by bounds-based comparison simplification (and
-    ``monotonically_increasing_id`` is rejected by the streaming
-    UnsupportedOperationChecker), so neither survives;
-    ``spark_partition_id() >= 0`` is accepted in streaming plans,
-    survives optimization, and costs one int comparison per row
-    (tests/test_optimize.py locks both properties)."""
+    The guard must survive optimization and be legal in streaming plans
+    on Spark 4.1: ``rand(0) >= -1.0`` is folded to true by bounds-based
+    comparison simplification, and ``monotonically_increasing_id`` is
+    rejected by the streaming UnsupportedOperationChecker;
+    ``spark_partition_id() >= 0`` passes both and costs one int
+    comparison per row (tests/test_optimize.py locks both properties)."""
     return F.when(F.spark_partition_id() >= 0, col)
 
 
@@ -265,9 +265,9 @@ def num_lex(lex: Column) -> Column:
     Spark's CAST AS DOUBLE wants ``Infinity`` (``NaN`` both accept).
     Translate before casting so xsd:double non-finite literals carry
     their value through comparisons/arithmetic instead of silently
-    becoming NULL type errors (ADVICE r12 follow-through — the
-    ``_coerce_binding`` fix emits the XSD spellings, so the engine must
-    read them back). Applied regardless of datatype: INF on an integer
+    becoming NULL type errors (``format_numeric_lex`` and
+    ``_coerce_binding`` write the XSD spellings, so the engine reads
+    them back). Applied regardless of datatype: INF on an integer
     literal is malformed either way, and the engine is already lenient
     about per-datatype lexical validation."""
     return (
@@ -305,8 +305,10 @@ def format_numeric_lex(value: Column, level: Column) -> Column:
 
     Integer level -> no decimal point; decimal -> trailing zeros trimmed
     (keeping integer-valued decimals as e.g. ``10``); float/double -> Spark's
-    double rendering. Downstream arithmetic re-parses via cast('double'), so
-    this only affects displayed/STR()'d output.
+    double rendering. An enclosing operator reads a computed number back
+    from this form (``exprs.arith_parts``), so a decimal intermediate
+    carries 10 fraction digits into the next level: ``(1.0/3)*3`` is
+    ``0.9999999999``.
     """
     as_long = value.cast("long").cast("string")
     as_dec = F.regexp_replace(
@@ -356,55 +358,6 @@ def _format_exact_lex(exact: Column, level: Column) -> Column:
     return F.when(level == 0, as_int).otherwise(trimmed)
 
 
-def _numeric_lex(value: Column, level: Column, exact: Column | None) -> Column:
-    """The lexical form a computed numeric term carries (exact lane
-    overriding the double rendering at integer/decimal level) — shared
-    by make_numeric_term and the slim parts-struct path so both emit
-    byte-identical lexicals."""
-    lex = format_numeric_lex(value, level)
-    if exact is not None:
-        lex = F.when(
-            (level <= 1) & exact.isNotNull(), _format_exact_lex(exact, level)
-        ).otherwise(lex)
-    return lex
-
-
-def numeric_parts_struct(
-    value: Column, level: Column, exact: Column | None = None
-) -> Column:
-    """A computed numeric as a slim ``struct<lex, lvl>`` instead of a
-    full term struct — the storage for hidden nested-arithmetic CSE
-    columns (algebra.ENumRef). Semantically equivalent to running
-    make_numeric_term and re-deriving: ``lex`` is the identical
-    lexical (NULL on error), ``lvl`` the promotion level. Re-derivers:
-    num = lex.cast(double) (== num_value of the term, whose dt is
-    always one of NUMERIC_DTS), level = lvl (== promotion_level, the
-    dt_for_level mapping is bijective on 0..3), exact =
-    when(lex rlike guard, lex.cast(decimal)) (== exact_decimal).
-    Keeping only 2 fields minimizes how many attribute references a
-    parent expression needs — see ENumRef's docstring for why that
-    bounds Catalyst's predicate-pushdown tree growth."""
-    ok = value.isNotNull() & level.isNotNull()
-    return F.struct(
-        F.when(ok, _numeric_lex(value, level, exact)).alias("lex"),
-        F.when(ok, level).alias("lvl"),
-    )
-
-
-def term_from_numeric_parts(parts: Column) -> Column:
-    """Rebuild the full term struct from a numeric-parts column —
-    bit-identical to the make_numeric_term output the parts encode."""
-    return F.when(
-        parts["lex"].isNotNull() & parts["lvl"].isNotNull(),
-        make_term(
-            F.lit(KIND_LITERAL),
-            parts["lex"],
-            dt_for_level(parts["lvl"]),
-            F.lit(None),
-        ),
-    )
-
-
 def make_numeric_term(value: Column, level: Column, exact: Column | None = None) -> Column:
     """Build a numeric literal term from a double value + promotion level.
     NULL value or NULL level -> NULL term (error propagation).
@@ -416,7 +369,11 @@ def make_numeric_term(value: Column, level: Column, exact: Column | None = None)
     be off in the last digit (e.g. 105591 * 41.403). The double
     ``value`` still gates error propagation and feeds float/double
     levels."""
-    lex = _numeric_lex(value, level, exact)
+    lex = format_numeric_lex(value, level)
+    if exact is not None:
+        lex = F.when(
+            (level <= 1) & exact.isNotNull(), _format_exact_lex(exact, level)
+        ).otherwise(lex)
     return F.when(
         value.isNotNull() & level.isNotNull(),
         make_term(

@@ -187,6 +187,56 @@ def test_constant_row_iris_scan_one_keyed_table(spark):
     assert scans("SELECT ?p ?o WHERE { <urn:nosuch:1> ?p ?o }") == []
 
 
+def _workload_template(name):
+    """A query template of the benchmark's ``interactive`` workload
+    (perfbench/workloads.py, which imports no engine)."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    wl = sys.modules.get("perfbench_workloads")
+    if wl is None:
+        path = Path(__file__).resolve().parents[1] / "perfbench" / "workloads.py"
+        spec = importlib.util.spec_from_file_location("perfbench_workloads", path)
+        wl = importlib.util.module_from_spec(spec)
+        sys.modules[spec.name] = wl  # dataclasses resolve their module
+        spec.loader.exec_module(wl)
+    return wl.PREFIXES, next(t for t in wl.INTERACTIVE if t.name == name)
+
+
+@pytest.mark.parametrize(
+    "name, params, optimized_max, analyzed_max",
+    [
+        # REGEX, ordering comparisons, !STRENDS and STRLEN in one FILTER:
+        # each condition reaches the Filter as a Boolean, STRLEN as an
+        # integer (22,130 optimized characters when each went through
+        # a term struct and its effective boolean value)
+        ("filter_builtins", {"pre": "FU", "bal": 1235, "digit": 6}, 5_500, None),
+        # ?p * (100 - d) / 100 as a BIND: the constant pair folds and
+        # each arithmetic level reads staged attributes (41,409
+        # optimized and 230,390 analyzed characters when every level
+        # re-expanded its operands)
+        ("bind_arith", {"c": 82, "d": 5}, 10_000, 76_000),
+    ],
+)
+def test_expression_plans_stay_small(spark, name, params, optimized_max, analyzed_max):
+    from scio_sparql_spark.sources.bridge import bridge_ctx
+
+    from .test_sparql_fuzz import SF
+    from .test_unfolding import TABLES
+
+    prefixes, template = _workload_template(name)
+    quads, mapping = bridge_ctx(spark, SF, TABLES)
+    df = execute_sparql(quads, prefixes + template.sparql.format(**params), star_tables=mapping)
+    qe = df._jdf.queryExecution()
+    optimized = len(qe.optimizedPlan().toString())
+    assert optimized <= optimized_max, optimized
+    if analyzed_max is not None:
+        analyzed = len(qe.analyzed().toString())
+        assert analyzed <= analyzed_max, analyzed
+    assert df.count() > 0
+
+
 def test_exact_dedup_partial_aggregation(spark):
     docs = spark.createDataFrame(
         [(i, f"text {i % 7}") for i in range(30)], ["doc_id", "text"]

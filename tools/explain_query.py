@@ -2,9 +2,12 @@
 
 Usage: python tools/explain_query.py <out_dir> <out_suffix> <query> [query ...]
 Writes <out_dir>/<query>_<out_suffix>.txt, creating <out_dir> if
-needed. $SPARK_GRAFT_SF_DIR picks the
+needed, and next to it <query>_<out_suffix>.sizes.json with the
+character lengths of the analyzed and optimized logical plans, which
+show expression-tree growth. $SPARK_GRAFT_SF_DIR picks the
 data dir (default /root/testdata/sf0.1).
 """
+import json
 import os
 import sys
 
@@ -35,13 +38,21 @@ def main():
     os.makedirs(outdir, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        qe = df._jdf.queryExecution()
+        plan = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
+        sizes = {
+            "analyzed_chars": len(qe.analyzed().toString()),
+            "optimized_chars": len(qe.optimizedPlan().toString()),
+        }
         out = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(out, "w") as f:
             f.write(plan)
-        print(f"wrote {out} ({len(plan)} chars)")
+        with open(os.path.join(outdir, f"{name}_{suffix}.sizes.json"), "w") as f:
+            json.dump(sizes, f)
+        print(
+            f"wrote {out} ({len(plan)} chars; analyzed {sizes['analyzed_chars']}, "
+            f"optimized {sizes['optimized_chars']})"
+        )
 
 
 if __name__ == "__main__":
