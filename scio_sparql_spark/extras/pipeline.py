@@ -398,9 +398,7 @@ def clean_corpus(
     the whitespace token count AND the email redaction are the SAME
     shared expressions the standalone operators project
     (textstats.lang_pred_expr / _tokens / redact_email_expr), so this
-    entry's driver hash gates them too — the r14 rotation ledger
-    retires text_langid and the r15 ledger retires text_pii against
-    these embeddings.
+    entry's driver hash gates them too.
 
     Scale design (100 TB): lang-ID, token count and the digest are
     map-side Column expressions evaluated BEFORE the shuffle, so the

@@ -89,8 +89,8 @@ def bpe_token_count(
     Scale: one narrow projection per document, zero shuffle, zero
     Python; ~2x|merges| string replaces inside whole-stage codegen.
     The merge table is a query-plan constant (a few hundred bytes) —
-    nothing to broadcast or look up. The DuckDB oracle replicates the
-    same replace chain symbol-for-symbol (workload._bpe_oracle_sql)."""
+    nothing to broadcast or look up. tests/test_extras.py checks it
+    against a pure-Python BPE apply."""
     merges = BPE_MERGES if merges is None else merges
     _validate_merges(merges)
     s = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", "_")
@@ -439,8 +439,7 @@ def redact_email_expr(text) -> "F.Column":
     """Email redaction as ONE shared Column expression — projected by
     pii_stats below and gated driver-hash inside docs_clean_pipeline's
     clean_text output (pipeline.clean_corpus), so neither site can
-    drift (r15; the lang_pred_expr sharing discipline). The r15
-    rotation ledger retires text_pii against that embedding."""
+    drift (the lang_pred_expr sharing discipline)."""
     return F.regexp_replace(text, PII_EMAIL, "<EMAIL>")
 
 

@@ -573,10 +573,9 @@ def host_domain_counts(
     df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
 ) -> DataFrame:
     """BOTH count grains in one frame — ``(grain, key, n_pages)``
-    with grain ∈ {host, domain} (r17 gate; the ledger's dedup_hosts
-    retirement plan): every host_counts row tagged 'host', plus the
-    eTLD+1 rollup tagged 'domain'. Hosts with no registrable domain
-    (bare public suffixes) appear at the host grain only.
+    with grain ∈ {host, domain}: every host_counts row tagged 'host',
+    plus the eTLD+1 rollup tagged 'domain'. Hosts with no registrable
+    domain (bare public suffixes) appear at the host grain only.
 
     Scale: host determines domain, so the domain grain is a ROLLUP of
     the already-aggregated host counts — the second groupBy runs over

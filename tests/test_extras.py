@@ -1992,7 +1992,7 @@ def test_session_window_exact_gap_merges(spark):
     """Spark session_window boundary (measured on PySpark 4.1.2): an
     event arriving EXACTLY gap after the previous one MERGES into the
     same session — only a strictly greater gap splits. This is the
-    semantics the events_session_windows oracle encodes as
+    semantics the stream_session_windows oracle encodes as
     `diff_micros > gap_micros` (ADVICE r7: the old test double-counted
     the offset, placed the third event 60min out, and asserted the
     wrong split-at-exact-gap semantics)."""

@@ -271,18 +271,15 @@ def test_not_exists_and_minus_plan_as_anti_hash_joins(spark, quads):
 def test_catalog_sparql_plans_free_of_anti_patterns(spark):
     """Sweeping audit: every sparql_* catalog entry's executed plan is
     free of scale anti-patterns — no CartesianProduct, no Python eval,
-    and SortAggregate only where inherent (MIN/MAX/SAMPLE aggregates
-    carry term structs in the buffer, which Spark cannot
-    hash-aggregate; see compiler._agg_exprs). BNLJ is allowed only for
-    the UNDEF-tolerant VALUES join (OR-conditions over a broadcast
-    literal list)."""
+    and SortAggregate only where inherent (MIN/MAX aggregates carry
+    term structs in the buffer, which Spark cannot hash-aggregate; see
+    compiler._agg_exprs). BNLJ is allowed only for the UNDEF-tolerant
+    VALUES join (OR-conditions over a broadcast literal list)."""
     from scio_sparql_spark import workload
 
-    SORT_AGG_OK = {"sparql_agg_minmax", "sparql_agg_expr", "sparql_sample"}
-    # values_undef: OR-conditions over a broadcast literal list;
-    # describe: constant target folds the join condition into the scan,
-    # leaving a broadcast NLJ against the 1-row resource set
-    BNLJ_OK = {"sparql_values_undef", "sparql_describe"}
+    SORT_AGG_OK = {"sparql_agg_minmax", "sparql_agg_expr"}
+    # values_undef: OR-conditions over a broadcast literal list
+    BNLJ_OK = {"sparql_values_undef"}
     sf = "/root/testdata/sf0.001"
     offenders = {}
     for name, fn in workload.build_queries().items():
@@ -305,52 +302,41 @@ def test_catalog_sparql_plans_free_of_anti_patterns(spark):
 
 def test_catalog_extras_plans_free_of_anti_patterns(spark):
     """Same sweep for the pipeline extras. Allowlisted by design:
-    ngram_jaccard / embedding_cosine are the documented QUADRATIC exact
-    baselines (their LSH variants are the scale path); bm25 and
-    text_lm_score join a 1-row corpus-stats aggregate without keys
-    (broadcast NLJ of a scalar — |vocab| for the LM's smoothing
-    denominator); keep_best's max_by carries the winning row in the buffer
-    (same inherent SortAggregate as term MIN/MAX); multimodal entries
-    are the sanctioned Arrow mapInPandas users."""
+    bm25 and text_lm_score join a 1-row corpus-stats aggregate without
+    keys (broadcast NLJ of a scalar — |vocab| for the LM's smoothing
+    denominator); multimodal_features is a sanctioned Arrow
+    mapInPandas user. No extras entry may SortAggregate."""
     from scio_sparql_spark import workload
 
     BNLJ_OK = {
-        "dedup_ngram_jaccard",
-        "dedup_embedding_cosine",
         "retrieval_bm25",
         "text_lm_score",
-        # r11/r12: each cross-joins ONE scalar row (the corpus token
-        # total; for the CMS entries also the <=4-row dvals identity
-        # broadcast) into the final projection — the same
-        # scalar-broadcast shape as bm25/lm_score above
-        "corpus_heavy_hitters_cms",
+        # each cross-joins ONE scalar row (the corpus token total; for
+        # the CMS entry also the <=4-row dvals identity broadcast) into
+        # the final projection — the same scalar-broadcast shape as
+        # bm25/lm_score above
         "corpus_heavy_hitters_cms_bounded",
         "text_pmi_bigrams",
-        # r14: DSIR cross-joins the ONE-row (n_raw, n_t) totals into
-        # the broadcast weights projection — the same scalar-broadcast
-        # shape as bm25/lm_score above
-        "sample_dsir",
-        # r16: the Gumbel sampler gate shares sample_dsir's whole score
-        # chain (dsir_scores), including that one-row totals broadcast;
-        # the perturbation itself is a pure Column expression
+        # DSIR's score chain (dsir_scores) cross-joins the ONE-row
+        # (n_raw, n_t) totals into the broadcast weights projection —
+        # the same scalar-broadcast shape as bm25/lm_score above; the
+        # Gumbel perturbation itself is a pure Column expression
         "dsir_sample",
     }
-    SORT_AGG_OK = {"dedup_keep_best"}
     ARROW_OK = {
         "multimodal_features",
-        "multimodal_frames",
-        # WARC parse is the documented Arrow ingest stage (r14): binary
+        # WARC parse is the documented Arrow ingest stage: binary
         # archive bytes -> records can't be a Column expression; the
-        # range-split CDX read keeps it one seek per record batch
-        "docs_warc_ingest",
-        # r16: the WET round-trip reads conversion records through the
-        # SAME Arrow WARC ingest stage (and writes through the same
-        # mapInPandas archive writer); everything else is native
+        # range-split CDX read keeps it one seek per record batch. The
+        # WET round-trip reads conversion records through that stage
+        # (and writes through the mapInPandas archive writer);
+        # everything else is native
         "docs_wet_roundtrip",
-        # r15: the composed crawl pipeline INGESTS through the same
-        # WARC Arrow stage; every post-ingest stage (html_extract,
+        # the composed crawl pipeline INGESTS through the same WARC
+        # Arrow stage; every post-ingest stage (html_extract,
         # line_dedup, url_dedup) is native Columns — the standalone
-        # trio entries prove that, swept un-allowlisted
+        # docs_html_extract and dedup_lines entries prove that, swept
+        # un-allowlisted
         "docs_crawl_pipeline",
         # sanctioned dense-linear-algebra Arrow users (r8): each is the
         # documented vectorized-matmul path where unrolled SQL either
@@ -387,10 +373,9 @@ def test_catalog_extras_plans_free_of_anti_patterns(spark):
         "embed_perceptron",
         # the documented Arrow slow path for production-size BPE merge
         # tables: the native replace chain's plan is LINEAR in |merges|
-        # (unparseable at 1k), so the 1k-vocab entries ship a broadcast
+        # (unparseable at 1k), so the 1k-vocab entry ships a broadcast
         # ranks dict through a pandas UDF by design (textstats.
         # bpe_token_count_arrow; VERDICT r8 item 2)
-        "text_bpe_tokens_1k",
         "docs_pack_bpe",
     }
     sf = "/root/testdata/sf0.001"
@@ -410,7 +395,7 @@ def test_catalog_extras_plans_free_of_anti_patterns(spark):
             or "FlatMapGroupsInPandas" in plan  # grouped-Arrow apply
         ) and name not in ARROW_OK:
             flags.append("ArrowEval")
-        if "SortAggregate" in plan and name not in SORT_AGG_OK:
+        if "SortAggregate" in plan:
             flags.append("SortAggregate")
         if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_OK:
             flags.append("BNLJ")
@@ -603,12 +588,19 @@ def test_kmv_sketch_two_level_no_whole_key_sort(spark):
 
 
 def test_kmv_workload_entry_spreads_the_map_stage(spark):
-    """VERDICT r10 #2a: the catalog entry must not run the shingle
-    explode+md5 on the input's single parquet row group — spread()
-    repartitions to defaultParallelism before the map stage."""
-    from scio_sparql_spark import workload
+    """VERDICT r10 #2a: the per-source KMV cardinality composition
+    must not run the shingle explode+md5 on the input's single parquet
+    row group — spread() repartitions to defaultParallelism before the
+    map stage."""
+    from scio_sparql_spark.extras import sketches
+    from scio_sparql_spark.extras.util import spread
+    from scio_sparql_spark.sources.bridge import load_table
 
-    df = workload.q_corpus_cardinality_kmv(spark, "/root/testdata/sf0.001")
+    docs = spread(load_table(spark, "/root/testdata/sf0.001", "documents"))
+    grams = docs.select(
+        "source", F.explode(dedup.token_ngrams(F.col("text"), 3)).alias("g")
+    )
+    df = sketches.kmv_distinct(grams, "source", "g", k=32)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange RoundRobinPartitioning" in plan, plan[:3000]
 
@@ -768,23 +760,42 @@ def test_expensive_hof_duplication_sweep(spark):
     #     join — deliberate plan shape (same multi-branch contract as
     #     the Jaccard prefix path), measured 9x cheaper than the plain
     #     join on adversarial df and 2.9s at the sf0.01 gate.
+    #   quality_weighted_sample, ngram_jaccard_pairs and int8_dot_topk
+    #     are library calls over sf0.001 (no catalog entry of their own).
     WATCHED = {
-        "sample_quality_weighted": (1, 3),
+        "quality_weighted_sample": (1, 3),
         "text_classifier_score": (2, 2),
         "docs_filter_funnel": (2, 6),
         "docs_gopher_filter": (2, 6),
         "text_quality": (2, 6),
         "text_lm_score": (2, 6),
         "embed_random_projection": (8, 8),
-        "dedup_ngram_jaccard": (0, 8),
+        "ngram_jaccard_pairs": (0, 8),
         "dedup_containment": (0, 14),
-        "ann_int8_topk": (0, 8),
+        "int8_dot_topk": (0, 8),
     }
+    from scio_sparql_spark.extras import similarity, textstats
+    from scio_sparql_spark.extras.util import spread
+    from scio_sparql_spark.sources.bridge import load_table
+
     qs = workload.build_queries()
     sf = "/root/testdata/sf0.001"
+    docs = load_table(spark, sf, "documents")
+    emb = load_table(spark, sf, "embeddings")
+    qv = list(emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0])
+    library = {
+        "quality_weighted_sample": lambda: textstats.quality_weighted_sample(
+            spread(docs)
+        ),
+        "ngram_jaccard_pairs": lambda: dedup.ngram_jaccard_pairs(
+            docs, threshold=0.2, n=3
+        ),
+        "int8_dot_topk": lambda: similarity.int8_dot_topk(emb, qv, k=10),
+    }
     over = {}
     for name, (max_agg, max_tr) in WATCHED.items():
-        opt = qs[name](spark, sf)._jdf.queryExecution().optimizedPlan().toString()
+        df = library[name]() if name in library else qs[name](spark, sf)
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
         n_agg, n_tr = opt.count("aggregate("), opt.count("transform(")
         if n_agg > max_agg or n_tr > max_tr:
             over[name] = (n_agg, max_agg, n_tr, max_tr)

@@ -500,12 +500,8 @@ def test_entry_docstring_counts_match_catalog():
 
     doc = entrymod.__doc__
     total = len(workload._catalog_names())
-    retired = len(workload.CATALOG_RETIRED)
-    active = total - retired
     m = re.search(r"(\d+) entries — the", doc)
     assert m and int(m.group(1)) == total, (m and m.group(1), total)
-    m = re.search(r"CATALOG_RETIRED \((\d+) entries", doc)
-    assert m and int(m.group(1)) == retired, (m and m.group(1), retired)
     m = re.search(r"(\d+) ACTIVE entries", doc)
-    assert m and int(m.group(1)) == active, (m and m.group(1), active)
+    assert m and int(m.group(1)) == total, (m and m.group(1), total)
     assert len(workload.CATALOG_FRONT) == 50

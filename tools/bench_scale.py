@@ -42,7 +42,6 @@ PREDICTED = {
     "embed_kmeans": "~10x: map-only Arrow-matmul assignment (r17, iteration-invariant codegen) + one groupBy per Lloyd round, all linear",
     "embed_perceptron": "~10x: map-only Arrow partial-sum epoch pass (r17) + a dim-row groupBy per epoch, all linear; locally compile/session-floor-dominated so the observed ratio sits far under 10",
     "corpus_heavy_hitters_cms_bounded": "~10x: one corpus scan into a constant-size grid; probe side constant. rows=0 at sf1 is SEMANTICALLY CORRECT: decorrelation splits each heavy hitter into 10 rotated tokens, each ~1/10 its share, so none clears the >=1%-of-corpus gate (DuckDB-verified: max sf1 token share 0.34%)",
-    "corpus_cardinality_kmv": "~10x: hash projection + distinct; k-bounded per-key state",
     "events_quantiles_histogram": "~10x: one partial-agg scan into a constant bucket grid",
     "graph_triangles": "~10x: 10 disjoint graph copies; wedge work O(m^1.5) holds within each copy",
     "retrieval_bm25": "~10x: map-side term filter then linear stats",
@@ -54,11 +53,9 @@ PREDICTED = {
     "stream_interval_join": "~10x: per-event state insert/probe within the interval horizon; state-store maintenance fixed per micro-batch (shuffle_partitions scoped by run_bounded)",
     # r14 late additions: the two new driver gates
     "ann_pq_rerank": "sublinear wall-clock at this scale: the one-off codegen compile of the ADC/rerank plans dominates (fixed, amortizes at 100 TB); encode is an Arrow int64 matmul per batch (linear, vectorized — the r14 re-measure after BENCH_SCALE caught the ORIGINAL unrolled-literal encode running interpreted: 253s sf1, ratio 11.4; Arrow rewrite: 2.4s warm sf1); stage-2 rescan fixed at prefilter=100 rows",
-    "sample_dsir": "~10x: one token-stream shuffle into the (doc,bucket) histogram, reused by ReuseExchange for both the model counts and the doc scores; weights table constant (buckets fixed); TakeOrdered top-k",
     # r15 additions (VERDICT r14 next #6): the crawl-pipeline text trio
     # + the composed flagship
     "docs_html_extract": "~10x: ONE map-only regexp_replace chain, zero shuffle, whole-stage codegen; per-row cost fixed by the shape-preserved doc-length distribution, row count 10x",
-    "dedup_url": "~10x: map-only canonicalization (regexp/array Columns); only the canonical short string shuffles into a partial-agg min-id groupBy",
     "dedup_lines": "~10x: two 32-hex-key shuffles (line-key counts, then per-doc reassembly); collect_list state bounded by ONE doc's line count (shape-preserved); the >=min_docs sliver join is AQE-planned (no forced broadcast)",
     "docs_crawl_pipeline": "~10x: WARC write+read linear in archive bytes (16 shards -> CDX range splits over defaultParallelism); extract map-only; both dedups short-key; survivor join keyed on doc_id",
     # r16 additions (VERDICT r15 next #8): the two remaining >=0.85s
@@ -66,14 +63,12 @@ PREDICTED = {
     "dedup_cross_corpus": "~10x: benchmark-side bands broadcast (benchmark split is 1/20 of the corpus, grows 10x but stays broadcast-size at these SFs); corpus signature build map-only linear; banded candidates bounded by the per-bucket cap, exact verify on the candidate sliver only",
     "graph_pagerank": "~10x: 3 fixed rounds, each one dst-keyed shuffle linear in edges (FK edge set grows 10x); rank state one row per node; integer micro-unit arithmetic, no convergence loop",
     # r16 new gates (same-round scale proof, the r15 precedent)
-    "dsir_sample": "~10x: sample_dsir's one token-stream shuffle + ReuseExchange + constant weights broadcast, plus a map-only md5/ln perturbation Column; TakeOrdered top-k",
-    "dedup_hosts": "~10x: map-only canonicalization; only the short host string shuffles into one partial-agg groupBy (output rows = distinct hosts, ~constant under decorrelated 10x)",
+    "dsir_sample": "~10x: one token-stream shuffle into the (doc,bucket) histogram, reused by ReuseExchange for both the model counts and the doc scores; constant weights broadcast, plus a map-only md5/ln perturbation Column; TakeOrdered top-k",
     "docs_wet_roundtrip": "~10x: conversion-record WARC write+read linear in archive bytes, same 16-shard/CDX range-split shape as docs_crawl_pipeline's ingest",
     # r17 additions (VERDICT r16 next #8): the two remaining >=1.9s
     # entries with no observed-vs-predicted record, plus the new gate
-    "corpus_heavy_hitters_cms": "~10x BOTH sides: grid build one constant-state partial-agg scan (linear in tokens); the exhaustive distinct-token probe is the vocabulary-keyed shuffle this entry's own docstring flags as the anti-pattern its bounded sibling replaces — vocab grows ~10x under decorrelation, so the probe shuffle grows with it (the honest cost of end-to-end oracle-checkability)",
     "sparql_update_roundtrip": "~10x: each update op is one BGP match (parquet-pushdown scans) + an anti-join delete / union insert over quads, all linear; the 3-op sequence stays one lazy plan; query-back one scan",
-    "domain_counts": "~10x: dedup_hosts' map-only canonicalize + one short-host-key partial-agg groupBy, then the eTLD+1 rollup groupBy over #hosts rows ONLY (distinct hosts ~constant under decorrelated 10x, so the second shuffle is noise); output rows = hosts + domains",
+    "domain_counts": "~10x: map-only canonicalize + one short-host-key partial-agg groupBy, then the eTLD+1 rollup groupBy over #hosts rows ONLY (distinct hosts ~constant under decorrelated 10x, so the second shuffle is noise); output rows = hosts + domains",
 }
 
 

@@ -2,10 +2,13 @@
 on Spark AND its oracle_sql() on DuckDB, compare row bags.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+Runs on local[$SPARK_GRAFT_CPUS] (default: every core) and prints the
+sweep's total wall time on its last line.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -38,8 +41,10 @@ def norm(v):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
+    t_start = time.time()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -100,10 +105,11 @@ def main():
         else:
             print(f"ok   {name}: {len(srows2)} rows match ({time.time()-t0:.1f}s)")
     print()
+    wall = f"{time.time() - t_start:.0f}s wall"
     if failures:
-        print("FAILURES:", failures)
+        print("FAILURES:", failures, wall)
         sys.exit(1)
-    print("all green")
+    print("all green", wall)
 
 
 if __name__ == "__main__":
