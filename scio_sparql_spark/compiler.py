@@ -14,21 +14,32 @@ Conventions:
   equi-join (hash-joinable); maybe-unbound shared vars get null-tolerant
   ON conditions — the same assured-bindings discipline as the reference
   (Interpreter.scala:152-162, 261-277) without stringifying keys.
+
+Each PySpark call that builds a Column node is a py4j round trip to the
+JVM, so the query skeleton is Spark SQL text: the leaves
+(``_c_statementpattern``, ``_c_starscan``, graph scoping, all built from
+``_term_eq_sql``), the join ON conditions and coalescing projections
+over the ``__l*``/``__r*`` aliases, and every projection are one
+``filter(str)``/``selectExpr`` call each; so are the ASK projection and
+the CONSTRUCT/DESCRIBE triples (``engine``) and template instantiation
+(``update._instantiate``). Expressions (FILTER, BIND, ORDER BY,
+aggregates: ``exprs.py`` and the numeric builders in ``terms.py``)
+are still Column trees, joined to SQL-text conditions where a join ON
+clause carries both.
 """
 
 from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import algebra as A
 from .checkpoints import CheckpointScope
 from .exprs import compile_bool, compile_value
 from .terms import (
-    TERM_TYPE,
+    NULL_TERM_SQL,
     Term,
     XSD_INTEGER,
     XSD_STRING,
@@ -40,10 +51,52 @@ from .terms import (
     num_value,
     promotion_level,
     sort_key,
+    sql_ident,
+    sql_string,
     typed_term,
 )
 
 _alias_counter = itertools.count()
+
+
+def _qual(alias: str, v: str) -> str:
+    """SQL text of column ``v`` of the DataFrame aliased ``alias``."""
+    return f"{sql_ident(alias)}.{sql_ident(v)}"
+
+
+def _on(cond: str | None, extra: list) -> Column:
+    """A join condition: the SQL text ``cond`` (None: none) AND each
+    Column of ``extra``; true when both are empty."""
+    on = F.expr(cond) if cond is not None else None
+    for c in extra:
+        on = c if on is None else on & c
+    return on if on is not None else F.lit(True)
+
+
+def _term_eq_sql(col: str, t: Term) -> str:
+    """SQL text: term column ``col`` equals the ground term ``t``, field
+    by field (pushes down to the Parquet scan better than whole-struct
+    equality)."""
+    return (
+        f"({col}.kind = {t.kind} AND {col}.lex = {sql_string(t.lex)} AND "
+        f"{col}.dt <=> {sql_string(t.dt)} AND {col}.lang <=> {sql_string(t.lang)})"
+    )
+
+
+def _filter(df: DataFrame, conds: list) -> DataFrame:
+    """``df`` filtered by the conjunction of the SQL texts in ``conds``
+    (None entries skipped)."""
+    conds = [c for c in conds if c is not None]
+    return df.filter(" AND ".join(conds)) if conds else df
+
+
+def _projection(names, columns) -> list[str]:
+    """SQL text selecting ``names`` from ``columns``; a name not among
+    them is unbound."""
+    return [
+        sql_ident(v) if v in columns else f"{NULL_TERM_SQL} AS {sql_ident(v)}"
+        for v in names
+    ]
 
 
 def _env(df: DataFrame) -> dict:
@@ -98,32 +151,21 @@ class Compiler:
             rel = self.star_catalog.pattern_quads(node.s, node.p, node.o)
             if rel is not None:
                 df = rel
-        cond = F.lit(True)
         positions = [("subject", node.s), ("predicate", node.p), ("object", node.o)]
-        if node.graph_mode == "named":
-            if isinstance(node.graph, Term):
-                cond = cond & self._term_eq("graph", node.graph)
-            else:
-                cond = cond & F.col("graph").isNotNull()
-                positions.append(("graph", node.graph))
-        elif self.strict_default:
-            cond = cond & F.col("graph").isNull()
-        for colname, pat in positions:
-            if isinstance(pat, Term):
-                cond = cond & self._term_eq(colname, pat)
-        df = df.filter(cond)
+        conds = []
+        if node.graph_mode == "named" and not isinstance(node.graph, Term):
+            positions.append(("graph", node.graph))
+        conds.append(self._graph_cond(node.graph_mode, node.graph))
+        conds += [_term_eq_sql(c, pat) for c, pat in positions if isinstance(pat, Term)]
         # repeated variables constrain positions to be term-identical
         var_positions: dict[str, list[str]] = {}
         for colname, pat in positions:
             if isinstance(pat, A.Var):
                 var_positions.setdefault(pat.name, []).append(colname)
-        eqs = F.lit(True)
         for cols in var_positions.values():
-            for a, b in zip(cols, cols[1:]):
-                eqs = eqs & (F.col(a) == F.col(b))
-        df = df.filter(eqs)
-        return df.select(
-            *[F.col(cols[0]).alias(v) for v, cols in var_positions.items()]
+            conds += [f"{a} = {b}" for a, b in zip(cols, cols[1:])]
+        return _filter(df, conds).selectExpr(
+            *[f"{cols[0]} AS {sql_ident(v)}" for v, cols in var_positions.items()]
         )
 
     def _c_starscan(self, node: A.StarScan) -> DataFrame:
@@ -143,44 +185,34 @@ class Compiler:
         )
         if pt is None:  # fusion is gated; this is a wiring bug
             raise RuntimeError("StarScan without a covering property table")
-        cond = F.lit(True)
-        sel: dict[str, Column] = {node.s.name: F.col(pt.subject_col)}
+        conds = []
+        sel = {node.s.name: sql_ident(pt.subject_col)}
         for p, o in node.items:
-            c = F.col(pt.pred_cols[p.lex])
-            cond = cond & c.isNotNull()
+            c = sql_ident(pt.pred_cols[p.lex])
+            conds.append(f"{c} IS NOT NULL")
             if isinstance(o, Term):
-                cond = cond & self._term_eq_col(c, o)
+                conds.append(_term_eq_sql(c, o))
             elif o.name in sel:
                 # repeated object var inside one star: values must agree
-                cond = cond & (sel[o.name] == c)
+                conds.append(f"{sel[o.name]} = {c}")
             else:
                 sel[o.name] = c
         rows = self.star_catalog.star_rows(pt, node.items) if self.unfold else pt.df
-        return rows.filter(cond).select(*[c.alias(v) for v, c in sel.items()])
+        return _filter(rows, conds).selectExpr(
+            *[f"{c} AS {sql_ident(v)}" for v, c in sel.items()]
+        )
 
-    @staticmethod
-    def _term_eq_col(c: Column, t: Term) -> Column:
-        cond = (c["kind"] == t.kind) & (c["lex"] == t.lex)
-        cond = cond & (c["dt"].eqNullSafe(F.lit(t.dt)))
-        cond = cond & (c["lang"].eqNullSafe(F.lit(t.lang)))
-        return cond
-
-    @staticmethod
-    def _term_eq(colname: str, t: Term) -> Column:
-        """Field-level equality against a ground term — pushes down to the
-        Parquet scan better than whole-struct equality."""
-        return Compiler._term_eq_col(F.col(colname), t)
-
-    def _graph_scoped_quads(self, graph_mode: str, graph) -> DataFrame:
-        df = self.quads
+    def _graph_cond(self, graph_mode: str, graph) -> str | None:
+        """SQL text of the graph scope of a pattern's quads; None when
+        every quad is in scope."""
         if graph_mode == "named":
             if isinstance(graph, Term):
-                df = df.filter(self._term_eq("graph", graph))
-            else:
-                df = df.filter(F.col("graph").isNotNull())
-        elif self.strict_default:
-            df = df.filter(F.col("graph").isNull())
-        return df
+                return _term_eq_sql("graph", graph)
+            return "graph IS NOT NULL"
+        return "graph IS NULL" if self.strict_default else None
+
+    def _graph_scoped_quads(self, graph_mode: str, graph) -> DataFrame:
+        return _filter(self.quads, [self._graph_cond(graph_mode, graph)])
 
     def _c_zerolengthpath(self, node: A.ZeroLengthPath) -> DataFrame:
         """Zero-length arm of ``p?``: both ends are the same graph node
@@ -298,11 +330,11 @@ class Compiler:
         df = reach
         sel = []
         if isinstance(node.s, Term):
-            df = df.filter(F.col("src") == node.s.to_column())
+            df = df.filter(f"src = {node.s.sql()}")
         else:
             sel.append(F.col("src").alias(node.s.name))
         if isinstance(node.o, Term):
-            df = df.filter(F.col("dst") == node.o.to_column())
+            df = df.filter(f"dst = {node.o.sql()}")
         else:
             sel.append(F.col("dst").alias(node.o.name))
         if isinstance(node.s, A.Var) and isinstance(node.o, A.Var) and node.s == node.o:
@@ -332,8 +364,8 @@ class Compiler:
                 # unbound (NULL term): a bare 0-column Singleton would
                 # break the enclosing Join's compatibility condition,
                 # which references the service's vars by name
-                return self.spark.range(1).select(
-                    *[null_term().alias(v) for v in sorted(node.vars)]
+                return self.spark.range(1).selectExpr(
+                    *[f"{NULL_TERM_SQL} AS {sql_ident(v)}" for v in sorted(node.vars)]
                 )
             raise NotImplementedError(
                 f"SERVICE endpoint not registered: <{node.iri}> — pass "
@@ -354,31 +386,27 @@ class Compiler:
 
     # --- joins ---
     def _join_cond(self, lnode, rnode, la: str, ra: str):
-        """(equi+null-tolerant ON condition, equi key list). Assured shared
-        vars -> plain equality (hash join); maybe-unbound shared vars ->
-        null-tolerant (UNDEF/OPTIONAL compatibility, ValuesTest UNDEF case)."""
+        """(equi+null-tolerant ON condition as SQL text, or None; equi key
+        list). Assured shared vars -> plain equality (hash join);
+        maybe-unbound shared vars -> null-tolerant (UNDEF/OPTIONAL
+        compatibility, ValuesTest UNDEF case)."""
         shared = sorted(lnode.vars & rnode.vars)
         keys = [v for v in shared if v in lnode.assured and v in rnode.assured]
         loose = [v for v in shared if v not in keys]
-        cond = None
-        for v in keys:
-            c = F.col(f"{la}.{v}") == F.col(f"{ra}.{v}")
-            cond = c if cond is None else cond & c
+        conds = [f"{_qual(la, v)} = {_qual(ra, v)}" for v in keys]
         for v in loose:
-            lc, rc = F.col(f"{la}.{v}"), F.col(f"{ra}.{v}")
-            c = lc.isNull() | rc.isNull() | (lc == rc)
-            cond = c if cond is None else cond & c
-        return cond, keys
+            lc, rc = _qual(la, v), _qual(ra, v)
+            conds.append(f"({lc} IS NULL OR {rc} IS NULL OR {lc} = {rc})")
+        return (" AND ".join(conds) or None), keys
 
-    def _merged_select(self, lnode, rnode, la, ra):
+    def _merged_select(self, lnode, rnode, la, ra) -> list[str]:
         cols = []
         for v in sorted(lnode.vars | rnode.vars):
             if v in lnode.vars and v in rnode.vars:
-                cols.append(F.coalesce(F.col(f"{la}.{v}"), F.col(f"{ra}.{v}")).alias(v))
-            elif v in lnode.vars:
-                cols.append(F.col(f"{la}.{v}").alias(v))
+                c = f"coalesce({_qual(la, v)}, {_qual(ra, v)})"
             else:
-                cols.append(F.col(f"{ra}.{v}").alias(v))
+                c = _qual(la if v in lnode.vars else ra, v)
+            cols.append(f"{c} AS {sql_ident(v)}")
         return cols
 
     def _c_join(self, node: A.Join) -> DataFrame:
@@ -404,8 +432,8 @@ class Compiler:
         if cond is None:
             joined = lal.crossJoin(ral)
         else:
-            joined = lal.join(ral, cond, "inner")
-        return joined.select(*self._merged_select(node.left, node.right, la, ra))
+            joined = lal.join(ral, F.expr(cond), "inner")
+        return joined.selectExpr(*self._merged_select(node.left, node.right, la, ra))
 
     def _c_leftjoin(self, node: A.LeftJoin) -> DataFrame:
         ldf = self.compile(node.left)
@@ -414,7 +442,7 @@ class Compiler:
         cond, keys = self._join_cond(node.left, node.right, la, ra)
         if not keys:
             rdf = F.broadcast(rdf)
-        lal, ral = ldf.alias(la), rdf.alias(ra)
+        extra = []
         if node.condition is not None:
             # OPTIONAL's FILTER sees both sides: compile it into the ON
             # clause (correct SPARQL scope; the reference only pre-filters
@@ -422,12 +450,9 @@ class Compiler:
             env = {v: F.col(f"{la}.{v}") for v in node.left.vars}
             env.update({v: F.col(f"{ra}.{v}") for v in node.right.vars})
             c = compile_bool(node.condition, env)
-            c = F.coalesce(c, F.lit(False))  # error -> no match
-            cond = c if cond is None else cond & c
-        if cond is None:
-            cond = F.lit(True)
-        joined = lal.join(ral, cond, "left_outer")
-        return joined.select(*self._merged_select(node.left, node.right, la, ra))
+            extra.append(F.coalesce(c, F.lit(False)))  # error -> no match
+        joined = ldf.alias(la).join(rdf.alias(ra), _on(cond, extra), "left_outer")
+        return joined.selectExpr(*self._merged_select(node.left, node.right, la, ra))
 
     def _c_minus(self, node: A.Minus) -> DataFrame:
         """SPARQL MINUS disjoint-domain rule (spec §8.3): drop left rows
@@ -446,12 +471,11 @@ class Compiler:
             v in node.left.assured and v in node.right.assured for v in shared
         )
         if not both_assured:
-            overlap = None
-            for v in shared:
-                c = F.col(f"{la}.{v}").isNotNull() & F.col(f"{ra}.{v}").isNotNull()
-                overlap = c if overlap is None else overlap | c
-            cond = overlap if cond is None else cond & overlap
-        return ldf.alias(la).join(rdf.alias(ra), cond, "left_anti")
+            overlap = " OR ".join(
+                f"({_qual(la, v)} IS NOT NULL AND {_qual(ra, v)} IS NOT NULL)" for v in shared
+            )
+            cond = overlap if cond is None else f"{cond} AND ({overlap})"
+        return ldf.alias(la).join(rdf.alias(ra), F.expr(cond), "left_anti")
 
     # --- filters (incl. EXISTS / NOT EXISTS) ---
     def _compile_cse(self, df: DataFrame, expr, as_bool: bool = False):
@@ -552,16 +576,13 @@ class Compiler:
         cond, keys = self._join_cond(input_node, sub_node, la, ra)
         if not keys:
             sub = F.broadcast(sub)
+        extra = []
         if lifted:
             env = {v: F.col(f"{la}.{v}") for v in input_node.vars}
             env.update({v: F.col(f"{ra}.{v}") for v in sub_node.vars})
-            for c in lifted:
-                cc = F.coalesce(compile_bool(c, env), F.lit(False))
-                cond = cc if cond is None else cond & cc
-        if cond is None:
-            cond = F.lit(True)
+            extra = [F.coalesce(compile_bool(c, env), F.lit(False)) for c in lifted]
         how = "left_anti" if e.negated else "left_semi"
-        return df.alias(la).join(sub.alias(ra), cond, how)
+        return df.alias(la).join(sub.alias(ra), _on(cond, extra), how)
 
     def _rewrite_exists(self, df: DataFrame, input_node: A.Node, expr):
         """Make EXISTS usable anywhere inside a value expression (BIND,
@@ -608,13 +629,7 @@ class Compiler:
 
     def _c_project(self, node: A.Project) -> DataFrame:
         df = self.compile(node.input)
-        cols = []
-        for v in node.names:
-            if v in df.columns:
-                cols.append(F.col(v))
-            else:
-                cols.append(null_term().alias(v))
-        return df.select(*cols)
+        return df.selectExpr(*_projection(node.names, df.columns))
 
     def _c_distinct(self, node: A.Distinct) -> DataFrame:
         return self._dedup(node.input)
@@ -646,10 +661,7 @@ class Compiler:
             )
         if proj is not None:
             names = list(proj.names)
-            cols = [
-                F.col(v) if v in df.columns else null_term().alias(v) for v in names
-            ]
-            df = df.select(*cols, *[F.col(h) for h in hidden])
+            df = df.selectExpr(*_projection(names, df.columns), *hidden)
         else:
             names = [c for c in df.columns if c not in hidden]
         # dropDuplicates(subset) keeps an arbitrary row's hidden keys per

@@ -19,7 +19,7 @@ from .checkpoints import CheckpointScope
 from .compiler import compile_query
 from .optimize import reorder_joins
 from .sparql.parser import parse_query
-from .terms import KIND_BNODE, KIND_IRI, TERM_TYPE, Term
+from .terms import KIND_BNODE, KIND_IRI, TERM_TYPE, Term, sql_ident
 from .update import _instantiate
 
 
@@ -109,9 +109,7 @@ def execute_sparql(
     if q.form == "ask":
         # limit(1) stops the scan at the first solution; the count-agg is
         # over at most one row
-        return df.limit(1).agg(F.count(F.lit(1)).alias("n")).select(
-            (F.col("n") > 0).alias("ask")
-        )
+        return df.limit(1).selectExpr("count(1) AS n").selectExpr("n > 0 AS ask")
     if q.form == "construct":
         return _construct(df, q.template)
     if q.form == "describe":
@@ -153,11 +151,7 @@ def _construct(df: DataFrame, template: tuple) -> DataFrame:
 
 def _triples(quads: DataFrame) -> DataFrame:
     """The ``s, p, o`` columns CONSTRUCT and DESCRIBE return."""
-    return quads.select(
-        F.col("subject").alias("s"),
-        F.col("predicate").alias("p"),
-        F.col("object").alias("o"),
-    )
+    return quads.selectExpr("subject AS s", "predicate AS p", "object AS o")
 
 
 def _describe(df: DataFrame, targets: tuple, quads: DataFrame, catalog) -> DataFrame:
@@ -183,13 +177,13 @@ def _describe(df: DataFrame, targets: tuple, quads: DataFrame, catalog) -> DataF
     for tgt in targets:
         if isinstance(tgt, A.Var):
             if tgt.name in df.columns:
-                parts.append(df.select(F.col(tgt.name).alias("r")))
+                parts.append(df.selectExpr(f"{sql_ident(tgt.name)} AS r"))
         elif unfold and tgt.kind == KIND_IRI:
             pat = A.StatementPattern(tgt, A.Var("p"), A.Var("o"))
             rows = compile_query(quads, pat, star_catalog=catalog)
-            direct.append(rows.select(tgt.to_column().alias("s"), "p", "o"))
+            direct.append(rows.selectExpr(f"{tgt.sql()} AS s", "p", "o"))
         else:
-            parts.append(spark.range(1).select(tgt.to_column().alias("r")))
+            parts.append(spark.range(1).selectExpr(f"{tgt.sql()} AS r"))
     if not parts and not direct:
         return _triples(quads).limit(0)
     has_var_targets = any(isinstance(t, A.Var) for t in targets)

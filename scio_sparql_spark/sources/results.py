@@ -17,8 +17,12 @@ unbound):
 - ``to_result_tsv_df``: SPARQL 1.1 TSV — full term syntax (``<iri>``,
   ``"lit"^^<dt>``, ``_:b``), lossless; write with ``sep='\\t'``.
 
-All three build native Column expressions — serialization happens
-executor-side under codegen, no Python in the row path.
+Each ``_df`` form is one ``selectExpr`` of Spark SQL text over the
+``sql_ident``-quoted term columns (a column named ``a.b`` is read as
+itself, not as a field path): building it costs six py4j round trips
+whatever the number of variables for JSON and XML, plus one per
+variable for CSV and TSV (one output column each), and serialization
+runs executor-side under codegen, no Python in the row path.
 """
 
 from __future__ import annotations
@@ -26,40 +30,50 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..terms import KIND_BNODE, KIND_IRI, RDF_LANGSTRING, XSD_STRING
+from ..terms import KIND_BNODE, KIND_IRI, RDF_LANGSTRING, XSD_STRING, sql_ident, sql_string
 
 
-def _json_term(c):
+def _case_kind(c: str, iri: str, bnode: str, literal: str) -> str:
+    """SQL text choosing by the term kind of column ``c``."""
+    return (
+        f"CASE WHEN {c}.kind = {KIND_IRI} THEN {iri} "
+        f"WHEN {c}.kind = {KIND_BNODE} THEN {bnode} ELSE {literal} END"
+    )
+
+
+def _typed(c: str) -> str:
+    """``c`` is a literal whose datatype is written out."""
+    return f"{c}.dt IS NOT NULL AND {c}.dt != {sql_string(XSD_STRING)}"
+
+
+def _replace_all(s: str, pairs) -> str:
+    """SQL text: ``s`` with each (regex, replacement) of ``pairs``
+    applied in order."""
+    for a, b in pairs:
+        s = f"regexp_replace({s}, {sql_string(a)}, {sql_string(b)})"
+    return s
+
+
+def _json_object(c: str) -> str:
     """W3C JSON term object: {"type","value","datatype"?,"xml:lang"?}.
     One uniform struct shape; to_json drops NULL fields."""
-    typ = (
-        F.when(c["kind"] == KIND_IRI, "uri")
-        .when(c["kind"] == KIND_BNODE, "bnode")
-        .otherwise("literal")
+    typ = _case_kind(c, "'uri'", "'bnode'", "'literal'")
+    plain = f"{sql_string(XSD_STRING)}, {sql_string(RDF_LANGSTRING)}"
+    dt = (
+        f"CASE WHEN {c}.kind != {KIND_IRI} AND {c}.kind != {KIND_BNODE} "
+        f"AND NOT ({c}.dt IN ({plain})) THEN {c}.dt END"
     )
-    dt = F.when(
-        (c["kind"] != KIND_IRI)
-        & (c["kind"] != KIND_BNODE)
-        & ~c["dt"].isin(XSD_STRING, RDF_LANGSTRING),
-        c["dt"],
-    )
-    return F.when(
-        c.isNotNull(),
-        F.struct(
-            typ.alias("type"),
-            c["lex"].alias("value"),
-            dt.alias("datatype"),
-            c["lang"].alias("xml:lang"),
-        ),
+    return (
+        f"CASE WHEN {c} IS NOT NULL THEN struct({typ} AS `type`, {c}.lex AS `value`, "
+        f"{dt} AS `datatype`, {c}.lang AS `xml:lang`) END"
     )
 
 
 def to_result_json_df(df: DataFrame) -> DataFrame:
     """One column ``json``: the W3C bindings object per solution row."""
-    obj = F.struct(*[_json_term(F.col(v)).alias(v) for v in df.columns])
-    return df.select(F.to_json(obj).alias("json"))
+    fields = ", ".join(f"{_json_object(sql_ident(v))} AS {sql_ident(v)}" for v in df.columns)
+    return df.selectExpr(f"to_json(struct({fields})) AS json")
 
 
 def to_result_json(df: DataFrame, limit: int | None = None) -> str:
@@ -73,50 +87,36 @@ def to_result_json(df: DataFrame, limit: int | None = None) -> str:
     )
 
 
-def _xml_escape(s):
-    # &amp; first, then the rest (text + attribute-value safe)
-    out = F.regexp_replace(s, "&", "&amp;")
-    out = F.regexp_replace(out, "<", "&lt;")
-    out = F.regexp_replace(out, ">", "&gt;")
-    return F.regexp_replace(out, '"', "&quot;")
+# &amp; first, then the rest (text + attribute-value safe)
+_XML_ESCAPES = (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"), ('"', "&quot;"))
+
+
+def _xml_binding(v: str) -> str:
+    c = sql_ident(v)
+    lex = _replace_all(f"{c}.lex", _XML_ESCAPES)
+    literal = (
+        f"CASE WHEN {c}.dt = {sql_string(RDF_LANGSTRING)} THEN "
+        f"concat('<literal xml:lang=\"', {c}.lang, '\">', {lex}, '</literal>') "
+        f"WHEN {_typed(c)} THEN concat('<literal datatype=\"', "
+        f"{_replace_all(f'{c}.dt', _XML_ESCAPES)}, '\">', {lex}, '</literal>') "
+        f"ELSE concat('<literal>', {lex}, '</literal>') END"
+    )
+    term = _case_kind(
+        c,
+        f"concat('<uri>', {lex}, '</uri>')",
+        f"concat('<bnode>', {c}.lex, '</bnode>')",
+        literal,
+    )
+    tag = sql_string(f'<binding name="{v}">')
+    # unbound: binding element omitted
+    return f"CASE WHEN {c} IS NOT NULL THEN concat({tag}, {term}, '</binding>') ELSE '' END"
 
 
 def to_result_xml_df(df: DataFrame) -> DataFrame:
     """One column ``xml``: a ``<result>…</result>`` element per solution
-    row (W3C SPARQL 1.1 Query Results XML Format, distributed form —
-    native Column concat/escape under codegen)."""
-    parts = []
-    for v in df.columns:
-        c = F.col(v)
-        lex = _xml_escape(c["lex"])
-        literal = F.when(
-            c["dt"] == RDF_LANGSTRING,
-            F.concat(
-                F.lit('<literal xml:lang="'), c["lang"], F.lit('">'), lex,
-                F.lit("</literal>"),
-            ),
-        ).when(
-            c["dt"].isNotNull() & (c["dt"] != XSD_STRING),
-            F.concat(
-                F.lit('<literal datatype="'), _xml_escape(c["dt"]), F.lit('">'),
-                lex, F.lit("</literal>"),
-            ),
-        ).otherwise(F.concat(F.lit("<literal>"), lex, F.lit("</literal>")))
-        term = (
-            F.when(c["kind"] == KIND_IRI, F.concat(F.lit("<uri>"), lex, F.lit("</uri>")))
-            .when(c["kind"] == KIND_BNODE, F.concat(F.lit("<bnode>"), c["lex"], F.lit("</bnode>")))
-            .otherwise(literal)
-        )
-        parts.append(
-            F.when(
-                c.isNotNull(),
-                F.concat(
-                    F.lit(f'<binding name="{v}">'), term, F.lit("</binding>")
-                ),
-            ).otherwise(F.lit(""))  # unbound: binding element omitted
-        )
-    row = F.concat(F.lit("<result>"), *parts, F.lit("</result>"))
-    return df.select(row.alias("xml"))
+    row (W3C SPARQL 1.1 Query Results XML Format, distributed form)."""
+    parts = "".join(f"{_xml_binding(v)}, " for v in df.columns)
+    return df.selectExpr(f"concat('<result>', {parts}'</result>') AS xml")
 
 
 XML_NS = "http://www.w3.org/2005/sparql-results#"
@@ -149,43 +149,44 @@ def to_result_csv_df(df: DataFrame) -> DataFrame:
     literals, ``_:label`` for bnodes, empty string for unbound."""
     cols = []
     for v in df.columns:
-        c = F.col(v)
-        s = F.when(c["kind"] == KIND_BNODE, F.concat(F.lit("_:"), c["lex"])).otherwise(
-            c["lex"]
-        )
-        cols.append(F.coalesce(s, F.lit("")).alias(v))
-    return df.select(*cols)
+        c = sql_ident(v)
+        s = f"CASE WHEN {c}.kind = {KIND_BNODE} THEN concat('_:', {c}.lex) ELSE {c}.lex END"
+        cols.append(f"coalesce({s}, '') AS {c}")
+    return df.selectExpr(*cols)
 
 
-def _tsv_escape(s):
-    # TSV term syntax escapes per N-Triples string rules
-    out = F.regexp_replace(s, r"\\", r"\\\\")
-    out = F.regexp_replace(out, "\t", r"\\t")
-    out = F.regexp_replace(out, "\n", r"\\n")
-    out = F.regexp_replace(out, "\r", r"\\r")
-    return F.regexp_replace(out, '"', r'\\"')
+# N-Triples string escapes (Java regex and replacement text)
+_NT_ESCAPES = (
+    (r"\\", r"\\\\"), ("\t", r"\\t"), ("\n", r"\\n"), ("\r", r"\\r"), ('"', r'\\"'),
+)
+
+
+def ntriples_literal_sql(c: str) -> str:
+    """SQL text: the literal term column ``c`` in N-Triples syntax
+    (``"lex"``, ``"lex"@lang`` or ``"lex"^^<dt>``)."""
+    lit = f"concat('\"', {_replace_all(f'{c}.lex', _NT_ESCAPES)}, '\"')"
+    return (
+        f"CASE WHEN {c}.dt = {sql_string(RDF_LANGSTRING)} THEN concat({lit}, '@', {c}.lang) "
+        f"WHEN {_typed(c)} THEN concat({lit}, '^^<', {c}.dt, '>') ELSE {lit} END"
+    )
+
+
+def ntriples_term_sql(c: str, iri: str | None = None, literal: str | None = None) -> str:
+    """SQL text: the term column ``c`` in N-Triples syntax (``<iri>``,
+    ``_:label`` or ``ntriples_literal_sql``), NULL when unbound; ``iri``
+    and ``literal`` replace the spelling of those kinds."""
+    return _case_kind(
+        c,
+        iri or f"concat('<', {c}.lex, '>')",
+        f"concat('_:', {c}.lex)",
+        literal or ntriples_literal_sql(c),
+    )
 
 
 def to_result_tsv_df(df: DataFrame) -> DataFrame:
-    """Full TSV term syntax per column (lossless; unbound -> empty)."""
-    cols = []
-    for v in df.columns:
-        c = F.col(v)
-        lit = F.concat(F.lit('"'), _tsv_escape(c["lex"]), F.lit('"'))
-        lit = (
-            F.when(
-                c["dt"] == RDF_LANGSTRING, F.concat(lit, F.lit("@"), c["lang"])
-            )
-            .when(
-                c["dt"].isNotNull() & (c["dt"] != XSD_STRING),
-                F.concat(lit, F.lit("^^<"), c["dt"], F.lit(">")),
-            )
-            .otherwise(lit)
-        )
-        s = (
-            F.when(c["kind"] == KIND_IRI, F.concat(F.lit("<"), c["lex"], F.lit(">")))
-            .when(c["kind"] == KIND_BNODE, F.concat(F.lit("_:"), c["lex"]))
-            .otherwise(lit)
-        )
-        cols.append(F.coalesce(s, F.lit("")).alias(f"?{v}"))
-    return df.select(*cols)
+    """Full TSV term syntax (the N-Triples spelling) per column
+    (lossless; unbound -> empty)."""
+    return df.selectExpr(
+        *[f"coalesce({ntriples_term_sql(sql_ident(v))}, '') AS {sql_ident('?' + v)}"
+          for v in df.columns]
+    )

@@ -39,6 +39,8 @@ from ..terms import (
     XSD_DOUBLE,
     XSD_INTEGER,
     XSD_STRING,
+    sql_ident,
+    sql_string,
 )
 from ..sparql.tokenizer import Tok, tokenize
 
@@ -819,39 +821,22 @@ def to_ntriples_df(df: DataFrame, quads: bool = False) -> DataFrame:
     result writes with ``df.write.text`` or streams to any text sink.
     Rows in named graphs are serialized with their graph label when
     ``quads=True`` and FLATTENED into the default graph otherwise."""
-    from .results import _tsv_escape  # N-Triples string escaping rules
-
-    def term(c):
-        lit = F.concat(F.lit('"'), _tsv_escape(c["lex"]), F.lit('"'))
-        lit = (
-            F.when(c["dt"] == RDF_LANGSTRING, F.concat(lit, F.lit("@"), c["lang"]))
-            .when(
-                c["dt"].isNotNull() & (c["dt"] != XSD_STRING),
-                F.concat(lit, F.lit("^^<"), c["dt"], F.lit(">")),
-            )
-            .otherwise(lit)
-        )
-        return (
-            F.when(c["kind"] == KIND_IRI, F.concat(F.lit("<"), c["lex"], F.lit(">")))
-            .when(c["kind"] == KIND_BNODE, F.concat(F.lit("_:"), c["lex"]))
-            .otherwise(lit)
-        )
+    from .results import ntriples_term_sql
 
     parts = [
-        term(F.col("subject")),
-        F.lit(" "),
-        term(F.col("predicate")),
-        F.lit(" "),
-        term(F.col("object")),
+        ntriples_term_sql("subject"),
+        "' '",
+        ntriples_term_sql("predicate"),
+        "' '",
+        ntriples_term_sql("object"),
     ]
     if quads:
-        g = F.col("graph")
-        gpart = F.when(g.isNotNull(), F.concat(F.lit(" "), term(g))).otherwise(
-            F.lit("")
+        parts.append(
+            f"CASE WHEN graph IS NOT NULL THEN concat(' ', {ntriples_term_sql('graph')}) "
+            "ELSE '' END"
         )
-        parts.append(gpart)
-    parts.append(F.lit(" ."))
-    return df.select(F.concat(*parts).alias("line"))
+    parts.append("' .'")
+    return df.selectExpr(f"concat({', '.join(parts)}) AS line")
 
 
 # Turtle literal abbreviations (Turtle spec §2.5.2): canonical lexical
@@ -867,47 +852,34 @@ _TTL_ABBREV = {
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
-def _ttl_term(c, prefixes: dict | None = None):
-    """Turtle term serialization: prefix-compressed IRIs (longest
-    declared prefix wins), ``a`` handled by the caller, canonical
-    numeric/boolean literals bare, everything else N-Triples form."""
-    from .results import _tsv_escape
+def _ttl_term(name: str, prefixes: dict | None = None) -> str:
+    """Turtle term serialization of term column ``name``, as SQL text:
+    prefix-compressed IRIs (longest declared prefix wins), ``a``
+    handled by the caller, canonical numeric/boolean literals bare,
+    everything else N-Triples form."""
+    from .results import ntriples_literal_sql, ntriples_term_sql
 
-    iri = F.concat(F.lit("<"), c["lex"], F.lit(">"))
-    if prefixes:
-        # Build inner-to-outer: each iteration's F.when wraps the
-        # previous expression, so the LAST-added when is checked first.
-        # Iterate shortest namespace first so the LONGEST namespace ends
-        # up outermost and nested namespaces compress with the most
-        # specific prefix (the longest-first loop had this inverted;
-        # ADVICE r5).
-        for pfx, ns in sorted(prefixes.items(), key=lambda kv: len(kv[1])):
-            local = F.substring(c["lex"], len(ns) + 1, 1_000_000)
-            iri = F.when(
-                c["lex"].startswith(ns)
-                # PN_LOCAL approximation: word chars only — else full form
-                & local.rlike(r"^[A-Za-z0-9_.\-]*$")
-                & ~local.contains("."),
-                F.concat(F.lit(f"{pfx}:"), local),
-            ).otherwise(iri)
-    lit = F.concat(F.lit('"'), _tsv_escape(c["lex"]), F.lit('"'))
-    lit = (
-        F.when(c["dt"] == RDF_LANGSTRING, F.concat(lit, F.lit("@"), c["lang"]))
-        .when(
-            c["dt"].isNotNull() & (c["dt"] != XSD_STRING),
-            F.concat(lit, F.lit("^^<"), c["dt"], F.lit(">")),
+    c = sql_ident(name)
+    iri = f"concat('<', {c}.lex, '>')"
+    # Build inner-to-outer: each iteration's CASE wraps the previous
+    # expression, so the LAST-added test is checked first. Iterate
+    # shortest namespace first so the LONGEST namespace ends up
+    # outermost and nested namespaces compress with the most specific
+    # prefix (the longest-first loop had this inverted; ADVICE r5).
+    # PN_LOCAL approximation: word chars only — else full form
+    word = sql_string(r"^[A-Za-z0-9_.\-]*$")
+    for pfx, ns in sorted((prefixes or {}).items(), key=lambda kv: len(kv[1])):
+        local = f"substring({c}.lex, {len(ns) + 1}, 1000000)"
+        iri = (
+            f"CASE WHEN startswith({c}.lex, {sql_string(ns)}) AND {local} RLIKE {word} "
+            f"AND NOT contains({local}, '.') THEN concat({sql_string(pfx + ':')}, {local}) "
+            f"ELSE {iri} END"
         )
-        .otherwise(lit)
-    )
+    lit = ntriples_literal_sql(c)
     for dt, pat in _TTL_ABBREV.items():
-        lit = F.when((c["dt"] == dt) & c["lex"].rlike(f"^(?:{pat})$"), c["lex"]).otherwise(
-            lit
-        )
-    return (
-        F.when(c["kind"] == KIND_IRI, iri)
-        .when(c["kind"] == KIND_BNODE, F.concat(F.lit("_:"), c["lex"]))
-        .otherwise(lit)
-    )
+        bare = f"{c}.dt = {sql_string(dt)} AND {c}.lex RLIKE {sql_string(f'^(?:{pat})$')}"
+        lit = f"CASE WHEN {bare} THEN {c}.lex ELSE {lit} END"
+    return ntriples_term_sql(c, iri=iri, literal=lit)
 
 
 def to_turtle_df(df: DataFrame, prefixes: dict | None = None) -> DataFrame:
@@ -923,14 +895,13 @@ def to_turtle_df(df: DataFrame, prefixes: dict | None = None) -> DataFrame:
     written from this DF contain no ``@prefix`` header — pass
     ``prefixes=None`` for standalone-valid parts, or use
     ``to_turtle`` for the full headered document."""
-    s = _ttl_term(F.col("subject"), prefixes)
-    p = F.when(F.col("predicate")["lex"] == RDF_TYPE, F.lit("a")).otherwise(
-        _ttl_term(F.col("predicate"), prefixes)
+    s = _ttl_term("subject", prefixes)
+    p = (
+        f"CASE WHEN predicate.lex = {sql_string(RDF_TYPE)} THEN 'a' "
+        f"ELSE {_ttl_term('predicate', prefixes)} END"
     )
-    o = _ttl_term(F.col("object"), prefixes)
-    po = df.select(
-        s.alias("__s"), F.concat(p, F.lit(" "), o).alias("__po")
-    )
+    o = _ttl_term("object", prefixes)
+    po = df.selectExpr(f"{s} AS __s", f"concat({p}, ' ', {o}) AS __po")
     grouped = po.groupBy("__s").agg(
         F.array_join(F.array_sort(F.collect_set("__po")), " ;\n    ").alias("__body")
     )

@@ -19,6 +19,19 @@ class Tok:
     pos: int
 
 
+# Name characters, SPARQL 1.1 grammar [164]-[166] and [168] (regex
+# character-class bodies)
+PN_CHARS_BASE = (
+    r"A-Za-z\u00C0-\u00D6\u00D8-\u00F6\u00F8-\u02FF\u0370-\u037D\u037F-\u1FFF"
+    r"\u200C-\u200D\u2070-\u218F\u2C00-\u2FEF\u3001-\uD7FF\uF900-\uFDCF\uFDF0-\uFFFD"
+    r"\U00010000-\U000EFFFF"
+)
+PN_CHARS_U = PN_CHARS_BASE + "_"
+_NAME_TAIL = PN_CHARS_U + r"0-9\u00B7\u0300-\u036F\u203F-\u2040"  # VARNAME after the first
+PN_CHARS = _NAME_TAIL + r"\-"
+VARNAME = f"[{PN_CHARS_U}0-9][{_NAME_TAIL}]*"
+_PLX = r"%[0-9A-Fa-f]{2}|\\[_~.\-!$&'()*+,;=/?#@%]"
+
 _TOKEN_RES = [
     ("WS", re.compile(r"[ \t\r\n]+")),
     ("COMMENT", re.compile(r"#[^\n]*")),
@@ -29,18 +42,18 @@ _TOKEN_RES = [
         r'|"((?:[^"\\\n]|\\.)*)"'
         r"|'((?:[^'\\\n]|\\.)*)'"
     )),
-    ("BLANK", re.compile(r"_:([A-Za-z0-9_][A-Za-z0-9_.-]*)")),
-    ("VAR", re.compile(r"[?$]([A-Za-z0-9_]+)")),
+    ("BLANK", re.compile(f"_:([{PN_CHARS_U}0-9](?:[{PN_CHARS}.]*[{PN_CHARS}])?)")),
+    ("VAR", re.compile(f"[?$]({VARNAME})")),
     ("LANGTAG", re.compile(r"@([A-Za-z]+(?:-[A-Za-z0-9]+)*)")),
     # DECIMAL requires digits after the dot (spec [79]): '1.' must stay
     # NUMBER '1' + OP '.' so Turtle statements ending "... 1 ." parse.
     ("NUMBER", re.compile(r"(?:\d+\.\d+|\.\d+|\d+)(?:[eE][+-]?\d+)?")),
-    # PNAME: optional prefix part, ':', optional local part.  Local names may
-    # contain dots but not end with one (spec PN_LOCAL).
+    # PNAME: optional prefix part, ':', optional local part. Both may
+    # contain dots but not end with one (spec PN_PREFIX, PN_LOCAL), so
+    # "ex:o." is the name "ex:o" and a statement dot.
     ("PNAME", re.compile(
-        r"([A-Za-z_][A-Za-z0-9_.-]*)?:"
-        r"((?:[A-Za-z0-9_]|%[0-9A-Fa-f]{2}|\\[_~.\-!$&'()*+,;=/?#@%])"
-        r"(?:[A-Za-z0-9_.\-]|%[0-9A-Fa-f]{2}|\\[_~.\-!$&'()*+,;=/?#@%])*)?"
+        f"([{PN_CHARS_U}](?:[{PN_CHARS}.]*[{PN_CHARS}])?)?:"
+        f"((?:[{PN_CHARS_U}0-9]|{_PLX})(?:(?:[{PN_CHARS}.]|{_PLX})*(?:[{PN_CHARS}]|{_PLX}))?)?"
     )),
     ("KEYWORD", re.compile(r"[A-Za-z_][A-Za-z0-9_]*")),
     ("OP", re.compile(r"\^\^|&&|\|\||!=|<=|>=|[{}()\[\];,.=<>!+\-*/|^?@]")),

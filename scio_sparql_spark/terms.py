@@ -162,14 +162,13 @@ class Term:
     def as_tuple(self) -> tuple:
         return (self.kind, self.lex, self.dt, self.lang)
 
+    def sql(self) -> str:
+        """Ground term as term-struct Spark SQL text."""
+        return term_sql(self.kind, sql_string(self.lex), self.dt, self.lang)
+
     def to_column(self) -> Column:
         """Ground term as a literal term-struct Column."""
-        return F.struct(
-            F.lit(self.kind).cast("tinyint").alias("kind"),
-            F.lit(self.lex).alias("lex"),
-            F.lit(self.dt).cast("string").alias("dt"),
-            F.lit(self.lang).cast("string").alias("lang"),
-        )
+        return F.expr(self.sql())
 
     def n3(self) -> str:
         if self.kind == KIND_IRI:
@@ -187,9 +186,13 @@ TRUE = Term.boolean(True)
 FALSE = Term.boolean(False)
 
 
+# The unbound marker as Spark SQL text: a NULL term struct.
+NULL_TERM_SQL = f"CAST(NULL AS {TERM_TYPE.simpleString()})"
+
+
 def null_term() -> Column:
     """The unbound marker: a NULL term struct."""
-    return F.lit(None).cast(TERM_TYPE)
+    return F.expr(NULL_TERM_SQL)
 
 
 def optimizer_barrier(col: Column) -> Column:

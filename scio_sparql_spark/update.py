@@ -45,14 +45,17 @@ from .sparql.update import (
     parse_update,
 )
 from .terms import (
+    KIND_BNODE,
     KIND_IRI,
     KIND_LITERAL,
+    NULL_TERM_SQL,
     QUADS_SCHEMA,
     TERM_TYPE,
     Term,
     arrow_terms_df,
-    bnode_term,
-    null_term,
+    sql_ident,
+    sql_string,
+    term_sql,
 )
 
 _COLS = ("subject", "predicate", "object", "graph")
@@ -155,12 +158,10 @@ def _apply(cp: CheckpointScope, cur: DataFrame, op) -> DataFrame:
 # --- store algebra -----------------------------------------------------------
 
 
-def _quad_eq(a: str, b: str):
-    cond = None
-    for c in _COLS:
-        e = F.col(f"{a}.{c}").eqNullSafe(F.col(f"{b}.{c}"))
-        cond = e if cond is None else cond & e
-    return cond
+def _quad_eq(a: str, b: str, cols=_COLS):
+    """Null-safe equality of the ``cols`` of the DataFrames aliased
+    ``a`` and ``b``, as one SQL expression."""
+    return F.expr(" AND ".join(f"{a}.{c} <=> {b}.{c}" for c in cols))
 
 
 def _insert(
@@ -215,19 +216,15 @@ def _delete(cur: DataFrame, dels: DataFrame) -> DataFrame:
     """
     d = dels
     if "__any_graph" not in d.columns:
-        d = d.withColumn("__any_graph", F.lit(False))
+        d = d.selectExpr("*", "false AS __any_graph")
     # the dels plan fans into two branches; every caller builds it from
     # a ground LocalRelation or checkpointed solutions, so it is cheap
     # to re-evaluate per branch
     d = d.dropDuplicates()
-    anyg = d.filter(F.col("__any_graph")).select("subject", "predicate", "object")
-    exact = d.filter(~F.col("__any_graph")).select(*_COLS)
-
-    spo = None
-    for c in ("subject", "predicate", "object"):
-        e = F.col(f"c.{c}").eqNullSafe(F.col(f"d.{c}"))
-        spo = e if spo is None else spo & e
-    out = cur.alias("c").join(anyg.alias("d"), spo, "left_anti")
+    spo = ("subject", "predicate", "object")
+    anyg = d.filter("__any_graph").select(*spo)
+    exact = d.filter("NOT __any_graph").select(*_COLS)
+    out = cur.alias("c").join(anyg.alias("d"), _quad_eq("c", "d", spo), "left_anti")
     out = out.alias("c").join(exact.alias("d"), _quad_eq("c", "d"), "left_anti")
     return out.select(*_COLS)
 
@@ -291,51 +288,39 @@ def _instantiate(sols: DataFrame, templates, with_g) -> DataFrame:
         if is_bnode_var(v)
     }
     if bnode_labels:
-        sols = sols.withColumn("__row_id", F.monotonically_increasing_id())
+        sols = sols.selectExpr("*", "monotonically_increasing_id() AS __row_id")
+    bound = set(sols.columns)
+    default_g = with_g.sql() if with_g is not None else NULL_TERM_SQL
     parts = []
     for qp in templates:
         cols = []
         for name, val in zip(_COLS, (qp.s, qp.p, qp.o, qp.g)):
             if name == "graph" and val is None:
-                c = (
-                    with_g.to_column()
-                    if with_g is not None
-                    else F.lit(None).cast(TERM_TYPE)
-                )
+                c = default_g
             elif isinstance(val, A.Var) and val.name in bnode_labels:
-                c = bnode_term(
-                    F.concat_ws(
-                        "_",
-                        F.lit("genid"),
-                        F.lit(val.name.lstrip("_")),  # b_<label> or b<N>
-                        F.col("__row_id").cast("string"),
-                    )
+                label = sql_string(val.name.lstrip("_"))  # b_<label> or b<N>
+                c = term_sql(
+                    KIND_BNODE,
+                    f"concat_ws('_', 'genid', {label}, CAST(__row_id AS STRING))",
                 )
             elif isinstance(val, A.Var):
-                c = F.col(val.name) if val.name in sols.columns else null_term()
+                c = sql_ident(val.name) if val.name in bound else NULL_TERM_SQL
             else:
-                c = val.to_column()
-            cols.append(c.alias(name))
-        cols.append(
-            F.lit(qp.g is None and with_g is None).alias("__any_graph")
-        )
-        parts.append(sols.select(*cols))
+                c = val.sql()
+            cols.append(f"{c} AS {name}")
+        any_graph = qp.g is None and with_g is None
+        parts.append(sols.selectExpr(*cols, f"{any_graph} AS __any_graph"))
     if not parts:  # CONSTRUCT {}: an empty template yields no quads
-        cols = [null_term().alias(c) for c in _COLS]
-        return sols.select(*cols, F.lit(False).alias("__any_graph")).limit(0)
+        cols = [f"{NULL_TERM_SQL} AS {c}" for c in _COLS]
+        return sols.selectExpr(*cols, "false AS __any_graph").limit(0)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    s, p, o, g = (F.col(c) for c in _COLS)
-    valid = (
-        s.isNotNull()
-        & (s["kind"] != KIND_LITERAL)
-        & p.isNotNull()
-        & (p["kind"] == KIND_IRI)
-        & o.isNotNull()
-        & (g.isNull() | (g["kind"] == KIND_IRI))
+    return out.filter(
+        f"subject IS NOT NULL AND subject.kind != {KIND_LITERAL} "
+        f"AND predicate IS NOT NULL AND predicate.kind = {KIND_IRI} "
+        f"AND object IS NOT NULL AND (graph IS NULL OR graph.kind = {KIND_IRI})"
     )
-    return out.filter(valid)
 
 
 def _ground_df(cur: DataFrame, quads) -> DataFrame:

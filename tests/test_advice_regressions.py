@@ -99,6 +99,17 @@ def test_turtle_integer_before_statement_dot(spark):
     assert quads[0][2].lex == "1.5"
 
 
+@pytest.mark.parametrize(
+    "obj, lex",
+    [(":o.", "urn:t:o"), ("_:b.", "b"), (":o.b .", "urn:t:o.b"), ("_:b.c .", "b.c")],
+)
+def test_turtle_name_before_statement_dot(obj, lex):
+    from scio_sparql_spark import parse_turtle
+
+    quads = parse_turtle(f"@prefix : <urn:t:> .\n:a :v {obj}")
+    assert [q[2].lex for q in quads] == [lex]
+
+
 def test_sparql_number_before_block_dot(spark):
     q = "PREFIX : <urn:o:> SELECT ?x WHERE { ?x :p 1. :a :p ?y . }"
     rows = run_sparql(spark, ORD_TTL, q)

@@ -19,7 +19,10 @@ from scio_sparql_spark import (
     to_result_json,
     to_result_json_df,
     to_result_tsv_df,
+    to_result_xml_df,
 )
+
+from .helpers import run_sparql, s
 
 TTL = """
 @prefix : <urn:r:> .
@@ -130,3 +133,68 @@ def test_result_xml_escaping(spark):
     df = execute_sparql(quads, "PREFIX : <urn:r:> SELECT ?n WHERE { ?d :name ?n }")
     xml = to_result_xml_df(df).collect()[0]["xml"]
     assert "&lt;b&gt;" in xml and "&amp;" in xml and "&quot;q&quot;" in xml
+
+
+def _all_formats(df):
+    """Each W3C serialization of ``df``, collected."""
+    return {
+        "json": json.loads(to_result_json(df))["results"]["bindings"],
+        "xml": [r["xml"] for r in to_result_xml_df(df).collect()],
+        "csv": [r.asDict() for r in to_result_csv_df(df).collect()],
+        "tsv": [r.asDict() for r in to_result_tsv_df(df).collect()],
+    }
+
+
+def test_serializers_read_column_names_literally(spark):
+    """A column name is an identifier, never a path: ``a.b`` is not
+    field ``b`` of column ``a``, and a backtick needs no escaping by the
+    caller."""
+    df = _solutions(spark).select("s", "name").toDF("a.b", "x`y")
+    out = _all_formats(df)
+    alice = next(b for b in out["json"] if b["x`y"]["value"] == "Alice")
+    assert alice["a.b"] == {"type": "uri", "value": "urn:r:alice"}
+    assert any(
+        '<binding name="a.b"><uri>urn:r:alice</uri></binding>'
+        '<binding name="x`y"><literal>Alice</literal></binding>' in x
+        for x in out["xml"]
+    )
+    assert {"a.b": "urn:r:alice", "x`y": "Alice"} in out["csv"]
+    assert {"?a.b": "<urn:r:alice>", "?x`y": '"Alice"'} in out["tsv"]
+
+
+def test_non_ascii_names_parse(spark):
+    """SPARQL names take the grammar's PN_CHARS_BASE letters, not only
+    ASCII: variables, blank node labels and prefixed names."""
+    ttl = '@prefix ex: <urn:é:> . _:bé ex:café "v" . ex:naïve ex:café "w" .'
+    q = "PREFIX ex: <urn:é:> SELECT ?café WHERE { _:bé ex:café ?café }"
+    assert sorted(r["café"] for r in run_sparql(spark, ttl, q)) == [s("v"), s("w")]
+    q = "PREFIX ex: <urn:é:> SELECT ?o WHERE { ex:naïve ex:café ?o }"
+    assert run_sparql(spark, ttl, q) == [{"o": s("w")}]
+
+
+def test_non_ascii_variable_serializes(spark):
+    quads = quads_df_from_list(spark, parse_turtle("<urn:a> <urn:b> <urn:c> ."))
+    df = execute_sparql(quads, 'SELECT ("é"@fr AS ?café) {}')
+    assert json.loads(to_result_json(df))["head"]["vars"] == ["café"]
+    assert _all_formats(df) == {
+        "json": [{"café": {"type": "literal", "value": "é", "xml:lang": "fr"}}],
+        "xml": [
+            '<result><binding name="café"><literal xml:lang="fr">é</literal>'
+            "</binding></result>"
+        ],
+        "csv": [{"café": "é"}],
+        "tsv": [{"?café": '"é"@fr'}],
+    }
+
+
+def test_zero_variable_results_keep_one_empty_solution(spark):
+    quads = quads_df_from_list(spark, parse_turtle("<urn:a> <urn:b> <urn:c> ."))
+    none = execute_sparql(quads, "SELECT * {}")
+    assert none.columns == []
+    assert _all_formats(none) == {
+        "json": [{}], "xml": ["<result></result>"], "csv": [{}], "tsv": [{}],
+    }
+    unbound = execute_sparql(quads, "SELECT ?x {}")
+    assert _all_formats(unbound) == {
+        "json": [{}], "xml": ["<result></result>"], "csv": [{"x": ""}], "tsv": [{"?x": ""}],
+    }

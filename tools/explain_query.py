@@ -4,7 +4,10 @@ Usage: python tools/explain_query.py <out_dir> <out_suffix> <query> [query ...]
 Writes <out_dir>/<query>_<out_suffix>.txt, creating <out_dir> if
 needed, and next to it <query>_<out_suffix>.sizes.json with the
 character lengths of the analyzed and optimized logical plans, which
-show expression-tree growth. $SPARK_GRAFT_SF_DIR picks the
+show expression-tree growth, and ``jvm_calls``, the py4j round trips
+of building the query's DataFrame (``scio_sparql_spark.roundtrips``;
+the query is built twice and the second build counted, so a bridge
+the session memoizes on the first is left out). $SPARK_GRAFT_SF_DIR picks the
 data dir (default /root/testdata/sf0.1).
 """
 import json
@@ -16,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from scio_sparql_spark import workload  # noqa: E402
+from scio_sparql_spark.roundtrips import round_trips  # noqa: E402
 
 
 def main():
@@ -37,12 +41,15 @@ def main():
     qs = workload.build_queries()
     os.makedirs(outdir, exist_ok=True)
     for name in names:
-        df = qs[name](spark, sf_dir)
+        qs[name](spark, sf_dir)
+        with round_trips() as calls:
+            df = qs[name](spark, sf_dir)
         qe = df._jdf.queryExecution()
         plan = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
         sizes = {
             "analyzed_chars": len(qe.analyzed().toString()),
             "optimized_chars": len(qe.optimizedPlan().toString()),
+            "jvm_calls": calls.count,
         }
         out = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(out, "w") as f:
@@ -51,7 +58,7 @@ def main():
             json.dump(sizes, f)
         print(
             f"wrote {out} ({len(plan)} chars; analyzed {sizes['analyzed_chars']}, "
-            f"optimized {sizes['optimized_chars']})"
+            f"optimized {sizes['optimized_chars']}; {calls.count} jvm calls)"
         )
 
 
